@@ -30,6 +30,13 @@ try:
 except Exception:  # noqa: BLE001 - a broken shim must not break the package;
     pass  # the streaming "auto" gate then falls back to applyInPandasWithState
 
+# Python workers that unpickle a Loki source or an operator's function import
+# this package, so every later call in that reused worker skips the ~136 ms
+# pyspark.zip directory re-read (see _zipcache; a no-op on CPython >= 3.12).
+from datafusion_loki_spark._zipcache import install as _install_zipcache
+
+_install_zipcache()
+
 
 def register_loki(spark) -> None:
     """Register the ``loki`` data source format on a SparkSession.
@@ -296,11 +303,14 @@ def loki_sql(
     # of analysis (spark.sql resolves views eagerly, inlining the scan into
     # the returned plan), then restore the session catalog: a pre-existing
     # temp view of that name is re-registered, an absent one stays absent —
-    # loki_sql leaves no view-binding side effect.
+    # loki_sql leaves no view-binding side effect. tableExists/getTable
+    # resolve in the session catalog without a Spark job (listTables()
+    # would run three); a temp view shadows a same-named table, so
+    # getTable reports TEMPORARY whenever one is bound.
     prior = None
-    if any(
-        t.name.lower() == spec.table.lower() and t.tableType == "TEMPORARY"
-        for t in spark.catalog.listTables()
+    if (
+        spark.catalog.tableExists(spec.table)
+        and spark.catalog.getTable(spec.table).tableType == "TEMPORARY"
     ):
         prior = spark.table(spec.table)
     df.createOrReplaceTempView(spec.table)

@@ -78,10 +78,17 @@ def _est_scan_tasks(path: str) -> "int | None":
     the at-scale deployment) or a dir with no visible parquet files.
     The caller must treat None as FAIL CLOSED (skip the fan-out): the
     r15 shape returned 1 here, which would have round-robin-shuffled
-    every payload byte of a full-corpus remote scan (r16 worklist #2)."""
+    every payload byte of a full-corpus remote scan (r16 worklist #2).
+    A ``file://`` URI is local, so it is unwrapped to its path first."""
     import glob
     import re
+    from urllib.parse import unquote, urlparse
 
+    if path.lower().startswith("file:"):
+        url = urlparse(path)
+        if url.netloc not in ("", "localhost") or not url.path:
+            return None
+        path = unquote(url.path)
     # scheme-prefixed URI: not a local path, os.stat would lie
     if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path):
         return None

@@ -1448,7 +1448,8 @@ def test_scan_fanout_shape(spark, sf_dir, monkeypatch):
 
 def test_est_scan_tasks_split_math(tmp_path):
     # one task per started 128 MB of each file, minimum one per file;
-    # None ("can't tell") on anything the local FS cannot list
+    # None ("can't tell") on anything the local FS cannot list; a
+    # file:// URI names the local FS, so it estimates like the bare path
     from datafusion_loki_spark.catalog import _est_scan_tasks
 
     a = tmp_path / "a.parquet"
@@ -1461,6 +1462,13 @@ def test_est_scan_tasks_split_math(tmp_path):
     assert _est_scan_tasks("s3://bucket/corpus/documents") is None
     assert _est_scan_tasks("hdfs://nn:8020/warehouse/docs") is None
     assert _est_scan_tasks("abfss://c@acct.dfs.example.net/docs") is None
+    assert _est_scan_tasks(tmp_path.as_uri()) == 2
+    assert _est_scan_tasks(f"file:{tmp_path}") == 2
+    assert _est_scan_tasks(f"file://localhost{tmp_path}") == 2
+    assert _est_scan_tasks(a.as_uri()) == 1
+    assert _est_scan_tasks((tmp_path / "missing").as_uri()) is None
+    assert _est_scan_tasks(f"file://otherhost{tmp_path}") is None
+    assert _est_scan_tasks("file://") is None
 
 
 def test_scan_fanout_fails_closed_on_unlistable_path(spark, sf_dir, monkeypatch):

@@ -450,6 +450,27 @@ def test_loki_sql_restores_prior_view(spark, emulator):
     spark.catalog.dropTempView("logs")
 
 
+def test_loki_sql_select_build_starts_no_spark_job(spark, emulator):
+    # building the statement (scan bind, prior-view probe, analysis,
+    # restore) is catalog work only: listTables() would run 3 jobs here
+    sc = spark.sparkContext
+    group = f"loki_sql_build_{time.time_ns()}"
+    sc.setJobGroup(group, "loki_sql build")
+    try:
+        loki_sql(
+            spark,
+            "SELECT line FROM logs WHERE labels['app'] = 'web'",
+            emulator.endpoint,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the listener bus: drain it first so a
+    # job that did start cannot be missed
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_loki_sql_rejects_qualified_table():
     import pytest as _pytest
 
