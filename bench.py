@@ -369,7 +369,7 @@ def _isolated_pass(names: list[str], sf_dir: str) -> dict[str, float]:
 
 def _shared_pass(
     names: list[str], sf_dir: str
-) -> tuple[dict[str, float], list[list[float]], dict[str, float]]:
+) -> tuple[dict[str, float], list[list[float]], dict[str, float], str]:
     from datafusion_loki_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -412,8 +412,9 @@ def _shared_pass(
     # that degrades mid-suite shows up in the spread instead of
     # silently biasing the denominator
     samples += _calibration_samples(spark, clock0)
+    run_id = spark.sparkContext.applicationId
     spark.stop()
-    return timings, samples, q_end
+    return timings, samples, q_end, run_id
 
 
 def main() -> None:
@@ -435,7 +436,7 @@ def main() -> None:
     else:
         names = [n for n in BENCH_QUERIES if n in registered]
 
-    shared, timeline, q_end = _shared_pass(names, sf_dir)
+    shared, timeline, q_end, run_id = _shared_pass(names, sf_dir)
     total = round(sum(shared.values()), 4)
     import statistics
 
@@ -447,7 +448,9 @@ def main() -> None:
     # stored tail truncated mid-JSON on the embedded tens-of-KB timeline
     # maps and the driver lost all round-over-round per-query comparison.
     # Same timing methodology, same keys otherwise; the sidecar carries
-    # exactly what the line used to embed.
+    # exactly what the line used to embed. Both carry the session's
+    # applicationId as run_id: the sidecar path is fixed, so the next
+    # run overwrites it, and bench_compare merges only a matching one.
     sidecar_name = "bench_timelines.json"
     sidecar_path = os.environ.get(
         "SPARK_GRAFT_BENCH_SIDECAR",
@@ -459,6 +462,7 @@ def main() -> None:
         with open(sidecar_path, "w") as f:
             json.dump(
                 {
+                    "run_id": run_id,
                     "calibration_timeline": timeline,
                     "query_end_times": q_end,
                 },
@@ -476,6 +480,7 @@ def main() -> None:
         "calibration_spread": spread,
         "calibration_samples": secs,
         "timelines_sidecar": sidecar_path,
+        "run_id": run_id,
         "value_per_calib": round(total / calib, 3) if calib else None,
         "methodology": (
             "value: one-JVM suite, warmup at sf0.001 then min-of-2 per "

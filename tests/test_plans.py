@@ -1386,7 +1386,10 @@ def test_decode_ops_scan_speed_no_shuffle(spark, sf_dir):
                  "mm_decode_msadpcm", "mm_decode_tiff_tiled",
                  "mm_decode_tiff_jpeg", "mm_decode_webp_anim",
                  "mm_decode_apng", "mm_decode_au", "mm_decode_pnm",
-                 "mm_resize_pixels", "mm_decode_bmp_rle"):
+                 "mm_resize_pixels", "mm_decode_bmp_rle",
+                 "mm_decode_png_adam7", "mm_decode_jpeg",
+                 "mm_decode_jpeg_progressive", "mm_decode_png_palette",
+                 "mm_decode_png16", "mm_decode_gif", "mm_decode_tiff_pages"):
         plan = _plan(spark, sf_dir, name)
         stripped = _strip_fanout(plan)
         assert "Exchange" not in stripped, f"{name}:\n{plan}"

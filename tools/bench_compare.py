@@ -22,15 +22,20 @@ def _merge_sidecar(d: dict) -> dict:
     """Round 16: bench.py writes the per-sample timelines to a sidecar
     file (the embedded maps made the headline line long enough that the
     driver's stored tail truncated mid-JSON) — fold them back in when
-    the referenced file is still readable; silently degrade to the
-    timeline-less compare otherwise."""
+    the referenced file is still readable AND was written by the same
+    run: every run overwrites the sidecar, so both sides carry the
+    run's applicationId as ``run_id`` and a missing or different token
+    (a newer run's timelines, or a file from before the token) is not
+    merged. Silently degrade to the timeline-less compare otherwise."""
     sc = d.get("timelines_sidecar")
-    if sc and "query_end_times" not in d:
+    if sc and d.get("run_id") and "query_end_times" not in d:
         try:
             with open(sc) as f:
-                d.update(json.load(f))
+                side = json.load(f)
         except (OSError, ValueError):
-            pass
+            return d
+        if side.get("run_id") == d["run_id"]:
+            d.update(side)
     return d
 
 

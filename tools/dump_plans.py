@@ -1,18 +1,40 @@
-"""Regenerate PLANS.md: the formatted physical plan of every headline
-benchmark query at sf0.1 — the at-a-glance evidence that each plan has
-the shape the scale design calls for (broadcasts on dimension joins,
-TakeOrderedAndProject for top-k, PushedFilters at the scan, bounded
-exchange counts, WholeStageCodegen spans over the hot expressions).
+"""Dump formatted physical plans.
 
-Usage: python tools/dump_plans.py   # writes PLANS.md at the repo root
+With no arguments, regenerate PLANS.md: the formatted physical plan of
+every headline benchmark query at sf0.1 — the at-a-glance evidence that
+each plan has the shape the scale design calls for (broadcasts on
+dimension joins, TakeOrderedAndProject for top-k, PushedFilters at the
+scan, bounded exchange counts, WholeStageCodegen spans over the hot
+expressions).
+
+With ``--round``, write one file per query for a before/after plan
+comparison: ``plans/<round>/<query>_<tag>.txt`` for each named query
+(default: all headline BENCH_QUERIES). Dump both sides from fresh
+sessions with the same query order, so the ``#id``s line up.
+
+Usage:
+    python tools/dump_plans.py                              # PLANS.md
+    python tools/dump_plans.py --round <round> before|after [query ...]
+
+Both read $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().rstrip()
 
 
 def main() -> None:
@@ -21,9 +43,29 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
+    args = sys.argv[1:]
+    rnd = None
+    if args[:1] == ["--round"]:
+        if len(args) < 3 or args[2] not in ("before", "after"):
+            raise SystemExit(__doc__)
+        rnd, tag, names = args[1], args[2], args[3:]
+    elif args:
+        raise SystemExit(__doc__)
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="dump_plans")
+    spark = get_spark(app_name=f"dump_plans_{rnd}_{tag}" if rnd else "dump_plans")
     queries = entrymod.queries()
+
+    if rnd:
+        out_dir = os.path.join(ROOT, "plans", rnd)
+        os.makedirs(out_dir, exist_ok=True)
+        for name in names or BENCH_QUERIES:
+            path = os.path.join(out_dir, f"{name}_{tag}.txt")
+            with open(path, "w") as f:
+                f.write(_formatted(queries[name](spark, sf_dir)) + "\n")
+            print("wrote", path)
+        spark.stop()
+        return
 
     out = [
         "# PLANS — headline-query physical plans",
@@ -33,17 +75,11 @@ def main() -> None:
         "`tests/test_plans.py`.",
         "",
     ]
-    import contextlib
-    import io
-
     for name in BENCH_QUERIES:
-        df = queries[name](spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"## {name}\n\n```\n{buf.getvalue().rstrip()}\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+        out.append(
+            f"## {name}\n\n```\n{_formatted(queries[name](spark, sf_dir))}\n```\n"
+        )
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(BENCH_QUERIES)} plans)")
     spark.stop()
