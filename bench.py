@@ -299,14 +299,16 @@ def _min_of_2(fn, spark, sf_dir: str) -> float:
     the entire apparent r06→r07 per-calib drift — so their min needs
     one more sample to be stable.
 
-    Round 16 (r15 VERDICT next-#7): after the timed runs, the query's
-    localCheckpoint blocks are released explicitly — each run builds a
-    FRESH DAG (so nothing here is consumed again), but the dead blocks
-    otherwise pin block-manager memory for the ContextCleaner's ~30 min
-    cadence and the 93-query suite pays the accumulation as late-suite
-    GC drag (round 15 measured the forced-GC alternative at 5-11x
-    single-query stalls and rejected it). The release runs OUTSIDE
-    every timing window; the timing loop itself is unchanged."""
+    Round 16 (r15 VERDICT next-#7): each run's localCheckpoint blocks
+    are released explicitly — each run builds a FRESH DAG (so nothing
+    here is consumed again), but the dead blocks otherwise pin
+    block-manager memory for the ContextCleaner's ~30 min cadence and
+    the 93-query suite pays the accumulation as late-suite GC drag
+    (round 15 measured the forced-GC alternative at 5-11x single-query
+    stalls and rejected it). The release runs after each run's
+    perf_counter read and before the next run's t0, so every run times
+    against a block manager clear of the earlier runs' dead blocks and
+    no release falls inside a timing window."""
     from datafusion_loki_spark.functions.checkpoints import (
         free_checkpoints,
         persistent_rdd_ids,
@@ -320,7 +322,7 @@ def _min_of_2(fn, spark, sf_dir: str) -> float:
         t0 = time.perf_counter()
         fn(spark, sf_dir).count()
         best = min(best, time.perf_counter() - t0)
-    free_checkpoints(spark, persistent_rdd_ids(spark) - pre)
+        free_checkpoints(spark, persistent_rdd_ids(spark) - pre)
     return round(best, 4)
 
 

@@ -329,26 +329,23 @@ def insert_into_loki(df, endpoint: str, **options: str):
     (datafusion-loki/src/insert.rs:26-32,136-140).
 
     Spark's INSERT/save path returns no rows, so the sink alone cannot
-    surface the inserted-row count to SQL; this helper restores the
-    reference's contract by counting the (persisted) frame once and
-    reusing the materialized rows for the write — one scan of the input,
-    not two."""
-    spark = df.sparkSession
-    register_loki(spark)
-    persisted = df.persist()
-    try:
-        count = persisted.count()
-        writer = persisted.write.format("loki").mode("append").option(
-            "endpoint", endpoint
-        )
-        for k, v in options.items():
-            writer = writer.option(k, v)
-        writer.save()
-    finally:
-        persisted.unpersist()
-    from datafusion_loki_spark.sources.schema import INSERT_RESULT_SCHEMA
+    surface the inserted-row count. Like LokiLogInsertExec, this drains
+    the input once: one ``mapInArrow`` job whose tasks push through the
+    sink's kernel (``options``: ``batch_rows``) and yield their pushed-row
+    counts; the result is their sum as a SQL literal (no Python worker)."""
+    import pyarrow as pa
 
-    return spark.createDataFrame([(count,)], INSERT_RESULT_SCHEMA)
+    from datafusion_loki_spark.sources.loki import LokiDataSourceWriter
+
+    writer = LokiDataSourceWriter({"endpoint": endpoint, **options})
+
+    def push(batches):
+        yield pa.record_batch(
+            [pa.array([writer.write(batches).count], pa.int64())], ["count"]
+        )
+
+    count = sum(row[0] for row in df.mapInArrow(push, "count long").collect())
+    return df.sparkSession.sql(f"SELECT CAST({count} AS BIGINT) AS count")
 
 
 def register_loki_endpoint(

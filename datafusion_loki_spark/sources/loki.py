@@ -44,9 +44,9 @@ from datetime import datetime, timezone
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
+    DataSourceStreamArrowWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
@@ -126,11 +126,12 @@ def _ts_us_col(col, tz=None):
     ~1000x in the future (the batch/streaming divergence class the
     shared pager exists to prevent)."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     target = pa.timestamp("us", tz) if tz else pa.timestamp("us")
     if pa.types.is_timestamp(col.type):
         return col.cast(target, safe=False)
-    return pa.compute.divide(col, 1000).cast(pa.int64()).cast(target)
+    return pc.divide(col, 1000).cast(pa.int64()).cast(target)
 
 
 def _page_tables(
@@ -163,6 +164,7 @@ def _page_tables(
     import io
 
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     if end_ns <= start_ns:
@@ -188,13 +190,13 @@ def _page_tables(
             yield table
             return
         ts = _ts_ns_ints(table)
-        max_ts = pa.compute.max(ts).as_py()
-        min_ts = pa.compute.min(ts).as_py()
+        max_ts = pc.max(ts).as_py()
+        min_ts = pc.min(ts).as_py()
         if max_ts == min_ts:
             emit = table  # degenerate full page at one ns: step past
             cur = max_ts + 1
         else:
-            emit = table.filter(pa.compute.less(ts, pa.scalar(max_ts)))
+            emit = table.filter(pc.less(ts, pa.scalar(max_ts)))
             cur = max_ts
         yield emit
         if remaining is not None:
@@ -391,16 +393,58 @@ class LokiDataSourceReader(DataSourceReader):
                 yield self._convert_batch(batch)
 
 
+def push_batches(endpoint: str, batches, batch_rows: int) -> int:
+    """Push Arrow (timestamp, labels, line) batches (positional columns)
+    to Loki, one POST per ``batch_rows`` rows; return the rows pushed
+    (≙ insert.rs:94-113,167-207). The ONE push kernel of the batch writer,
+    the streaming sink and insert_into_loki. Timestamps become ns as
+    int64(µs) * 1000 in Arrow: exact, whatever the host time zone.
+    Consecutive rows with one label set share a stream object (the
+    reference emits one per row, insert.rs:186-206)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    count = 0
+    streams: list[dict] = []
+    pending = 0
+    for batch in batches:
+        cols = batch.columns[:3]
+        if any(col.null_count for col in cols):
+            raise ValueError(
+                "loki writer requires non-null (timestamp, labels, line)"
+            )
+        ts, labels, lines = cols
+        ns = pc.multiply_checked(
+            ts.cast(pa.timestamp("us", ts.type.tz)).cast(pa.int64()), 1000
+        )
+        rows = zip(ns.to_pylist(), labels.to_pylist(), lines.to_pylist())
+        for ns_i, pairs, line in rows:
+            stream_labels = dict(pairs)
+            value = [str(ns_i), line]
+            if streams and streams[-1]["stream"] == stream_labels:
+                streams[-1]["values"].append(value)
+            else:
+                streams.append({"stream": stream_labels, "values": [value]})
+            pending += 1
+            if pending >= batch_rows:
+                loki_client.push(endpoint, streams)
+                streams, pending = [], 0
+        count += batch.num_rows
+    if streams:
+        loki_client.push(endpoint, streams)
+    return count
+
+
 @dataclass
 class LokiCommitMessage(WriterCommitMessage):
-    """Per-task row count — aggregated in commit() to reproduce the
-    reference's single-row `count` result (insert.rs:104-140)."""
+    """Per-task count of the rows the task pushed (≙ the reference's
+    single-row `count` result, insert.rs:104-140)."""
 
     count: int
 
 
-class LokiDataSourceWriter(DataSourceWriter):
-    """Push-sink writer (≙ insert.rs:104-140).
+class LokiDataSourceWriter(DataSourceArrowWriter):
+    """Push-sink writer (≙ insert.rs:104-140): push_batches per task.
 
     Delivery contract: AT-LEAST-ONCE. Pushes are per-task and durable the
     moment the store accepts them (Loki has no transaction), so a task
@@ -417,57 +461,15 @@ class LokiDataSourceWriter(DataSourceWriter):
         self.batch_rows = int(options.get("batch_rows", "4096"))
 
     def write(self, iterator) -> LokiCommitMessage:
-        """Rows → push JSON → POST, one request per buffered batch
-        (≙ LokiLogInsertExec stream drain, insert.rs:94-113,167-207).
-
-        The reference emits one stream object per row (insert.rs:186-206);
-        we group consecutive rows by identical label set into one stream —
-        same data, fewer JSON bytes (allowed: Loki's push contract is
-        per-stream batched values).
-        """
-        count = 0
-        streams: list[dict] = []
-        pending = 0
-
-        def flush():
-            nonlocal streams, pending
-            if streams:
-                loki_client.push(self.endpoint, streams)
-                streams = []
-                pending = 0
-
-        for row in iterator:
-            ts, labels, line = row[0], row[1], row[2]
-            if ts is None or labels is None or line is None:
-                raise ValueError(
-                    "loki writer requires non-null (timestamp, labels, line)"
-                )
-            # naive ts = host-local wall time (TimestampType.fromInternal);
-            # datetime_to_ns inverts that with EXACT integer arithmetic —
-            # the float .timestamp() path wrote a 1 µs-short timestamp
-            # for ~1% of rows, so round-trip reads returned different
-            # timestamps than were written
-            ns = logql.datetime_to_ns(ts)
-            stream_labels = dict(labels)
-            value = [str(ns), line]
-            if streams and streams[-1]["stream"] == stream_labels:
-                streams[-1]["values"].append(value)
-            else:
-                streams.append({"stream": stream_labels, "values": [value]})
-            count += 1
-            pending += 1
-            if pending >= self.batch_rows:
-                flush()
-        flush()
-        return LokiCommitMessage(count=count)
+        return LokiCommitMessage(
+            count=push_batches(self.endpoint, iterator, self.batch_rows)
+        )
 
     def commit(self, messages) -> None:
-        # Per-task pushes are already durable (Loki has no transaction to
-        # finalize), and Spark's INSERT returns no rows (SURVEY.md §7.4.4)
-        # so the per-task counts in `messages` have no driver-side outlet;
-        # the reference's one-row count result (insert.rs:26-32,136-140)
-        # is surfaced by insert_into_loki, which counts the persisted
-        # input frame it writes — one code path for the number.
+        # Pushes are durable per task (Loki has no transaction), and
+        # Spark's INSERT returns no rows (SURVEY.md §7.4.4): the
+        # reference's count result (insert.rs:26-32,136-140) comes from
+        # insert_into_loki, which sums its own push tasks' counts.
         pass
 
     def abort(self, messages) -> None:
@@ -543,10 +545,9 @@ class LokiStreamReader(SimpleDataSourceStreamReader):
         return iter(self._fetch(start["ns"], end["ns"]))
 
 
-class LokiStreamWriter(DataSourceStreamWriter):
-    """Streaming sink: same push protocol as the batch writer, per
-    micro-batch epoch. commit/abort per epoch mirror the batch writer's
-    count aggregation."""
+class LokiStreamWriter(DataSourceStreamArrowWriter):
+    """Streaming sink: the batch writer's push kernel, per micro-batch
+    epoch."""
 
     def __init__(self, options):
         self._batch = LokiDataSourceWriter(options)

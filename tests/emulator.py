@@ -80,6 +80,8 @@ class LokiEmulator:
         # rows: (ns:int, labels:dict[str,str], line:str)
         self.rows: list[tuple[int, dict, str]] = []
         self.queries: list[str] = []
+        # raw body of every push request, in arrival order
+        self.pushes: list[bytes] = []
         # flattened single-value view of each query_range param set, so
         # tests can assert limit/direction/start/end pushdown
         self.params: list[dict] = []
@@ -122,8 +124,10 @@ class LokiEmulator:
             def do_POST(self):
                 if self.path == "/loki/api/v1/push":
                     length = int(self.headers.get("Content-Length", "0"))
-                    payload = json.loads(self.rfile.read(length))
-                    emulator.handle_push(payload)
+                    body = self.rfile.read(length)
+                    with emulator.lock:
+                        emulator.pushes.append(body)
+                    emulator.handle_push(json.loads(body))
                     self.send_response(204)
                     self.end_headers()
                     return

@@ -182,7 +182,7 @@ def test_insert_roundtrip(spark, emulator):
 def test_partition_parallel_write(spark):
     # each Spark partition POSTs independently (≙ the reference's per-batch
     # pushes, insert.rs:106-110, but partition-parallel — the 100 TB path);
-    # counts aggregate across partitions via commit messages
+    # every partition's rows land exactly once
     em = LokiEmulator().start()
     try:
         register_loki(spark)
@@ -458,6 +458,28 @@ def test_insert_into_loki_returns_count_table(spark, emulator):
     assert result.schema == INSERT_RESULT_SCHEMA
     assert result.collect()[0][0] == 3  # Row.count is the tuple method
     assert len(emulator.rows) == before + 3
+
+
+def test_insert_into_loki_passes_batch_rows(spark):
+    # the count is the rows the tasks pushed; `batch_rows` reaches every
+    # task's push kernel: 4 partitions x 10 rows at 4 rows per POST
+    from datafusion_loki_spark import insert_into_loki
+
+    em = LokiEmulator().start()
+    try:
+        df = spark.range(0, 40, 1, 4).selectExpr(
+            "timestamp_seconds(1767286800 + id) AS timestamp",
+            "map('app', 'batched') AS labels",
+            "concat('line ', id) AS line",
+        )
+        result = insert_into_loki(df, em.endpoint, batch_rows="4")
+        assert result.collect()[0][0] == 40
+        assert len(em.pushes) == 4 * 3
+        assert sorted(r[0] for r in em.rows) == [
+            (1767286800 + i) * NS for i in range(40)
+        ]
+    finally:
+        em.stop()
 
 
 def test_line_startswith_endswith_pushdown(loki_df, emulator):

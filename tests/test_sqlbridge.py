@@ -450,25 +450,57 @@ def test_loki_sql_restores_prior_view(spark, emulator):
     spark.catalog.dropTempView("logs")
 
 
-def test_loki_sql_select_build_starts_no_spark_job(spark, emulator):
-    # building the statement (scan bind, prior-view probe, analysis,
-    # restore) is catalog work only: listTables() would run 3 jobs here
+def _job_ids(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the ids
+    of the Spark jobs it started."""
     sc = spark.sparkContext
-    group = f"loki_sql_build_{time.time_ns()}"
-    sc.setJobGroup(group, "loki_sql build")
+    group = f"job_count_{time.time_ns()}"
+    sc.setJobGroup(group, "job count")
     try:
-        loki_sql(
-            spark,
-            "SELECT line FROM logs WHERE labels['app'] = 'web'",
-            emulator.endpoint,
-        )
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     # the status tracker is fed by the listener bus: drain it first so a
     # job that did start cannot be missed
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_loki_sql_select_build_starts_no_spark_job(spark, emulator):
+    # building the statement (scan bind, prior-view probe, analysis,
+    # restore) is catalog work only: listTables() would run 3 jobs here
+    _, jobs = _job_ids(
+        spark,
+        lambda: loki_sql(
+            spark,
+            "SELECT line FROM logs WHERE labels['app'] = 'web'",
+            emulator.endpoint,
+        ),
+    )
+    assert jobs == []
+
+
+def test_loki_sql_insert_is_one_spark_job(spark):
+    # an INSERT drains its input once: one mapInArrow job pushes and
+    # counts (persist + count + save + a parallelized count frame ran 5),
+    # and the count frame is a literal whose read is one single-task job
+    em = LokiEmulator().start()
+    try:
+        insert = (
+            "INSERT INTO logs SELECT timestamp_seconds(1767286800 + id), "
+            "map('app', 'job-count'), concat('row ', id) FROM range(0, 40, 1, 4)"
+        )
+        result, jobs = _job_ids(spark, lambda: loki_sql(spark, insert, em.endpoint))
+        assert len(jobs) == 1
+        assert len(em.rows) == 40
+        table, (job,) = _job_ids(spark, result.toArrow)
+        tracker = spark.sparkContext.statusTracker()
+        stages = tracker.getJobInfo(job).stageIds
+        assert [tracker.getStageInfo(s).numTasks for s in stages] == [1]
+        assert table.column("count").to_pylist() == [40]
+    finally:
+        em.stop()
 
 
 def test_loki_sql_rejects_qualified_table():
