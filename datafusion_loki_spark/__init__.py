@@ -17,19 +17,6 @@ from __future__ import annotations
 
 __version__ = "0.1.0"
 
-# Make google.protobuf importable (real install preferred, vendored
-# pure-Python shim otherwise) BEFORE any SparkSession exists: the
-# transformWithStateInPandas state-server client runs inside Python
-# worker processes, which inherit the environment captured at JVM
-# start — so PYTHONPATH must carry the vendor dir by then. Every entry
-# path (tests, __spark_entry__, bench.py) imports this package first.
-try:
-    from datafusion_loki_spark._vendor import ensure_protobuf as _ensure_protobuf
-
-    _ensure_protobuf()
-except Exception:  # noqa: BLE001 - a broken shim must not break the package;
-    pass  # the streaming "auto" gate then falls back to applyInPandasWithState
-
 # Python workers that unpickle a Loki source or an operator's function import
 # this package, so every later call in that reused worker skips the ~136 ms
 # pyspark.zip directory re-read (see _zipcache; a no-op on CPython >= 3.12).

@@ -239,101 +239,32 @@ def _running_totals_fn(
     )
 
 
-def user_running_totals(events: DataFrame, implementation: str = "auto") -> DataFrame:
-    """Per-user running (n_events, total_value) — the feature-store
-    accumulator shape, on BOTH stateful APIs with identical semantics:
-
-    - ``"tws"``: Spark 4 ``transformWithStateInPandas`` (typed ValueState,
-      explicit processor lifecycle) — the current-generation surface.
-      Runtime NOTE: its state-server protocol requires google.protobuf;
-      deployments without the wheel get the vendored pure-Python shim
-      (``datafusion_loki_spark._vendor``), activated at package import.
-    - ``"compat"``: the same accumulator over ``applyInPandasWithState``
-      (no protobuf dependency) — byte-identical output schema and update
-      semantics, proven equivalent by
-      tests/test_streaming.py::test_running_totals_compat_matches_batch
-      and its checkpoint-restart twin.
-    - ``"auto"`` (default): tws when google.protobuf is importable AND
-      the session's state store is RocksDB (transformWithState needs
-      multiple column families, which HDFSBackedStateStoreProvider —
-      the default — rejects at query start), else compat — so the
-      operator runs everywhere.
+def user_running_totals(events: DataFrame) -> DataFrame:
+    """Per-user running (n_events, total_value) over
+    ``applyInPandasWithState`` — the feature-store accumulator shape.
 
     Emits the refreshed running totals for every user a micro-batch
-    touched (update semantics — the feature-store accumulator shape).
+    touched (update semantics), pinned against the batch aggregate by
+    tests/test_streaming.py::test_running_totals_compat_matches_batch
+    and its checkpoint-restart twin.
 
-    100 TB posture (both paths): state is ONE fixed-size row per user (no
-    per-event history), the shuffle key is user_id, and the per-batch
-    output is bounded by the touched-user count."""
-    if implementation not in ("auto", "tws", "compat"):
-        raise ValueError(f"unknown implementation: {implementation!r}")
-    if implementation == "auto":
-        try:
-            import google.protobuf  # noqa: F401
-
-            provider = events.sparkSession.conf.get(
-                "spark.sql.streaming.stateStore.providerClass",
-                "HDFSBackedStateStoreProvider",
-            )
-            implementation = "tws" if "RocksDB" in provider else "compat"
-        except ImportError:
-            implementation = "compat"
-    # NO watermark on either path (round-7 review): the accumulator uses
-    # no timers and no windowing, so a watermark's ONLY effect here is
-    # that the stateful operator DROPS input rows older than it — late
-    # events silently vanish from totals the batch twin counts. A
-    # running total has no late-data eviction semantics to buy.
-    if implementation == "compat":
-        return (
-            events.select("user_id", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _running_totals_fn,
-                outputStructType=RUNNING_TOTALS_SCHEMA,
-                stateStructType=_RUNNING_TOTALS_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-    import pandas as pd  # noqa: F811 - executor-side import
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n_events long, total_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = 0, 0.0
-            if self._state.exists():
-                n, total = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
+    100 TB posture: state is ONE fixed-size row per user (no per-event
+    history), the shuffle key is user_id, and the per-batch output is
+    bounded by the touched-user count."""
+    # NO watermark (round-7 review): the accumulator uses no timers and
+    # no windowing, so a watermark's ONLY effect here is that the
+    # stateful operator DROPS input rows older than it — late events
+    # silently vanish from totals the batch twin counts. A running total
+    # has no late-data eviction semantics to buy.
     return (
         events.select("user_id", "value")
         .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
+        .applyInPandasWithState(
+            _running_totals_fn,
             outputStructType=RUNNING_TOTALS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
+            stateStructType=_RUNNING_TOTALS_STATE,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 

@@ -189,3 +189,45 @@ def test_compact_ivf_members_folds_append_files_value_identically(
     stats2 = compact_ivf_members(spark, index_dir)
     assert stats2["files_after"] == stats["files_after"]
     assert probe_rows() == before
+
+
+def test_replay_canary_reruns_for_a_new_value_regime(spark, monkeypatch):
+    # The pre-JDK-19 stringification canary caches its verdict per
+    # (application, sampled values): a later fit whose values sit in a
+    # different regime (exponent-notation doubles) must run its own
+    # one-job canary, while a repeat of a fit — rows in any order —
+    # reuses the cached verdict and starts no job.
+    import time
+
+    import numpy as np
+    import pytest
+
+    from datafusion_loki_spark.operators import similarity
+
+    jvm_spec = spark._jvm.java.lang.System.getProperty(
+        "java.specification.version"
+    )
+    if float(jvm_spec) >= 19:
+        pytest.skip("the canary only runs on pre-19 JVMs")
+    monkeypatch.setattr(similarity, "_REPLAY_CANARY_OK", {})
+    sc = spark.sparkContext
+
+    def jobs_of(E):
+        group = f"replay_canary_{time.time_ns()}"
+        sc.setJobGroup(group, "replay canary")
+        try:
+            ok = similarity._decimal_replay_safe(spark, E)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert ok
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = np.array([[0.25, -1.5], [3.0, 0.125], [2.75, -0.5]])
+    tiny = np.array([[1.5e-7, -2.25e-9], [3e-6, 7.5e-8]])
+    assert jobs_of(plain) == 1
+    assert jobs_of(tiny) == 1
+    assert jobs_of(plain) == 0
+    assert jobs_of(plain[::-1].copy()) == 0
+    assert jobs_of(tiny) == 0

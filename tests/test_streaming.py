@@ -3,7 +3,6 @@ windowed aggregation, stateful sessionization."""
 
 from __future__ import annotations
 
-import contextlib
 import time
 
 import pytest
@@ -435,277 +434,6 @@ def test_sessionize_state_survives_restart(spark, tmp_path):
     assert r.session_end == t0 + dt.timedelta(minutes=10)
 
 
-@contextlib.contextmanager
-def _rocksdb_state_store(spark):
-    # transformWithStateInPandas needs a state store with multiple column
-    # families; only RocksDBStateStoreProvider supports them. Scoped to
-    # the test so the session default (HDFS-backed) stays in force for
-    # the rest of the suite. The conf is read at QUERY start, so every
-    # drain/restart inside the block runs under RocksDB.
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-def test_transform_with_state_survives_restart(spark, tmp_path):
-    # Same restart proof for the transformWithStateInPandas surface: totals
-    # accumulated before the restart must seed the post-restart update.
-    # The state-server protocol needs google.protobuf; the package
-    # guarantees it (real wheel or the vendored shim) — assert, not skip.
-    from datafusion_loki_spark._vendor import ensure_protobuf
-
-    assert ensure_protobuf() in ("system", "vendored")
-    import datetime as dt
-
-    src = tmp_path / "src"
-    ckpt = str(tmp_path / "ck")
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-    def _mk(name, rows):
-        spark.createDataFrame(
-            rows, "ts timestamp_ntz, user_id long, value double"
-        ).coalesce(1).write.parquet(str(src / name))
-
-    def _drain(qname):
-        got: list = []
-        stream = (
-            spark.readStream.schema("ts timestamp_ntz, user_id long, value double")
-            .parquet(str(src) + "/*/")
-        )
-        q = (
-            pipeline.user_running_totals(stream, implementation="tws")
-            .writeStream.foreachBatch(lambda df, _id: got.extend(df.collect()))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return got
-
-    with _rocksdb_state_store(spark):
-        _mk("f0.parquet", [(t0, 7, 1.0), (t0 + dt.timedelta(minutes=1), 7, 2.0)])
-        first = {r.user_id: (r.n_events, r.total_value) for r in _drain("tws_r1")}
-        assert first == {7: (2, 3.0)}
-        _mk("f1.parquet", [(t0 + dt.timedelta(minutes=2), 7, 4.0)])
-        rows = _drain("tws_r2")
-        assert {r.user_id: (r.n_events, r.total_value) for r in rows} == {
-            7: (3, 7.0)
-        }
-
-
-def test_transform_with_state_list_and_map_state(spark, tmp_path):
-    # Broadens the vendored-protobuf JVM oracle beyond ValueState: List
-    # and Map state drive the remaining wire shapes — ListStatePut /
-    # AppendValue / AppendList (repeated bytes), ListStateGet iterator
-    # fetches (StateResponseWithListGet), MapState updateValue/getValue/
-    # containsKey/removeKey and the keys/iterator fetches
-    # (StateResponseWithMapKeysOrValues, KeyAndValuePair) — each parsed
-    # by protobuf-java on the JVM side, so any wire divergence fails
-    # the query, not just an assertion.
-    from datafusion_loki_spark._vendor import ensure_protobuf
-
-    assert ensure_protobuf() in ("system", "vendored")
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ListMapAccumulator(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._vals = handle.getListState("vals", "v double")
-            self._counts = handle.getMapState(
-                "counts", "bucket string", "n long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            for pdf in rows:
-                for v in pdf["value"]:
-                    self._vals.appendValue((float(v),))
-                    bucket = "big" if v >= 10 else "small"
-                    if self._counts.containsKey((bucket,)):
-                        (n,) = self._counts.getValue((bucket,))
-                    else:
-                        n = 0
-                    self._counts.updateValue((bucket,), (n + 1,))
-            # exercise the put + removal paths too: rewrite the list
-            # with only the last 2 values, drop never-used key if present
-            kept = [t for t in self._vals.get()][-2:]
-            self._vals.put(kept)
-            if self._counts.containsKey(("never",)):
-                self._counts.removeKey(("never",))
-            total = 0
-            n_buckets = 0
-            for _k, (n,) in self._counts.iterator():
-                total += n
-                n_buckets += 1
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "kept": [len(kept)],
-                    "kept_sum": [sum(t[0] for t in kept)],
-                    "total": [total],
-                    "n_buckets": [n_buckets],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    src = tmp_path / "src"
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        (t0, 7, 1.0),
-        (t0, 7, 12.0),
-        (t0, 7, 3.0),
-        (t0, 9, 20.0),
-    ]
-    spark.createDataFrame(
-        rows, "ts timestamp_ntz, user_id long, value double"
-    ).coalesce(1).write.parquet(str(src / "f0.parquet"))
-    stream = (
-        spark.readStream.schema("ts timestamp_ntz, user_id long, value double")
-        .parquet(str(src) + "/*/")
-    )
-    got: list = []
-    with _rocksdb_state_store(spark):
-        q = (
-            stream.groupBy("user_id")
-            .transformWithStateInPandas(
-                ListMapAccumulator(),
-                outputStructType=(
-                    "user_id long, kept long, kept_sum double, "
-                    "total long, n_buckets long"
-                ),
-                outputMode="update",
-                timeMode="none",
-            )
-            .writeStream.foreachBatch(lambda df, _id: got.extend(df.collect()))
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = {r.user_id: (r.kept, r.kept_sum, r.total, r.n_buckets) for r in got}
-    # user 7: values 1, 12, 3 -> list keeps last 2 (12, 3), counts
-    # small=2 big=1; user 9: one big value
-    assert out == {7: (2, 15.0, 3, 2), 9: (1, 20.0, 1, 1)}
-
-
-def test_transform_with_state_event_time_timers(spark, tmp_path):
-    # Completes the vendored-protobuf JVM-oracle coverage with the TIMER
-    # wire shapes: RegisterTimer / listTimers (TimerStateCallCommand +
-    # StateResponseWithTimer), TimerValueRequest/GetWatermark, and the
-    # expiry path (ExpiryTimerRequest iterators feeding
-    # handleExpiredTimer) — all parsed/emitted by protobuf-java on the
-    # JVM side. Semantics proven: a timer registered in batch 1 at
-    # (batch-1 watermark horizon) fires during batch 2 once the
-    # watermark passes it, emitting the state accumulated in batch 1.
-    from datafusion_loki_spark._vendor import ensure_protobuf
-
-    assert ensure_protobuf() in ("system", "vendored")
-    import datetime as dt
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TimerEmitter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._count = handle.getValueState("count", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._count.get()[0] if self._count.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._count.update((n,))
-            # one timer just past the current watermark: fires on the
-            # NEXT microbatch's watermark advance. Re-registering the
-            # same instant is idempotent; exercise delete+list too.
-            t = timerValues.getCurrentWatermarkInMs() + 1
-            self._handle.registerTimer(t)
-            self._handle.registerTimer(t + 10_000_000)
-            self._handle.deleteTimer(t + 10_000_000)
-            assert list(self._handle.listTimers()) == [t]
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "kind": ["data"], "n": [n]}
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            n = self._count.get()[0] if self._count.exists() else -1
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "kind": ["timer"], "n": [n]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    src = tmp_path / "src"
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-    def _mk(name, rows):
-        spark.createDataFrame(
-            rows, "ts timestamp_ntz, user_id long, value double"
-        ).coalesce(1).write.parquet(str(src / name))
-
-    got: list = []
-
-    def _drain():
-        stream = (
-            spark.readStream.schema(
-                "ts timestamp_ntz, user_id long, value double"
-            )
-            .parquet(str(src) + "/*/")
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 second")
-        )
-        q = (
-            stream.groupBy("user_id")
-            .transformWithStateInPandas(
-                TimerEmitter(),
-                outputStructType="user_id long, kind string, n long",
-                outputMode="update",
-                timeMode="eventTime",
-            )
-            .writeStream.foreachBatch(lambda df, _id: got.extend(df.collect()))
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    with _rocksdb_state_store(spark):
-        _mk("f0.parquet", [(t0, 7, 1.0), (t0 + dt.timedelta(minutes=1), 7, 2.0)])
-        _drain()
-        _mk("f1.parquet", [(t0 + dt.timedelta(minutes=5), 7, 3.0)])
-        _drain()
-    kinds = [(r.kind, r.n) for r in got if r.user_id == 7]
-    assert ("data", 2) in kinds  # batch-1 accumulation
-    assert ("data", 3) in kinds  # batch-2 accumulation
-    # the batch-1 timer fired once the batch-2 watermark passed it, with
-    # state visible at expiry
-    assert any(k == "timer" and n >= 2 for k, n in kinds), kinds
-
-
 def test_rollup_first_batch_detection_rejects_other_errors(spark, tmp_path):
     # The foreachBatch merge may treat ONLY missing-path / empty-dir as
     # "first batch". A corrupt sink raising any other error class must
@@ -739,12 +467,11 @@ def test_rollup_first_batch_detection_rejects_other_errors(spark, tmp_path):
     assert (sink / "part-00000.parquet").read_bytes().startswith(b"this is not")
 
 
-def _assert_running_totals_match_batch(spark, sf_dir, implementation):
+def _assert_running_totals_match_batch(spark, sf_dir):
     # After an availableNow drain, the LAST emitted update per user must
-    # equal the batch rollup — the equivalence proof both stateful-API
-    # paths of user_running_totals share.
+    # equal the batch rollup — user_running_totals' equivalence proof.
     events = pipeline.events_file_stream(spark, sf_dir)
-    totals = pipeline.user_running_totals(events, implementation=implementation)
+    totals = pipeline.user_running_totals(events)
     pipeline.run_to_memory(totals, "running_totals", spark, output_mode="update")
     # update mode may emit a user several times across batches — keep the
     # final (max n_events) row per user
@@ -767,25 +494,12 @@ def _assert_running_totals_match_batch(spark, sf_dir, implementation):
         assert total == pytest.approx(r.s, rel=1e-9)
 
 
-def test_transform_with_state_running_totals(spark, sf_dir):
-    # Spark 4 transformWithStateInPandas surface. The state-server protocol
-    # needs google.protobuf; the package guarantees it (real wheel or the
-    # vendored shim in datafusion_loki_spark._vendor) — assert, not skip.
-    from datafusion_loki_spark._vendor import ensure_protobuf
-
-    assert ensure_protobuf() in ("system", "vendored")
-    with _rocksdb_state_store(spark):
-        _assert_running_totals_match_batch(spark, sf_dir, "tws")
-
-
 def test_running_totals_compat_matches_batch(spark, sf_dir):
-    # The applyInPandasWithState compat path has no protobuf dependency, so
-    # the running-totals accumulator semantics get a green run everywhere.
-    _assert_running_totals_match_batch(spark, sf_dir, "compat")
+    _assert_running_totals_match_batch(spark, sf_dir)
 
 
 def test_running_totals_compat_survives_restart(spark, tmp_path):
-    # Checkpoint-restart proof for the compat path: totals accumulated
+    # Checkpoint-restart proof: totals accumulated
     # before the restart must seed the post-restart update.
     import datetime as dt
 
@@ -805,7 +519,7 @@ def test_running_totals_compat_survives_restart(spark, tmp_path):
             .parquet(str(src) + "/*/")
         )
         q = (
-            pipeline.user_running_totals(stream, implementation="compat")
+            pipeline.user_running_totals(stream)
             .writeStream.foreachBatch(lambda df, _id: got.extend(df.collect()))
             .outputMode("update")
             .option("checkpointLocation", ckpt)
@@ -821,13 +535,6 @@ def test_running_totals_compat_survives_restart(spark, tmp_path):
     _mk("f1.parquet", [(t0 + dt.timedelta(minutes=2), 7, 4.0)])
     rows = _drain()
     assert {r.user_id: (r.n_events, r.total_value) for r in rows} == {7: (3, 7.0)}
-
-
-def test_running_totals_rejects_unknown_implementation(spark, sf_dir):
-    with pytest.raises(ValueError, match="unknown implementation"):
-        pipeline.user_running_totals(
-            pipeline.events_file_stream(spark, sf_dir), implementation="nope"
-        )
 
 
 def test_session_window_counts_match_batch(spark, sf_dir):
@@ -2007,7 +1714,7 @@ def test_running_totals_count_late_events_across_batches(spark, tmp_path):
     )
     got: list = []
     q = (
-        pipeline.user_running_totals(stream, implementation="compat")
+        pipeline.user_running_totals(stream)
         .writeStream.outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ck"))
         .foreachBatch(lambda df, _bid: got.extend(df.collect()))

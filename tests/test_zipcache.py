@@ -1,15 +1,19 @@
-"""Unit tests for the zip-directory re-read shim (no Spark).
+"""Unit tests for what importing the package does (no Spark).
 
 ``importlib.invalidate_caches()`` makes every ``zipimporter`` re-read its
 archive's central directory on CPython < 3.12; the shim skips the re-read
-while the archive's stat stamp is unchanged. Each test counts calls to
-``zipimport._read_directory`` on a temp zip placed on ``sys.path``.
+while the archive's stat stamp is unchanged. Each shim test counts calls
+to ``zipimport._read_directory`` on a temp zip placed on ``sys.path``.
+The import itself must leave the interpreter's search path and the
+environment Python workers inherit untouched.
 """
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -18,9 +22,11 @@ import pytest
 
 from datafusion_loki_spark import _zipcache
 
-pytestmark = pytest.mark.skipif(
+needs_shim = pytest.mark.skipif(
     sys.version_info >= (3, 12), reason="the shim patches nothing on 3.12+"
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -52,6 +58,7 @@ def zip_on_path(tmp_path, monkeypatch):
     _zipcache._read_at.pop(archive, None)
 
 
+@needs_shim
 def test_unchanged_archive_is_read_once(zip_on_path, counted_reads):
     _zipcache.install()
     assert importlib.import_module("zc_alpha").VALUE == "alpha"
@@ -66,6 +73,7 @@ def test_unchanged_archive_is_read_once(zip_on_path, counted_reads):
     assert "zc_alpha.py" in importer._files
 
 
+@needs_shim
 def test_rewritten_archive_is_reread(zip_on_path, counted_reads):
     _zipcache.install()
     importlib.import_module("zc_alpha")
@@ -93,6 +101,7 @@ def unpatched(monkeypatch):
     return raw
 
 
+@needs_shim
 def test_install_twice_does_not_double_wrap(unpatched):
     _zipcache.install()
     once = zipimport.zipimporter.invalidate_caches
@@ -101,13 +110,43 @@ def test_install_twice_does_not_double_wrap(unpatched):
     assert zipimport.zipimporter.invalidate_caches is once
 
 
+@needs_shim
 def test_install_is_noop_on_312(unpatched, monkeypatch):
     monkeypatch.setattr(sys, "version_info", (3, 12, 0, "final", 0))
     _zipcache.install()
     assert zipimport.zipimporter.invalidate_caches is unpatched
 
 
+@needs_shim
 def test_install_is_noop_without_directory_cache(unpatched, monkeypatch):
     monkeypatch.delattr(zipimport, "_zip_directory_cache")
     _zipcache.install()
     assert zipimport.zipimporter.invalidate_caches is unpatched
+
+
+_IMPORT_PROBE = """
+import json, os, sys
+before = [list(sys.path), os.environ.get("PYTHONPATH")]
+import datafusion_loki_spark
+after = [list(sys.path), os.environ.get("PYTHONPATH")]
+google = sorted(m for m in sys.modules if m.split(".")[0] == "google")
+print(json.dumps({"before": before, "after": after, "google": google}))
+"""
+
+
+def test_package_import_leaves_path_and_environment_alone():
+    # Python workers inherit the driver's environment, so an import that
+    # edits sys.path or PYTHONPATH would leak into every worker.
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_PROBE],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["after"] == got["before"]
+    assert got["before"][1] is None
+    assert got["google"] == []
