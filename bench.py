@@ -290,6 +290,32 @@ def _calibration_samples(
     return [_run() for _ in range(n)]
 
 
+def _persistent_rdd_ids(spark) -> set:
+    """Ids in the JVM's persistent-RDD map (localCheckpoint storage)."""
+    return {
+        int(k)
+        for k in spark.sparkContext._jsc.getPersistentRDDs()
+        .keySet()
+        .toArray()
+    }
+
+
+def _free_rdds(spark, rdd_ids: set) -> None:
+    """The bench's run-level sweep: free the persistent RDDs a finished
+    query left behind, as ``_free_rdds(spark, _persistent_rdd_ids(spark)
+    - pre)``. Operators release their own checkpoints by frame
+    (``functions.checkpoints.release``); the bench holds no frame for
+    the intermediates a query checkpointed, so it diffs the id set.
+    The diff is safe here and only here: the bench runs one query at a
+    time and sweeps after that query has returned, so every overlap
+    thread it started has joined and nothing else is checkpointing."""
+    jm = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in rdd_ids:
+        rdd = jm.get(rid)
+        if rdd is not None:
+            rdd.unpersist(False)
+
+
 def _min_of_2(fn, spark, sf_dir: str) -> float:
     """JVM codegen/GC jitter is bimodal (observed 4.7 s vs 1.1 s for the
     same plan); min-of-2 reports steady-state throughput rather than
@@ -309,12 +335,7 @@ def _min_of_2(fn, spark, sf_dir: str) -> float:
     perf_counter read and before the next run's t0, so every run times
     against a block manager clear of the earlier runs' dead blocks and
     no release falls inside a timing window."""
-    from datafusion_loki_spark.functions.checkpoints import (
-        free_checkpoints,
-        persistent_rdd_ids,
-    )
-
-    pre = persistent_rdd_ids(spark)
+    pre = _persistent_rdd_ids(spark)
     best = float("inf")
     for i in range(3):
         if i == 2 and best >= 0.5:
@@ -322,7 +343,7 @@ def _min_of_2(fn, spark, sf_dir: str) -> float:
         t0 = time.perf_counter()
         fn(spark, sf_dir).count()
         best = min(best, time.perf_counter() - t0)
-        free_checkpoints(spark, persistent_rdd_ids(spark) - pre)
+        _free_rdds(spark, _persistent_rdd_ids(spark) - pre)
     return round(best, 4)
 
 
@@ -376,11 +397,6 @@ def _shared_pass(
 
     import __spark_entry__ as entrymod
 
-    from datafusion_loki_spark.functions.checkpoints import (
-        free_checkpoints,
-        persistent_rdd_ids,
-    )
-
     spark = get_spark(app_name="bench")
     queries = entrymod.queries()
     # Warmup: run everything once at the smallest SF to amortize
@@ -388,12 +404,12 @@ def _shared_pass(
     # per query (round 16 — see _min_of_2): the warmup otherwise enters
     # the timed suite already carrying 93 queries of dead blocks.
     for name in names:
-        pre = persistent_rdd_ids(spark)
+        pre = _persistent_rdd_ids(spark)
         try:
             queries[name](spark, WARMUP_DIR).count()
         except Exception:
             pass
-        free_checkpoints(spark, persistent_rdd_ids(spark) - pre)
+        _free_rdds(spark, _persistent_rdd_ids(spark) - pre)
     clock0 = time.perf_counter()
     samples = _calibration_samples(spark, clock0, warm=True)
     # one anchor sample between suite thirds (round 10): 6 bracketing

@@ -8,39 +8,26 @@ one-JVM session (the bench suite, a job server) accumulates every
 operator's materialized intermediates in the block manager and pays the
 memory pressure as late-session drag (round-15 measured the forced-GC
 alternative and rejected it: multi-second stop-the-world stalls).
-These helpers release the blocks EXPLICITLY at the points where the
-producing operator can prove no consumer remains (round-15 VERDICT
-next-#7) — promoted here in round 16 from text.py's BPE-loop-private
-versions so every operator family can use them.
+Operators therefore release the blocks EXPLICITLY, at the points where
+they can prove no consumer remains.
 
-Contract: diff ``persistent_rdd_ids`` TIGHTLY around the checkpoints to
-free, with no CONCURRENT checkpoint activity in the window (the repo's
-sessions run queries sequentially; the overlap helper's threads join
-before their caller continues) — a captured foreign id freed later
-breaks that query's reads with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+Contract: ``release(df)`` a checkpoint frame only once nothing will read
+it again (a released checkpoint's reads fail loudly with
+CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). It touches only that frame's own
+RDD, so it is safe while other threads checkpoint and release their own
+frames (the overlap helper's thunks do exactly that).
 """
 
 from __future__ import annotations
 
 
-def persistent_rdd_ids(spark) -> set:
-    """Ids of the block-manager-resident RDDs (localCheckpoint storage),
-    via the JavaSparkContext's persistent-RDD map — the only handle to a
-    checkpoint RDD's blocks."""
-    return {
-        int(k)
-        for k in spark.sparkContext._jsc.getPersistentRDDs()
-        .keySet()
-        .toArray()
-    }
+def release(*frames) -> None:
+    """Drop the block-manager copies behind each localCheckpoint frame.
 
-
-def free_checkpoints(spark, rdd_ids: set) -> None:
-    """Drop the block-manager copies behind superseded localCheckpoints.
-    Only call on state with NO remaining consumer: a freed checkpoint's
-    reads fail loudly."""
-    jm = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in rdd_ids:
-        rdd = jm.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
+    A localCheckpoint frame's logical plan is a ``LogicalRDD`` over the
+    checkpoint RDD itself; unpersisting that RDD frees its blocks and
+    nothing else. A frame that is not a checkpoint has no ``rdd()`` on
+    its plan node, so the call raises instead of silently freeing
+    nothing."""
+    for df in frames:
+        df._jdf.logicalPlan().rdd().unpersist(False)

@@ -39,6 +39,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from datafusion_loki_spark.catalog import load_table
+from datafusion_loki_spark.functions.checkpoints import release
 from datafusion_loki_spark.operators.text import _NORM_DUCK, _NORM_SPARK
 
 N_MINHASH = 8          # minhash signatures
@@ -492,14 +493,9 @@ def _cc_labels(sym: DataFrame) -> DataFrame:
     cap = _cc_local_cap(spark)
     if cap > 0 and sym.count() <= cap:
         return _cc_labels_local(spark, sym.collect())
-    from datafusion_loki_spark.functions.checkpoints import (
-        free_checkpoints,
-        persistent_rdd_ids,
-    )
-
     nodes = sym.select(F.col("src").alias("doc_id")).distinct()
     labels = nodes.withColumn("cluster_id", F.col("doc_id"))
-    prev_ids: set = set()
+    prev = None
     while True:
         # min over own label and all neighbors' labels
         neighbor_min = (
@@ -507,7 +503,6 @@ def _cc_labels(sym: DataFrame) -> DataFrame:
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        pre = persistent_rdd_ids(spark)
         step = (
             labels.join(neighbor_min, "doc_id", "left")
             .select(
@@ -519,12 +514,12 @@ def _cc_labels(sym: DataFrame) -> DataFrame:
             )
             .localCheckpoint(eager=True)  # truncate lineage per round
         )
-        step_ids = persistent_rdd_ids(spark) - pre
         # the PREVIOUS round's checkpoint has no consumer once this
         # round's is materialized (VERDICT r15 next-#7): release it
         # instead of pinning O(diameter) dead label copies
-        free_checkpoints(spark, prev_ids)
-        prev_ids = step_ids
+        if prev is not None:
+            release(prev)
+        prev = step
         changed = step.where(F.col("cluster_id") != F.col("old_label")).count()
         labels = step.select("doc_id", "cluster_id")
         if changed == 0:
@@ -791,15 +786,8 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH the banding/pair generation and the estimator's signature side
     read the checkpoint, where the r15 shape re-ran the shingle explode +
     8-minhash aggregation once per consumer."""
-    from datafusion_loki_spark.functions.checkpoints import (
-        free_checkpoints,
-        persistent_rdd_ids,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    pre = persistent_rdd_ids(spark)
     sig_full = minhash_signatures(docs).localCheckpoint(eager=True)
-    sig_full_ids = persistent_rdd_ids(spark) - pre
     cand = _lsh_pairs_from_sig(sig_full).localCheckpoint(eager=True)
     ids = (
         cand.select(F.col("doc_a").alias("doc_id"))
@@ -814,7 +802,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the doc-scale signature checkpoint is DEAD once its two consumers
     # (cand, sig) are materialized — release it now (VERDICT r15 next-#7)
     # instead of pinning it until the ContextCleaner's next GC cycle
-    free_checkpoints(spark, sig_full_ids)
+    release(sig_full)
     a = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{j}").alias(f"a{j}") for j in range(N_MINHASH)],

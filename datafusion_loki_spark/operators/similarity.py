@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from datafusion_loki_spark.catalog import load_table
+from datafusion_loki_spark.functions.checkpoints import release
 
 N_PLANES = 8
 DIM = 64
@@ -3511,15 +3512,9 @@ def retrain_ivf_index(spark: SparkSession, index_dir: str) -> dict:
         f"{index_dir}/{old_base_name}" if old_base_name else index_dir
     )
     new_version = (versions[-1] if versions else 0) + 1
-    from datafusion_loki_spark.functions.checkpoints import (
-        free_checkpoints,
-        persistent_rdd_ids,
-    )
-
     newest = Window.partitionBy("vec_id").orderBy(
         F.desc("gen"), F.asc("cluster_id")
     )
-    pre_ckpt = persistent_rdd_ids(spark)
     live_d = (
         ivf_members_versioned(spark, old_base)
         .select("vec_id", "e", "gen", "cluster_id")
@@ -3528,7 +3523,6 @@ def retrain_ivf_index(spark: SparkSession, index_dir: str) -> dict:
         .select("vec_id", "e")
         .localCheckpoint(eager=True)
     )
-    live_ids = persistent_rdd_ids(spark) - pre_ckpt
     seeds = live_d.orderBy("vec_id").limit(KMEANS_K)
     assigned, cents = _kmeans_fit(
         live_d, live_d.where(F.expr(_TRAIN_PRED_SPARK)), seeds_d=seeds
@@ -3603,7 +3597,7 @@ def retrain_ivf_index(spark: SparkSession, index_dir: str) -> dict:
     }
     # the live-view checkpoint is dead: the new base is written, the
     # stats above were its last read (VERDICT r15 next-#7)
-    free_checkpoints(spark, live_ids)
+    release(live_d)
     return stats
 
 

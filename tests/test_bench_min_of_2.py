@@ -1,11 +1,10 @@
 """bench._min_of_2 frees each run's dead checkpoints between runs, outside
-every timing window (no Spark: the checkpoint helpers and the clock are
+every timing window (no Spark: the sweep helpers and the clock are
 stubbed and every call is logged in order)."""
 
 from __future__ import annotations
 
 import bench
-from datafusion_loki_spark.functions import checkpoints
 
 
 def test_min_of_2_frees_each_run_between_timing_windows(monkeypatch):
@@ -24,13 +23,13 @@ def test_min_of_2_frees_each_run_between_timing_windows(monkeypatch):
             log.append("run")
 
     monkeypatch.setattr(bench.time, "perf_counter", perf_counter)
-    monkeypatch.setattr(checkpoints, "persistent_rdd_ids", lambda spark: set(live))
+    monkeypatch.setattr(bench, "_persistent_rdd_ids", lambda spark: set(live))
 
     def free(spark, ids):
         log.append(("free", sorted(ids)))
         live.difference_update(ids)
 
-    monkeypatch.setattr(checkpoints, "free_checkpoints", free)
+    monkeypatch.setattr(bench, "_free_rdds", free)
     assert bench._min_of_2(lambda spark, sf: Frame(), None, "sf") == 0.1
     assert log == [
         "clock", "run", "clock", ("free", [10]),

@@ -1,0 +1,87 @@
+"""Checkpoint release is scoped to the frame released: a loop that frees
+its own dead checkpoints never frees one that another thread is still
+reading (the overlap helper runs such loops side by side)."""
+
+from __future__ import annotations
+
+import threading
+import time
+
+import pytest
+
+
+def _readable(df) -> bool:
+    try:
+        df.count()
+        return True
+    except Exception:
+        return False
+
+
+def test_cc_distributed_loop_spares_concurrent_checkpoints(spark):
+    # a chain's labels need one fixpoint round per hop, so the
+    # distributed loop releases ~12 dead rounds while the second thread
+    # checkpoints beside it
+    from datafusion_loki_spark.operators.dedup import (
+        _cc_labels,
+        _cc_labels_local,
+    )
+
+    n = 12
+    edges = [(i, i + 1) for i in range(n - 1)]
+    sym = spark.createDataFrame(
+        edges + [(b, a) for a, b in edges], "src long, dst long"
+    ).localCheckpoint(eager=True)
+    frames: list = []
+    stop = threading.Event()
+
+    def checkpoint_beside():
+        while not stop.is_set():
+            frames.append(spark.range(8).localCheckpoint(eager=True))
+            time.sleep(0.05)
+
+    side = threading.Thread(target=checkpoint_beside)
+    spark.conf.set("spark_graft.cc.local_labels.max_edges", "0")
+    side.start()
+    try:
+        labels = sorted(map(tuple, _cc_labels(sym).collect()))
+    finally:
+        stop.set()
+        side.join()
+        spark.conf.unset("spark_graft.cc.local_labels.max_edges")
+    unreadable = [i for i, f in enumerate(frames) if not _readable(f)]
+    assert frames and not unreadable, (
+        f"{len(unreadable)} of {len(frames)} concurrent checkpoints freed"
+    )
+    local = _cc_labels_local(spark, sym.collect())
+    assert labels == sorted(map(tuple, local.collect()))
+    assert {c for _, c in labels} == {0}
+
+    from datafusion_loki_spark.functions.checkpoints import release
+
+    release(sym, *frames)
+
+
+def test_release_frees_only_its_own_checkpoint(spark):
+    from py4j.protocol import Py4JError
+
+    from datafusion_loki_spark.functions.checkpoints import release
+
+    jsc = spark.sparkContext._jsc
+
+    def live_ids() -> set:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    a = spark.range(10).localCheckpoint(eager=True)
+    b = spark.range(5).localCheckpoint(eager=True)
+    a_id = a._jdf.logicalPlan().rdd().id()
+    b_id = b._jdf.logicalPlan().rdd().id()
+    assert {a_id, b_id} <= live_ids()
+    release(a)
+    assert a_id not in live_ids() and b_id in live_ids()
+    assert b.count() == 5
+    # a frame that is no checkpoint has no RDD to release: fail loudly
+    with pytest.raises(Py4JError):
+        release(spark.range(3))
+    release(b)
+    assert b_id not in live_ids()

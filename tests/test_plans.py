@@ -879,7 +879,14 @@ def test_overlap_kill_switch_matches_concurrent(spark, sf_dir):
         seq = sorted(map(tuple, dedup_keep_list(spark, sf_dir).collect()))
     finally:
         spark.conf.unset("spark_graft.overlap.enabled")
-    assert conc and conc == seq
+    # CC cap 0: the distributed label loop releases its dead rounds on
+    # one overlap thread while winnowing checkpoints on the other
+    spark.conf.set("spark_graft.cc.local_labels.max_edges", "0")
+    try:
+        dist = sorted(map(tuple, dedup_keep_list(spark, sf_dir).collect()))
+    finally:
+        spark.conf.unset("spark_graft.cc.local_labels.max_edges")
+    assert conc and conc == seq == dist
 
 
 def test_value_histogram_single_shuffle(spark, sf_dir):
