@@ -39,6 +39,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from datafusion_loki_spark.catalog import load_table
+from datafusion_loki_spark.functions import local
 from datafusion_loki_spark.functions.checkpoints import release
 from datafusion_loki_spark.operators.text import _NORM_DUCK, _NORM_SPARK
 
@@ -394,7 +395,12 @@ def dedup_cc_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized edges on the join key. At extreme diameters you would
     switch to large-star/small-star (same join primitive, fewer rounds);
     the fixpoint semantics are identical."""
-    return _cc_labels(_symmetric_edges(spark, sf_dir))
+    sym = _symmetric_edges(spark, sf_dir)
+    labels = _cc_labels(sym)
+    # the labels read neither the edges (local path: a local relation)
+    # nor any round but the last (distributed path: its own checkpoint)
+    release(sym)
+    return labels
 
 
 def _symmetric_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,19 +426,8 @@ def _symmetric_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # which is exactly the fixpoint's answer — integers only, so equality
 # is structural, pinned by test_cc_local_matches_distributed. Above the
 # cap (a genuinely web-scale near-dup graph) the distributed loop runs
-# unchanged; the gate is one count() on the already-materialized edges.
+# unchanged; the gate is functions/local.py's bounded collect.
 CC_LOCAL_EDGE_CAP = 1_000_000
-
-
-def _cc_local_cap(spark: SparkSession) -> int:
-    """`spark_graft.cc.local_labels.max_edges` (0 disables the local
-    path — the distributed-loop kill switch)."""
-    return int(
-        spark.conf.get(
-            "spark_graft.cc.local_labels.max_edges",
-            str(CC_LOCAL_EDGE_CAP),
-        )
-    )
 
 
 def _cc_labels_local(spark: SparkSession, edges) -> DataFrame:
@@ -461,18 +456,10 @@ def _cc_labels_local(spark: SparkSession, edges) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    rows = [(n, find(n)) for n in parent]
-    # Arrow-backed local relation (r16, VERDICT r15 next-#4): a plain
-    # createDataFrame(list) becomes a pickled-Python RDD and every
-    # consumer ACTION (up to ~10 keep-list/agreement compositions) pays
-    # a Python-worker round-trip; the pandas+Arrow path lands as a pure
-    # JVM LocalTableScan — measured 6.7x cheaper per action, identical
-    # rows (the schema pin keeps long/long exactly).
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "cluster_id"]),
-        schema="doc_id long, cluster_id long",
+    return local.local_frame(
+        spark,
+        [(n, find(n)) for n in parent],
+        "doc_id long, cluster_id long",
     )
 
 
@@ -486,13 +473,12 @@ def _cc_labels(sym: DataFrame) -> DataFrame:
     previous labels (which would add a fourth exchange per round).
 
     Scale gate (OPTIMIZATION_r15 change 7): a candidate-scale edge list
-    under the configured cap collects once and labels driver-side via
+    under CC_LOCAL_EDGE_CAP collects once and labels driver-side via
     union-find — bit-identical output, none of the per-round jobs; the
     distributed loop below is the web-scale path."""
-    spark = sym.sparkSession
-    cap = _cc_local_cap(spark)
-    if cap > 0 and sym.count() <= cap:
-        return _cc_labels_local(spark, sym.collect())
+    edges = local.bounded_collect(sym, CC_LOCAL_EDGE_CAP)
+    if edges is not None:
+        return _cc_labels_local(sym.sparkSession, edges)
     nodes = sym.select(F.col("src").alias("doc_id")).distinct()
     labels = nodes.withColumn("cluster_id", F.col("doc_id"))
     prev = None

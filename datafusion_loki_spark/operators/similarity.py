@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from datafusion_loki_spark.catalog import load_table
+from datafusion_loki_spark.functions import local
 from datafusion_loki_spark.functions.checkpoints import release
 
 N_PLANES = 8
@@ -1163,11 +1164,10 @@ _TRAIN_PRED_DUCK = (
 #     the same correctly-rounded cast as BigDecimal.doubleValue, and the
 #     final `/ count` is one IEEE double division either way.
 # Above the cap the distributed loop runs UNCHANGED — that is the
-# 100 TB path; the gate costs one bounded limit(cap+1) collect of the
-# sample. 0 disables (kill switch). Pinned bit-exact by
+# 100 TB path; the gate is functions/local.py's bounded collect of the
+# sample (_local_fit_inputs). Pinned bit-exact by
 # tests/test_plans.py::test_kmeans_local_fit_matches_distributed.
-_KMEANS_LOCAL_FIT_CONF = "spark_graft.kmeans.local_fit.max_train"
-_KMEANS_LOCAL_FIT_DEFAULT = 100_000
+KMEANS_LOCAL_FIT_CAP = 100_000
 
 
 _DEC20_EXP = None  # lazily-built Decimal(1e-20) quantum (import-light module)
@@ -1331,25 +1331,47 @@ def _local_lloyd(train_es: list, seed_cents: list) -> list:
 
 def _cents_local_df(spark: SparkSession, cents: list) -> DataFrame:
     """The 1-row codebook frame (same shape _kmeans_cents_row yields)
-    from a driver-side [(cid, vec)] list — an Arrow-backed local
-    relation (r16): a plain createDataFrame(list) becomes a pickled-
-    Python RDD whose every consumer action (the centroid write, the
-    probe cross-join) pays a Python-worker round-trip — that is why r15
-    built LITERAL expressions here. But the literal form re-codegens a
-    ~15 KB expression per consumer JOB; the pandas+Arrow path plans as a
-    pure-JVM LocalTableScan and measured faster on every consumer
-    (build 20 vs 87 ms, first() 29 vs 86, centroid write 120 vs 236,
-    probe-join count 257 vs 311; collected rows identical). Exactness:
-    doubles cross as IEEE float64 bits end to end — no string round-trip
-    at all, strictly stronger than the literal path's repr() argument."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {"cents": [[(int(c), [float(x) for x in v]) for c, v in cents]]}
-        ),
-        schema="cents array<struct<cid:bigint,vec:array<double>>>",
+    from a driver-side [(cid, vec)] list, as a local relation — not as
+    literal expressions, which re-codegen a ~15 KB expression per
+    consumer job."""
+    return local.local_frame(
+        spark,
+        [([(int(c), [float(x) for x in v]) for c, v in cents],)],
+        "cents array<struct<cid:bigint,vec:array<double>>>",
     )
+
+
+def _local_fit_inputs(train_d: DataFrame, seeds_d: DataFrame):
+    """The local-fit gate shared by _kmeans_fit and the PQ training:
+    ``(E, seed_rows)`` — the train sample's ``e`` vectors as an (n, dim)
+    matrix and the cid-sorted [(cid, vec)] seeds from ``seeds_d``'s
+    (vec_id, e) — when the sample fits KMEANS_LOCAL_FIT_CAP and the
+    driver-side replay is provably the distributed arithmetic; None
+    sends the caller to its distributed loop. That covers an above-cap
+    sample, ragged or NULL vectors, empty seeding, and replay-unsafe
+    values (non-finite, decimal-overflow magnitudes, divergent JVM
+    stringification — _decimal_replay_safe)."""
+    import numpy as np
+
+    rows = local.bounded_collect(train_d.select("e"), KMEANS_LOCAL_FIT_CAP)
+    if rows is None:
+        return None
+    try:
+        E = np.asarray([list(r["e"]) for r in rows], dtype=np.float64)
+    except (TypeError, ValueError):  # ragged/NULL rows
+        return None
+    seed_rows = sorted(
+        (
+            (int(r["cid"]), [float(x) for x in r["vec"]])
+            for r in seeds_d.select(
+                F.col("vec_id").alias("cid"), F.col("e").alias("vec")
+            ).collect()
+        ),
+        key=lambda cv: cv[0],
+    )
+    if not seed_rows or not _decimal_replay_safe(train_d.sparkSession, E):
+        return None
+    return E, seed_rows
 
 
 def _kmeans_fit(
@@ -1381,58 +1403,15 @@ def _kmeans_fit(
         train_d = emb_d
     if seeds_d is None:
         seeds_d = emb_d.where(F.col("vec_id") < KMEANS_K)
-    spark = emb_d.sparkSession
-    cap = int(
-        spark.conf.get(
-            _KMEANS_LOCAL_FIT_CONF, str(_KMEANS_LOCAL_FIT_DEFAULT)
+    fit = _local_fit_inputs(train_d, seeds_d)
+    if fit is not None:
+        fitted = _local_lloyd(*fit)
+        return (
+            _kmeans_assign_arrays(
+                emb_d, [c for c, _ in fitted], [v for _, v in fitted]
+            ),
+            _cents_local_df(emb_d.sparkSession, fitted),
         )
-    )
-    if cap > 0:
-        import numpy as np
-
-        # bounded gate probe, NARROW first (r15 ADVICE #3): the probe
-        # ships one constant per row instead of the full embedding
-        # vectors, so an above-cap sample costs nothing but the row
-        # count — the full-vector collect runs only when the sample
-        # provably fits. CollectLimit (len of a bounded collect), NOT
-        # limit().count(): the count form plans a LocalLimit→single-
-        # partition-Exchange→GlobalLimit chain (measured 305 ms vs
-        # 121 ms warm at sf0.1), while CollectLimit scans partitions
-        # incrementally and stops at cap+1 rows at any scale
-        n_train = len(
-            train_d.select(F.lit(1).alias("one")).limit(cap + 1).collect()
-        )
-        if n_train <= cap:
-            train_rows = train_d.select("e").limit(cap + 1).collect()
-            try:
-                E = np.asarray(
-                    [list(r["e"]) for r in train_rows], dtype=np.float64
-                )
-            except (TypeError, ValueError):  # ragged/NULL rows — the
-                E = None  # distributed loop owns those
-            seed_rows = sorted(
-                (
-                    (int(r["cid"]), [float(x) for x in r["vec"]])
-                    for r in seeds_d.select(
-                        F.col("vec_id").alias("cid"),
-                        F.col("e").alias("vec"),
-                    ).collect()
-                ),
-                key=lambda cv: cv[0],
-            )
-            # degenerate empty seeding and replay-unsafe samples (non-
-            # finite values, decimal-overflow magnitudes, divergent JVM
-            # stringification) keep the distributed path
-            if seed_rows and E is not None and _decimal_replay_safe(spark, E):
-                fitted = _local_lloyd(E, seed_rows)
-                return (
-                    _kmeans_assign_arrays(
-                        emb_d,
-                        [c for c, _ in fitted],
-                        [v for _, v in fitted],
-                    ),
-                    _cents_local_df(spark, fitted),
-                )
     cents = _kmeans_cents_row(
         seeds_d.select(F.col("vec_id").alias("cid"), F.col("e").alias("vec"))
     )
@@ -1797,24 +1776,19 @@ def _query_ivf_index_once(
     # the driver-side probed-cell set below and the scorer's broadcast
     # side read it. r16: COLLECT it (bounded by construction — the same
     # legitimacy class as the probed-cell set it feeds) and re-inject as
-    # an Arrow LocalTableScan instead of localCheckpoint + a separate
+    # a local relation instead of localCheckpoint + a separate
     # distinct().collect(): one job instead of a checkpoint job plus a
     # distinct shuffle, and the scorer's broadcast side gets a local
-    # relation with REAL size stats. Doubles survive the round trip
-    # bit-exactly (Arrow float64 end to end, no string conversion).
-    import pandas as pd
-
+    # relation with REAL size stats.
     probes_plan = _ivf_probes(queries_d, cents)
     probe_rows = probes_plan.collect()
-    probes = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                (r.query_id, list(r.q_emb), r.q_nrm, r.cluster_id)
-                for r in probe_rows
-            ],
-            columns=["query_id", "q_emb", "q_nrm", "cluster_id"],
-        ),
-        schema=probes_plan.schema,
+    probes = local.local_frame(
+        spark,
+        [
+            (r.query_id, list(r.q_emb), r.q_nrm, r.cluster_id)
+            for r in probe_rows
+        ],
+        probes_plan.schema,
     )
     probed = {r.cluster_id for r in probe_rows}
     members = (
@@ -2107,58 +2081,23 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # train sample fits the shared cap the whole PQ_M-codebook training
     # replays driver-side via _local_lloyd — one bounded collect
     # replaces the seeds-agg job, the iteration agg chain, and the
-    # codebook collect. Above the cap (or with degenerate seeds) the
-    # distributed chain below runs UNCHANGED.
+    # codebook collect. Above the cap (or with degenerate seeds or an
+    # empty sample) the distributed chain below runs UNCHANGED.
     tbooks = None
-    cap = int(
-        spark.conf.get(
-            _KMEANS_LOCAL_FIT_CONF, str(_KMEANS_LOCAL_FIT_DEFAULT)
-        )
+    fit = _local_fit_inputs(
+        emb_d.where(F.expr(_TRAIN_PRED_SPARK)),
+        emb_d.where(F.col("vec_id") < KMEANS_K),
     )
-    if cap > 0:
-        import numpy as np
-
-        train_d = emb_d.where(F.expr(_TRAIN_PRED_SPARK))
-        # narrow CollectLimit probe first (r15 ADVICE #3; see the
-        # _kmeans_fit gate for the probe-shape measurement) — above the
-        # cap the ~50-100 MB full-vector collect never runs
-        n_train = len(
-            train_d.select(F.lit(1).alias("one")).limit(cap + 1).collect()
-        )
-        if n_train <= cap:
-            train_rows = train_d.select("e").limit(cap + 1).collect()
-            try:
-                E_full = np.asarray(
-                    [list(r["e"]) for r in train_rows], dtype=np.float64
-                )
-            except (TypeError, ValueError):  # ragged/NULL rows — the
-                E_full = None  # distributed loop owns those
-            seed_rows = sorted(
-                (
-                    (int(r["vec_id"]), [float(x) for x in r["e"]])
-                    for r in emb_d.where(F.col("vec_id") < KMEANS_K)
-                    .select("vec_id", "e")
-                    .collect()
-                ),
-                key=lambda cv: cv[0],
+    if fit is not None and fit[0].shape[0]:
+        E_full, seed_rows = fit
+        tbooks = {}
+        for s in range(PQ_M):
+            lo, hi = s * PQ_SUB, (s + 1) * PQ_SUB
+            fitted = _local_lloyd(
+                E_full[:, lo:hi],
+                [(cid, v[lo:hi]) for cid, v in seed_rows],
             )
-            if (
-                seed_rows
-                and len(train_rows)
-                and E_full is not None
-                and _decimal_replay_safe(spark, E_full)
-            ):
-                tbooks = {}
-                for s in range(PQ_M):
-                    lo, hi = s * PQ_SUB, (s + 1) * PQ_SUB
-                    fitted = _local_lloyd(
-                        E_full[:, lo:hi],
-                        [(cid, v[lo:hi]) for cid, v in seed_rows],
-                    )
-                    tbooks[s] = (
-                        [c for c, _ in fitted],
-                        [v for _, v in fitted],
-                    )
+            tbooks[s] = ([c for c, _ in fitted], [v for _, v in fitted])
     if tbooks is None:
         seeds = sub.where(F.col("vec_id") < KMEANS_K).select(
             "s", F.col("vec_id").alias("cid"), F.col("es").alias("vec")

@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from datafusion_loki_spark.catalog import load_table
+from datafusion_loki_spark.functions import local
 from datafusion_loki_spark.functions.checkpoints import release
 
 # Shared normalization: lowercase, collapse whitespace. The Spark and DuckDB
@@ -1405,21 +1406,10 @@ _BPE_AFFECTED_PRED = (
 # the collected table — integers and strings only, so equality with the
 # distributed loop (and the DuckDB recount oracle) is exact, not
 # approximate. Above the cap (a genuinely web-scale vocabulary) the
-# delta-maintained distributed loop below runs unchanged; the gate is one
-# count() on the already-materialized vocab checkpoint.
+# delta-maintained distributed loop below runs unchanged; the gate is
+# functions/local.py's bounded collect of the materialized vocab
+# checkpoint.
 BPE_LOCAL_VOCAB_CAP = 200_000
-
-
-def _bpe_local_cap(spark: SparkSession) -> int:
-    """`spark_graft.bpe.local_train.max_vocab` (0 disables the local
-    path outright — the distributed-loop kill switch for tests and for
-    deployments with tighter driver memory)."""
-    return int(
-        spark.conf.get(
-            "spark_graft.bpe.local_train.max_vocab",
-            str(BPE_LOCAL_VOCAB_CAP),
-        )
-    )
 
 
 def _bpe_apply_fold_local(s: str, m: dict) -> str:
@@ -1509,31 +1499,16 @@ def _bpe_train_local(
                         index[p].add(w)
             state[w][0] = s_new
 
-    b_schema = (
-        "batch array<struct<s1:string,s2:string,pair_count:bigint>>,"
-        " m map<string,string>"
-    )
-    # Arrow-backed local relations (r16, VERDICT r15 next-#4): the list
-    # path pickles a Python RDD that every downstream ACTION (the
-    # per-round apply joins, the tokenize corpus join) re-ships through
-    # a Python worker; pandas+Arrow lands as a JVM LocalTableScan —
-    # nested array<struct>/map included (verified identical rows). All
-    # rounds ride ONE Arrow frame sliced per round (each slice is a
+    # all rounds ride ONE local frame sliced per round (each slice is a
     # filtered LocalTableScan with the identical 1 row): a per-round
-    # createDataFrame paid ~20 ms x BPE_ITERS of py4j/Arrow call
-    # overhead per training call.
-    import pandas as pd
-
+    # frame paid ~20 ms x BPE_ITERS of py4j/Arrow call overhead per
+    # training call
     if batches_local:
-        allb = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "r": list(range(len(batches_local))),
-                    "batch": [sel for sel, _m in batches_local],
-                    "m": [m for _sel, m in batches_local],
-                }
-            ),
-            schema="r int, " + b_schema,
+        allb = local.local_frame(
+            spark,
+            [(i, sel, m) for i, (sel, m) in enumerate(batches_local)],
+            "r int, batch array<struct<s1:string,s2:string,"
+            "pair_count:bigint>>, m map<string,string>",
         )
         batches = [
             allb.where(F.col("r") == i).select("batch", "m")
@@ -1541,12 +1516,10 @@ def _bpe_train_local(
         ]
     else:
         batches = []
-    vocab = spark.createDataFrame(
-        pd.DataFrame(
-            [(w, s, freq) for w, (s, freq) in state.items()],
-            columns=["w", "s", "freq"],
-        ),
-        schema="w string, s string, freq bigint",
+    vocab = local.local_frame(
+        spark,
+        [(w, s, freq) for w, (s, freq) in state.items()],
+        "w string, s string, freq bigint",
     )
     return batches, vocab
 
@@ -1600,14 +1573,13 @@ def _bpe_train(
     )
     cur = vocab.localCheckpoint(eager=True)
     n_rounds = BPE_ITERS if iters is None else iters
-    cap = _bpe_local_cap(spark)
     # scale gate (OPTIMIZATION_r15 change 5): a bounded vocabulary
     # trains driver-side — one collect of the already-materialized
     # word table instead of ~5 Spark jobs per round; the distributed
     # delta-maintained loop below is the web-scale path and runs
     # whenever the vocabulary is genuinely unbounded
-    if cap > 0 and cur.count() <= cap:
-        rows = cur.collect()
+    rows = local.bounded_collect(cur, BPE_LOCAL_VOCAB_CAP)
+    if rows is not None:
         release(cur)
         return _bpe_train_local(spark, rows, n_rounds)
 

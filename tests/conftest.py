@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -23,3 +24,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def gates_off():
+    """A context manager that sends every bounded-state gate (CC labels,
+    BPE training, the k-means and PQ fits) to its distributed loop:
+    inside it ``functions.local.bounded_collect`` refuses every frame.
+    It yields the list of caps the refused calls asked for, so a test
+    can check that a gate was reached."""
+    from unittest import mock
+
+    from datafusion_loki_spark.functions import local
+
+    @contextlib.contextmanager
+    def off():
+        calls: list = []
+
+        def refuse(df, cap):
+            calls.append(cap)
+            return None
+
+        with mock.patch.object(local, "bounded_collect", refuse):
+            yield calls
+
+    return off

@@ -140,7 +140,7 @@ def test_bpe_production_budget_consumes_4096_merges(spark, wide_alpha_dir):
     assert ok, msg
 
 
-def test_bpe_local_matches_distributed(spark, crafted_dir):
+def test_bpe_local_matches_distributed(spark, crafted_dir, gates_off):
     # OPTIMIZATION_r15 change 5: the scale gate sends bounded
     # vocabularies through the driver-side loop; this pins the two
     # paths bit-identical (merge batches, maps, final vocab) on the
@@ -156,12 +156,9 @@ def test_bpe_local_matches_distributed(spark, crafted_dir):
 
     b_loc, v_loc = _bpe_train(spark, crafted_dir, iters=6)
     local = snap(b_loc, v_loc)
-    spark.conf.set("spark_graft.bpe.local_train.max_vocab", "0")
-    try:
+    with gates_off():
         b_dist, v_dist = _bpe_train(spark, crafted_dir, iters=6)
         dist = snap(b_dist, v_dist)
-    finally:
-        spark.conf.unset("spark_graft.bpe.local_train.max_vocab")
     assert local == dist
 
 

@@ -10,6 +10,11 @@ import time
 import pytest
 
 
+def _live_ids(spark) -> set:
+    jsc = spark.sparkContext._jsc
+    return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+
 def _readable(df) -> bool:
     try:
         df.count()
@@ -18,7 +23,7 @@ def _readable(df) -> bool:
         return False
 
 
-def test_cc_distributed_loop_spares_concurrent_checkpoints(spark):
+def test_cc_distributed_loop_spares_concurrent_checkpoints(spark, gates_off):
     # a chain's labels need one fixpoint round per hop, so the
     # distributed loop releases ~12 dead rounds while the second thread
     # checkpoints beside it
@@ -41,14 +46,13 @@ def test_cc_distributed_loop_spares_concurrent_checkpoints(spark):
             time.sleep(0.05)
 
     side = threading.Thread(target=checkpoint_beside)
-    spark.conf.set("spark_graft.cc.local_labels.max_edges", "0")
     side.start()
     try:
-        labels = sorted(map(tuple, _cc_labels(sym).collect()))
+        with gates_off():
+            labels = sorted(map(tuple, _cc_labels(sym).collect()))
     finally:
         stop.set()
         side.join()
-        spark.conf.unset("spark_graft.cc.local_labels.max_edges")
     unreadable = [i for i, f in enumerate(frames) if not _readable(f)]
     assert frames and not unreadable, (
         f"{len(unreadable)} of {len(frames)} concurrent checkpoints freed"
@@ -67,21 +71,28 @@ def test_release_frees_only_its_own_checkpoint(spark):
 
     from datafusion_loki_spark.functions.checkpoints import release
 
-    jsc = spark.sparkContext._jsc
-
-    def live_ids() -> set:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
     a = spark.range(10).localCheckpoint(eager=True)
     b = spark.range(5).localCheckpoint(eager=True)
     a_id = a._jdf.logicalPlan().rdd().id()
     b_id = b._jdf.logicalPlan().rdd().id()
-    assert {a_id, b_id} <= live_ids()
+    assert {a_id, b_id} <= _live_ids(spark)
     release(a)
-    assert a_id not in live_ids() and b_id in live_ids()
+    assert a_id not in _live_ids(spark) and b_id in _live_ids(spark)
     assert b.count() == 5
     # a frame that is no checkpoint has no RDD to release: fail loudly
     with pytest.raises(Py4JError):
         release(spark.range(3))
     release(b)
-    assert b_id not in live_ids()
+    assert b_id not in _live_ids(spark)
+
+
+def test_cc_groups_leaves_no_checkpoint_behind(spark, sf_dir):
+    # the labels read neither the LSH edge checkpoint (local path: a
+    # local relation) nor any fixpoint round but the last, so the call
+    # releases the edges instead of leaving them to the ContextCleaner
+    from datafusion_loki_spark.operators.dedup import dedup_cc_groups
+
+    before = _live_ids(spark)
+    labels = dedup_cc_groups(spark, sf_dir)
+    assert labels.count() > 0
+    assert _live_ids(spark) - before == set()

@@ -30,6 +30,66 @@ def test_query_parity(name, spark, sf_dir, con):
     assert ok, f"{name}: {msg}"
 
 
+# registry faces that reach a bounded-state gate (functions/local.py:
+# CC labels, BPE training, the k-means and PQ fits) at sf0.001
+_GATED = (
+    # CC labels
+    "dedup_cc_groups",
+    "dedup_keep_list",
+    "dedup_canonical_by_rank",
+    "dedup_pipeline_funnel",
+    "mix_quality_vs_dedup",
+    "corpus_build_manifest",
+    # CC labels and the k-means fit
+    "mm_dedup_keep_list",
+    "mm_pipeline_funnel",
+    "mm_corpus_manifest",
+    "corpus_ship_card",
+    # BPE training
+    "text_bpe_vocab",
+    "text_tokenize_bpe",
+    "text_tokenize_bpe_oov",
+    # the k-means or PQ fit
+    "sim_ivf_index_topk",
+    "sim_ivf_index_append",
+    "sim_ivf_index_delete",
+    "sim_ivf_index_retrain",
+    "sim_ivf_snapshot_reads",
+    "sim_ivf_kmeans_topk",
+    "sim_pq_adc_topk",
+    "emb_kmeans_assign",
+    "sim_cell_balance",
+    "sim_probe_recall_curve",
+    "sim_recall_audit",
+    "sim_pq_recall_audit",
+    "dedup_semantic_cluster",
+    "mm_semantic_dedup",
+    "dedup_lexical_vs_semantic",
+)
+
+_SWITCHES = (
+    "spark_graft.overlap.enabled",
+    "spark_graft.scan_fanout.enabled",
+    "spark_graft.spread.enabled",
+)
+
+
+@pytest.mark.parametrize("name", _GATED)
+def test_query_parity_gates_off(name, spark, sf_dir, con, gates_off):
+    # every scale-gated fast path against the oracle through its
+    # distributed twin, with overlap, scan fan-out and spread off too
+    for key in _SWITCHES:
+        spark.conf.set(key, "false")
+    try:
+        with gates_off() as refused:
+            ok, msg = compare(_QUERIES[name](spark, sf_dir), _ORACLES[name], con)
+    finally:
+        for key in _SWITCHES:
+            spark.conf.unset(key)
+    assert refused, f"{name} reached no bounded-state gate"
+    assert ok, f"{name}: {msg}"
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

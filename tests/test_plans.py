@@ -470,7 +470,7 @@ def test_kmeans_assign_kernel_matches_fold(spark, sf_dir):
     assert new.count() == emb_d.count()
 
 
-def test_kmeans_local_fit_matches_distributed(spark, sf_dir):
+def test_kmeans_local_fit_matches_distributed(spark, sf_dir, gates_off):
     # OPTIMIZATION_r15 change 9: the scale-gated driver-side Lloyd
     # replay must be BIT-identical to the distributed loop — same
     # assignment doubles (exact equality via IS DISTINCT FROM) and the
@@ -489,12 +489,9 @@ def test_kmeans_local_fit_matches_distributed(spark, sf_dir):
     train = emb_d.where(F.expr(S._TRAIN_PRED_SPARK))
     seeds = emb_d.orderBy("vec_id").limit(S.KMEANS_K)
     for seeds_d in (None, seeds):
-        spark.conf.set(S._KMEANS_LOCAL_FIT_CONF, "0")
-        try:
+        with gates_off():
             a_dist, c_dist = S._kmeans_fit(emb_d, train, seeds_d=seeds_d)
             c_dist_rows = c_dist.collect()
-        finally:
-            spark.conf.unset(S._KMEANS_LOCAL_FIT_CONF)
         a_loc, c_loc = S._kmeans_fit(emb_d, train, seeds_d=seeds_d)
         loc_plan = c_loc._jdf.queryExecution().executedPlan().toString()
         # r16: the local codebook is an Arrow LocalTableScan (was r15's
@@ -515,20 +512,17 @@ def test_kmeans_local_fit_matches_distributed(spark, sf_dir):
         assert a_loc.count() == emb_d.count()
 
 
-def test_pq_local_fit_matches_distributed(spark, sf_dir):
+def test_pq_local_fit_matches_distributed(spark, sf_dir, gates_off):
     # OPTIMIZATION_r15 change 12: the PQ fused training's driver-side
     # replay (per-subspace _local_lloyd over the collected sample) must
     # yield the identical query output to the distributed chain — exact
     # Row equality including every cosine double.
     from datafusion_loki_spark.operators import similarity as S
 
-    spark.conf.set(S._KMEANS_LOCAL_FIT_CONF, "0")
-    try:
+    with gates_off():
         dist = sorted(
             map(tuple, S.sim_pq_adc_topk(spark, sf_dir).collect())
         )
-    finally:
-        spark.conf.unset(S._KMEANS_LOCAL_FIT_CONF)
     loc = sorted(map(tuple, S.sim_pq_adc_topk(spark, sf_dir).collect()))
     assert loc == dist
     assert len(loc) > 0
@@ -825,7 +819,7 @@ def test_cc_groups_labels_are_consistent(spark, sf_dir):
         assert lbl == min(members)
 
 
-def test_cc_local_matches_distributed(spark, sf_dir):
+def test_cc_local_matches_distributed(spark, sf_dir, gates_off):
     # OPTIMIZATION_r15 change 7: the scale gate sends candidate-scale
     # edge lists through driver-side union-find; this pins the two paths
     # bit-identical on the real LSH graph — and keeps the DISTRIBUTED
@@ -834,11 +828,8 @@ def test_cc_local_matches_distributed(spark, sf_dir):
     from datafusion_loki_spark.operators.dedup import dedup_cc_groups
 
     local = sorted(map(tuple, dedup_cc_groups(spark, sf_dir).collect()))
-    spark.conf.set("spark_graft.cc.local_labels.max_edges", "0")
-    try:
+    with gates_off():
         dist = sorted(map(tuple, dedup_cc_groups(spark, sf_dir).collect()))
-    finally:
-        spark.conf.unset("spark_graft.cc.local_labels.max_edges")
     assert local and local == dist
 
 
@@ -867,7 +858,7 @@ def test_overlap_helper_order_kill_switch_and_errors(spark):
         materialize_concurrently(spark, lambda: 1, boom)
 
 
-def test_overlap_kill_switch_matches_concurrent(spark, sf_dir):
+def test_overlap_kill_switch_matches_concurrent(spark, sf_dir, gates_off):
     # change 8 changes WHEN the eager sub-DAGs run, never what they
     # compute: the sequential (kill-switch) composition must emit the
     # identical keep-list
@@ -879,13 +870,10 @@ def test_overlap_kill_switch_matches_concurrent(spark, sf_dir):
         seq = sorted(map(tuple, dedup_keep_list(spark, sf_dir).collect()))
     finally:
         spark.conf.unset("spark_graft.overlap.enabled")
-    # CC cap 0: the distributed label loop releases its dead rounds on
+    # gates off: the distributed label loop releases its dead rounds on
     # one overlap thread while winnowing checkpoints on the other
-    spark.conf.set("spark_graft.cc.local_labels.max_edges", "0")
-    try:
+    with gates_off():
         dist = sorted(map(tuple, dedup_keep_list(spark, sf_dir).collect()))
-    finally:
-        spark.conf.unset("spark_graft.cc.local_labels.max_edges")
     assert conc and conc == seq == dist
 
 
@@ -1140,17 +1128,16 @@ def test_bpe_vocab_iterates_at_vocab_scale(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_bpe_vocab_distributed_path_iterates_at_vocab_scale(spark, sf_dir):
+def test_bpe_vocab_distributed_path_iterates_at_vocab_scale(
+    spark, sf_dir, gates_off
+):
     # the web-scale (above-cap) loop keeps its round-14 shape: vocab
     # state is checkpointed RDDs, zero corpus re-reads, argmax rides a
     # broadcast — pinned with the local gate disabled so the
     # distributed path stays plan-tested now that every test corpus
     # trains driver-side
-    spark.conf.set("spark_graft.bpe.local_train.max_vocab", "0")
-    try:
+    with gates_off():
         plan = _plan(spark, sf_dir, "text_bpe_vocab")
-    finally:
-        spark.conf.unset("spark_graft.bpe.local_train.max_vocab")
     n_scans = plan.count("Scan parquet") or plan.count("FileScan")
     assert n_scans == 0, plan
     assert "Scan ExistingRDD" in plan, plan

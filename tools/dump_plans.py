@@ -9,8 +9,10 @@ expressions).
 
 With ``--round``, write one file per query for a before/after plan
 comparison: ``plans/<round>/<query>_<tag>.txt`` for each named query
-(default: all headline BENCH_QUERIES). Dump both sides from fresh
-sessions with the same query order, so the ``#id``s line up.
+(default: all headline BENCH_QUERIES). These dumps mask the tokens that
+change from run to run of the same code (``mask``): plan ids,
+expression ``#id``s, RDD ids, the application id and the scratch-index
+snapshot names. Two dumps of unchanged code then ``cmp`` equal.
 
 Usage:
     python tools/dump_plans.py                              # PLANS.md
@@ -24,10 +26,34 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+
+# (pattern, replacement) for each run-dependent token of a formatted plan
+_RUN_TOKENS = (
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\blocal-\d+"), "local-N"),
+    (re.compile(r"\bbase-v\d+-[0-9a-f]+"), "base-vN-HEX"),
+    (
+        re.compile(
+            r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"
+        ),
+        "UUID",
+    ),
+)
+
+
+def mask(plan: str) -> str:
+    """``plan`` with every run-dependent token replaced by a fixed one."""
+    for pattern, repl in _RUN_TOKENS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def _formatted(df) -> str:
@@ -62,7 +88,7 @@ def main() -> None:
         for name in names or BENCH_QUERIES:
             path = os.path.join(out_dir, f"{name}_{tag}.txt")
             with open(path, "w") as f:
-                f.write(_formatted(queries[name](spark, sf_dir)) + "\n")
+                f.write(mask(_formatted(queries[name](spark, sf_dir))) + "\n")
             print("wrote", path)
         spark.stop()
         return
