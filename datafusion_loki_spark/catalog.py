@@ -19,19 +19,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -116,9 +103,7 @@ def scan_fanout(
     cannot fill the cluster, repartition round-robin to the default
     parallelism; on a 100 TB input the estimate is thousands of tasks
     and this is a provable no-op (no exchange in the plan), so payload
-    bytes still never shuffle at scale. `spark_graft.scan_fanout.enabled
-    = false` disables it outright for deployments that want the scan
-    shape untouched.
+    bytes still never shuffle at scale.
 
     Opt-in per call-site (`load_table(..., fanout=True)` /
     `media_table(..., fanout=True)`), NOT automatic: measured this
@@ -145,11 +130,6 @@ def scan_fanout(
     would otherwise coalesce the pre-explode exchange by its INPUT
     size — a few MB of document rows — onto one task and serialize
     the gram explode behind it."""
-    if (
-        spark.conf.get("spark_graft.scan_fanout.enabled", "true")
-        != "true"
-    ):
-        return df
     target = spark.sparkContext.defaultParallelism
     if key is not None:
         return df.repartition(target, F.col(key))
@@ -183,8 +163,3 @@ def load_table(
         )
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register every driver table as a temp view named after itself."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -20,21 +20,13 @@ thunk is the identical eager call the operator previously made inline.
 from concurrent.futures import ThreadPoolExecutor
 
 
-def materialize_concurrently(spark, *thunks):
+def materialize_concurrently(*thunks):
     """Run each thunk on its own driver thread and return their results
     as a tuple in thunk order. Intended for independent EAGER
     materializations (localCheckpoint(eager=True), index builds,
-    bounded collects); a single thunk degrades to a plain call, and
-    `spark_graft.overlap.enabled=false` is the sequential kill switch
-    (same calls, original order)."""
-    enabled = (
-        str(
-            spark.conf.get("spark_graft.overlap.enabled", "true")
-        ).lower()
-        == "true"
-    )
-    if not enabled or len(thunks) == 1:
-        return tuple(t() for t in thunks)
+    bounded collects); a single thunk degrades to a plain call."""
+    if len(thunks) == 1:
+        return (thunks[0](),)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return tuple(f.result() for f in futures)

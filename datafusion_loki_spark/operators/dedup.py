@@ -83,11 +83,8 @@ def _spread(df: DataFrame, *keys: str) -> DataFrame:
     grouping key costs one narrow shuffle of the raw rows, and the later
     groupBy on the same key REUSES the exchange — net extra shuffles: zero.
     On a 100 TB input the scan already has thousands of splits and this is
-    a no-op — but the getNumPartitions PROBE still forces an RDD-conversion
-    analysis pass on the driver per invocation, so a cluster deployment
-    sets spark_graft.spread.enabled=false to keep plans clean of it."""
-    if df.sparkSession.conf.get("spark_graft.spread.enabled", "true") != "true":
-        return df
+    a no-op; only the getNumPartitions probe (one driver-side
+    RDD-conversion analysis pass per call) remains."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, *keys)
@@ -575,7 +572,6 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sub-DAGs — overlap their jobs (guide §2.6) instead of running the
     # second only after the first's straggler tail drains
     cc_labels, winnow_pairs = materialize_concurrently(
-        spark,
         lambda: dedup_cc_groups(spark, sf_dir),
         lambda: dedup_winnowing(spark, sf_dir),
     )
@@ -1500,7 +1496,6 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     mh0, sh0 = materialize_concurrently(
-        spark,
         lambda: dedup_minhash_lsh(spark, sf_dir).localCheckpoint(
             eager=True
         ),
@@ -1754,7 +1749,6 @@ def dedup_winnow_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     mh0, wn0 = materialize_concurrently(
-        spark,
         lambda: dedup_minhash_lsh(spark, sf_dir)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True),

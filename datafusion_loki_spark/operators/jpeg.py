@@ -66,14 +66,6 @@ for _u in range(8):
         _A[_u, _x] = _cu / 2.0 * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 
 
-def _idct2(coef):
-    return _A.T @ coef @ _A
-
-
-def _fdct2(block):
-    return _A @ block @ _A.T
-
-
 # entropy-code tables for the ENCODER: fixed-length canonical codes —
 # 12 DC categories at 4 bits; the 162 sequential AC run/size symbols
 # plus the 14 progressive EOBn symbols (r<<4 for r=1..14, the

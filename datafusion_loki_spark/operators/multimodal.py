@@ -20,7 +20,6 @@ exabyte of video reads only the metadata bytes.
 
 from __future__ import annotations
 
-import os
 import struct
 from typing import Callable, Iterator
 
@@ -28,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_loki_spark.catalog import load_table
+from datafusion_loki_spark.functions.checkpoints import release
 
 FEATURE_SCHEMA = (
     "doc_id long, media_type string, width int, height int, n_frames int,"
@@ -1435,88 +1435,7 @@ def encode_png_frames(frames, plays: int = 0) -> bytes:
     return bytes(out)
 
 
-# --- decode backend hook (round 15, verdict Next #3) -------------------
-# The native-codec swap point, as CONFIG instead of a code change: set
-# SPARK_GRAFT_DECODE_BACKEND to route decode_image through a native
-# library. The env var (not module state) is the dispatch channel
-# because the kernel runs inside mapInPandas Python workers — a value
-# set on the driver's module would never reach them, while local-mode
-# workers inherit the environment and a real cluster ships it via
-# spark.executorEnv. Accepted values:
-#
-#   "pure" (default)      — the verified pure stdlib+numpy decoders.
-#   "pil"                 — route through PIL WHEN PRESENT; if PIL is
-#                           not importable in the worker the call falls
-#                           back to the pure decoders (the swap is "use
-#                           the native library where it exists", never
-#                           "fail where it doesn't").
-#   "pkg.module:function" — a dotted path to a callable
-#                           (payload: bytes) -> np.ndarray, resolved
-#                           lazily BY EACH WORKER (import-by-name is the
-#                           only registration that survives the process
-#                           boundary). Unresolvable paths raise loudly —
-#                           a config typo must not silently decode pure.
-#
-# Contract for any backend: same array conventions as the pure
-# decoders ((h, w[, ch]) uint8/uint16, lossless-WebP always RGBA,
-# palette formats expanded to RGB) — tests/test_decode_backend.py pins
-# backend-invariance of the kernel output with a fake native backend.
-_DECODE_BACKEND_ENV = "SPARK_GRAFT_DECODE_BACKEND"
-# name -> resolved callable; "pil" caches None when PIL is absent so
-# the import is attempted once per worker, not once per payload
-_DECODE_BACKEND_CACHE: "dict[str, Callable[[bytes], object] | None]" = {}
-
-
-def _pil_backend(payload: bytes):
-    """PIL-backed decode normalized to the pure decoders' conventions:
-    WebP forced to RGBA (the pure VP8L decoder always returns 4
-    channels), palette modes expanded to RGB (what the pure PNG/GIF/
-    TIFF palette paths return), everything else kept in PIL's native
-    mode (L -> (h, w), RGB -> (h, w, 3), RGBA -> (h, w, 4))."""
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    img = Image.open(io.BytesIO(payload))
-    if (img.format or "").upper() == "WEBP":
-        img = img.convert("RGBA")
-    elif img.mode == "P":
-        img = img.convert("RGB")
-    return np.asarray(img)
-
-
-def _resolve_decode_backend(name: str):
-    """Backend callable for ``name``, or None meaning 'fall back to
-    pure' (only the pil-absent case). Cached per worker process."""
-    if name in _DECODE_BACKEND_CACHE:
-        return _DECODE_BACKEND_CACHE[name]
-    if name == "pil":
-        try:
-            import PIL  # noqa: F401
-
-            fn = _pil_backend
-        except ImportError:
-            fn = None
-    elif ":" in name:
-        import importlib
-
-        mod_name, _, attr = name.partition(":")
-        fn = getattr(importlib.import_module(mod_name), attr)
-        if not callable(fn):
-            raise TypeError(
-                f"decode backend {name!r} resolved to non-callable {fn!r}"
-            )
-    else:
-        raise ValueError(
-            f"unknown decode backend {name!r}: expected 'pure', 'pil',"
-            " or a 'pkg.module:function' dotted path"
-        )
-    _DECODE_BACKEND_CACHE[name] = fn
-    return fn
-
-
-def decode_image(payload: bytes, backend: "str | None" = None):
+def decode_image(payload: bytes):
     """REAL decode dispatch. Codec-free formats decode with the pure-
     numpy parsers above; the compressed formats production corpora
     actually ship decode without any codec library — PNG (pure stdlib
@@ -1530,18 +1449,7 @@ def decode_image(payload: bytes, backend: "str | None" = None):
     'VP8 ' form raises ITS decoder's loud ValueError, never a fake).
     Only genuinely PIL-gated formats (lossy WebP via the dispatch's
     webp branch, AVIF, ...) hit the clearly-marked loud gate — the
-    swap-in point for PIL/libvips on a real cluster.
-
-    ``backend`` (explicit arg, else the SPARK_GRAFT_DECODE_BACKEND env
-    var — see the hook block above) routes the WHOLE dispatch through a
-    native decoder when one is present; the pure decoders remain both
-    the default and the documented fallback when the named 'pil'
-    backend has no PIL to import."""
-    name = backend or os.environ.get(_DECODE_BACKEND_ENV, "pure")
-    if name != "pure":
-        fn = _resolve_decode_backend(name)
-        if fn is not None:
-            return fn(payload)
+    swap-in point for PIL/libvips on a real cluster."""
     if payload[:2] == b"P6":
         return decode_ppm(payload)[2]
     if payload[:2] == b"P5":
@@ -4649,7 +4557,6 @@ def _mm_keep_list_frame(
     )
 
     built = materialize_concurrently(
-        spark,
         lambda: (
             mm_phash_neardup(spark, sf_dir)
             .select("doc_a", "doc_b")
@@ -4670,6 +4577,9 @@ def _mm_keep_list_frame(
         ).alias("e")
     ).select("e.src", "e.dst")
     cc = _cc_labels(sym).withColumnRenamed("cluster_id", "cc_label")
+    # neither label path reads the pair checkpoint again (the
+    # dedup_cc_groups rule)
+    release(pairs)
     # production swap: this digest is a pure GROUPING key (never reaches
     # the output), so a real deployment uses xxhash64(payload) — 4x
     # narrower keeper shuffle rows; md5 here only keeps the expression
@@ -5018,9 +4928,7 @@ def corpus_ship_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     # winnowing + classifier counts; media: phash pairs + semantic
     # index build + verdict checkpoint) are fully independent — build
     # them on driver threads so their jobs interleave (guide §2.6)
-    text_half, media_half = materialize_concurrently(
-        spark, _text_half, _media_half
-    )
+    text_half, media_half = materialize_concurrently(_text_half, _media_half)
     return text_half.unionByName(media_half)
 
 

@@ -1946,11 +1946,6 @@ PQ_M = 4  # subspaces; 64-dim embeddings → 4 × 16-dim subvectors
 PQ_SUB = 16
 
 
-def _pq_sub(col: str, s: int) -> str:
-    """1-based Spark slice of subspace ``s`` from a double-array column."""
-    return f"slice({col}, {s * PQ_SUB + 1}, {PQ_SUB})"
-
-
 def _seq_dot(a, b) -> float:
     """Ascending-index left-associated dot product — the exact IEEE
     fold `aggregate(sequence(...), 0.0d, (acc, i) -> acc + a[i]*b[i])`

@@ -15,7 +15,6 @@ not history. Both shuffle once on their grouping key per micro-batch.
 
 from __future__ import annotations
 
-import json
 import re
 import uuid
 from typing import Any, Iterator
@@ -1429,6 +1428,7 @@ def ivf_members_versioned(
     tombstones swallowed re-ingests and resurrected on fold)."""
     from datafusion_loki_spark.operators.similarity import (
         TOMBSTONE_BASE_GEN,
+        _index_fs,
         _read_members,
         _subtract_tombstones,
         resolve_index_base,
@@ -1454,7 +1454,7 @@ def ivf_members_versioned(
     # fs.exists; one probe per delete/retrain call). The try/except
     # stays for the existing-but-data-less directory terminal state.
     ingest_path = f"{base_dir}/members_ingest.parquet"
-    _, fs, jpath = _ingest_fs(spark, ingest_path)
+    _, fs, jpath = _index_fs(spark, ingest_path)
     if not fs.exists(jpath):
         return _subtract_tombstones(spark, base_dir, base, versioned=True)
     try:
@@ -1528,14 +1528,6 @@ def ivf_members_versioned(
 _INGEST_MANIFEST_RE = re.compile(r"manifest-v(\d+)\.json$")
 
 
-def _ingest_fs(spark: SparkSession, path: str):
-    # one definition repo-wide (round-10 review): the index side grew an
-    # identical helper — alias it so a fix can never diverge
-    from datafusion_loki_spark.operators.similarity import _index_fs
-
-    return _index_fs(spark, path)
-
-
 # manifest temps younger than this are presumed to belong to a live
 # concurrent attempt and are left for a later run's GC (ADVICE r9: the
 # post-commit sweep could delete an in-flight attempt's temp)
@@ -1574,7 +1566,9 @@ def _list_ingest_state(spark: SparkSession, ingest_path: str):
     ``tmp_entries`` are (name, modification_ms) for ``.manifest-*.tmp``
     files: crashed attempts' nonce'd temps, but possibly also a LIVE
     concurrent attempt's in-flight temp — GC must age-gate them."""
-    jvm, fs, jpath = _ingest_fs(spark, ingest_path)
+    from datafusion_loki_spark.operators.similarity import _index_fs
+
+    jvm, fs, jpath = _index_fs(spark, ingest_path)
     real, compacted, manifests, tmps = [], [], [], []
     if not fs.exists(jpath):
         return real, compacted, manifests, tmps
@@ -1595,20 +1589,15 @@ def _list_ingest_state(spark: SparkSession, ingest_path: str):
 def _read_ingest_manifest(spark: SparkSession, base_dir: str):
     """The highest-version manifest, or None (never compacted).
     ``base_dir`` is a RESOLVED snapshot dir (resolve_index_base)."""
+    from datafusion_loki_spark.functions.layout import read_json_file
+
     ingest_path = f"{base_dir}/members_ingest.parquet"
     _, _, versions, _ = _list_ingest_state(spark, ingest_path)
     if not versions:
         return None
-    jvm, fs, _ = _ingest_fs(spark, ingest_path)
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{ingest_path}/manifest-v{versions[-1]}.json"
+    return read_json_file(
+        spark, f"{ingest_path}/manifest-v{versions[-1]}.json"
     )
-    stream = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
 
 
 def _write_ingest_manifest(spark: SparkSession, base_dir: str, manifest: dict):
@@ -1628,12 +1617,6 @@ def _write_ingest_manifest(spark: SparkSession, base_dir: str, manifest: dict):
         f"manifest-v{manifest['version']}.json",
         manifest,
     )
-
-
-def _count_ingest_files(spark: SparkSession, ingest_path: str) -> int:
-    from datafusion_loki_spark.functions.layout import count_parquet_files
-
-    return count_parquet_files(spark, ingest_path)
 
 
 def compact_ivf_ingest(
@@ -1656,13 +1639,15 @@ def compact_ivf_ingest(
     and live generations are never rewritten."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the redelivery window)")
+    from datafusion_loki_spark.functions.layout import count_parquet_files
     from datafusion_loki_spark.operators.similarity import (
+        _index_fs,
         resolve_index_base,
     )
 
     base_dir = resolve_index_base(spark, index_dir)
     ingest_path = f"{base_dir}/members_ingest.parquet"
-    files_before = _count_ingest_files(spark, ingest_path)
+    files_before = count_parquet_files(spark, ingest_path)
     manifest = _read_ingest_manifest(spark, base_dir)
     prev_version = manifest["version"] if manifest else 0
     prev_cutoff = manifest["folded_upto"] if manifest else -1
@@ -1671,7 +1656,7 @@ def compact_ivf_ingest(
     real, compacted, manifest_versions, pre_tmps = _list_ingest_state(
         spark, ingest_path
     )
-    jvm, fs, _ = _ingest_fs(spark, ingest_path)
+    jvm, fs, _ = _index_fs(spark, ingest_path)
 
     def gc() -> None:
         for g in real:
@@ -1728,7 +1713,7 @@ def compact_ivf_ingest(
             "folded_gens": 0,
             "rows_compacted": 0,
             "files_before": files_before,
-            "files_after": _count_ingest_files(spark, ingest_path),
+            "files_after": count_parquet_files(spark, ingest_path),
             "active_gen": active_gen,
         }
 
@@ -1833,6 +1818,6 @@ def compact_ivf_ingest(
         "folded_gens": len(fold),
         "rows_compacted": rows,
         "files_before": files_before,
-        "files_after": _count_ingest_files(spark, ingest_path),
+        "files_after": count_parquet_files(spark, ingest_path),
         "active_gen": new_gen,
     }

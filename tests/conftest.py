@@ -49,3 +49,31 @@ def gates_off():
             yield calls
 
     return off
+
+
+@pytest.fixture
+def fast_paths_off():
+    """A context manager that takes every scale-adaptive fast path off
+    the plan: inside it ``catalog.scan_fanout`` and ``dedup._spread``
+    return their input frame, and ``overlap.materialize_concurrently``
+    calls its thunks one after another, in order."""
+    from unittest import mock
+
+    from datafusion_loki_spark import catalog
+    from datafusion_loki_spark.functions import overlap
+    from datafusion_loki_spark.operators import dedup
+
+    @contextlib.contextmanager
+    def off():
+        with mock.patch.object(
+            catalog, "scan_fanout", lambda df, *a, **k: df
+        ), mock.patch.object(
+            dedup, "_spread", lambda df, *keys: df
+        ), mock.patch.object(
+            overlap,
+            "materialize_concurrently",
+            lambda *thunks: tuple(t() for t in thunks),
+        ):
+            yield
+
+    return off

@@ -96,3 +96,28 @@ def test_cc_groups_leaves_no_checkpoint_behind(spark, sf_dir):
     labels = dedup_cc_groups(spark, sf_dir)
     assert labels.count() > 0
     assert _live_ids(spark) - before == set()
+
+
+
+def test_mm_keep_list_releases_phash_pairs(spark, sf_dir):
+    # the CC labels read the phash pair checkpoint only while they are
+    # built, so the call releases it. Every checkpoint the call makes is
+    # held here, so the ContextCleaner cannot free one in its place.
+    from unittest import mock
+
+    from datafusion_loki_spark.operators.multimodal import mm_dedup_keep_list
+
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    made: list = []
+
+    def recording(self, *args, **kwargs):
+        made.append(real(self, *args, **kwargs))
+        return made[-1]
+
+    with mock.patch.object(cls, "localCheckpoint", recording):
+        assert mm_dedup_keep_list(spark, sf_dir).collect()
+    live = _live_ids(spark)
+    pairs = [f for f in made if f.columns == ["doc_a", "doc_b"]]
+    assert pairs
+    assert all(f._jdf.logicalPlan().rdd().id() not in live for f in pairs)

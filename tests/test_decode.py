@@ -157,6 +157,13 @@ def test_decode_image_dispatches_to_pure_parsers():
     assert decode_image(ww)[0, 0].tolist() == [5, 6, 7, 255]
     with pytest.raises(ValueError):
         decode_image(b"RIFF\x08\x00\x00\x00WEBP not really")
+    # baseline TIFF dispatches to the pure decoder in both byte orders
+    from datafusion_loki_spark.operators.tiff import encode_tiff
+
+    px = np.array([[[4, 5, 6], [7, 8, 9]]], dtype=np.uint8)
+    for big_endian in (False, True):
+        tt = encode_tiff(px, big_endian=big_endian)
+        assert decode_image(tt).tolist() == px.tolist()
     # formats with no pure parser still hit the loud PIL gate (AVIF)
     try:
         import PIL  # noqa: F401

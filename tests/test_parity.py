@@ -67,25 +67,14 @@ _GATED = (
     "dedup_lexical_vs_semantic",
 )
 
-_SWITCHES = (
-    "spark_graft.overlap.enabled",
-    "spark_graft.scan_fanout.enabled",
-    "spark_graft.spread.enabled",
-)
-
-
 @pytest.mark.parametrize("name", _GATED)
-def test_query_parity_gates_off(name, spark, sf_dir, con, gates_off):
+def test_query_parity_gates_off(
+    name, spark, sf_dir, con, gates_off, fast_paths_off
+):
     # every scale-gated fast path against the oracle through its
     # distributed twin, with overlap, scan fan-out and spread off too
-    for key in _SWITCHES:
-        spark.conf.set(key, "false")
-    try:
-        with gates_off() as refused:
-            ok, msg = compare(_QUERIES[name](spark, sf_dir), _ORACLES[name], con)
-    finally:
-        for key in _SWITCHES:
-            spark.conf.unset(key)
+    with fast_paths_off(), gates_off() as refused:
+        ok, msg = compare(_QUERIES[name](spark, sf_dir), _ORACLES[name], con)
     assert refused, f"{name} reached no bounded-state gate"
     assert ok, f"{name}: {msg}"
 

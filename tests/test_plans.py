@@ -784,21 +784,6 @@ def test_mix_token_budget_single_agg_shuffle(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") <= 2, plan
 
 
-def test_spread_conf_gate_bypasses_rdd_probe(spark, sf_dir):
-    # Cluster deployments disable the local scan-split widener so plans
-    # stay clean of the per-invocation RDD-conversion probe; the gate must
-    # return the input frame untouched.
-    from datafusion_loki_spark.catalog import load_table
-    from datafusion_loki_spark.operators import dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    spark.conf.set("spark_graft.spread.enabled", "false")
-    try:
-        assert dedup._spread(docs, "doc_id") is docs
-    finally:
-        spark.conf.set("spark_graft.spread.enabled", "true")
-
-
 def test_cc_groups_labels_are_consistent(spark, sf_dir):
     # Every LSH edge's endpoints must share a cluster label (fixpoint
     # reached), and each cluster's label is its minimum member id.
@@ -833,10 +818,9 @@ def test_cc_local_matches_distributed(spark, sf_dir, gates_off):
     assert local and local == dist
 
 
-def test_overlap_helper_order_kill_switch_and_errors(spark):
-    # OPTIMIZATION_r15 change 8: results come back in thunk order
-    # (concurrent and sequential), the conf kill switch forces the
-    # sequential path, and a thunk's exception propagates unchanged
+def test_overlap_helper_order_kill_switch_and_errors():
+    # OPTIMIZATION_r15 change 8: results come back in thunk order and a
+    # thunk's exception propagates unchanged
     from datafusion_loki_spark.functions.overlap import (
         materialize_concurrently,
     )
@@ -845,31 +829,23 @@ def test_overlap_helper_order_kill_switch_and_errors(spark):
         raise ValueError("boom")
 
     assert materialize_concurrently(
-        spark, lambda: 1, lambda: 2, lambda: 3
+        lambda: 1, lambda: 2, lambda: 3
     ) == (1, 2, 3)
-    spark.conf.set("spark_graft.overlap.enabled", "false")
-    try:
-        assert materialize_concurrently(
-            spark, lambda: "a", lambda: "b"
-        ) == ("a", "b")
-    finally:
-        spark.conf.unset("spark_graft.overlap.enabled")
     with pytest.raises(ValueError):
-        materialize_concurrently(spark, lambda: 1, boom)
+        materialize_concurrently(lambda: 1, boom)
 
 
-def test_overlap_kill_switch_matches_concurrent(spark, sf_dir, gates_off):
+def test_overlap_kill_switch_matches_concurrent(
+    spark, sf_dir, gates_off, fast_paths_off
+):
     # change 8 changes WHEN the eager sub-DAGs run, never what they
-    # compute: the sequential (kill-switch) composition must emit the
-    # identical keep-list
+    # compute: the sequential composition must emit the identical
+    # keep-list
     from datafusion_loki_spark.operators.dedup import dedup_keep_list
 
     conc = sorted(map(tuple, dedup_keep_list(spark, sf_dir).collect()))
-    spark.conf.set("spark_graft.overlap.enabled", "false")
-    try:
+    with fast_paths_off():
         seq = sorted(map(tuple, dedup_keep_list(spark, sf_dir).collect()))
-    finally:
-        spark.conf.unset("spark_graft.overlap.enabled")
     # gates off: the distributed label loop releases its dead rounds on
     # one overlap thread while winnowing checkpoints on the other
     with gates_off():
@@ -1402,9 +1378,8 @@ def test_scan_fanout_shape(spark, sf_dir, monkeypatch):
     # the adaptive scan fan-out (catalog.scan_fanout, OPTIMIZATION_r15
     # change 1): a single-split documents read gains exactly ONE
     # round-robin exchange sized to the default parallelism; the
-    # kill-switch conf and the at-scale estimate both leave the scan
-    # untouched — so at 100 TB (thousands of scan tasks) payloads still
-    # never cross an exchange
+    # at-scale estimate leaves the scan untouched — so at 100 TB
+    # (thousands of scan tasks) payloads still never cross an exchange
     from datafusion_loki_spark import catalog
 
     df = catalog.load_table(spark, sf_dir, "documents", fanout=True)
@@ -1422,16 +1397,6 @@ def test_scan_fanout_shape(spark, sf_dir, monkeypatch):
         .executedPlan()
         .toString()
     )
-    # kill switch: plan untouched even when the site opts in
-    spark.conf.set("spark_graft.scan_fanout.enabled", "false")
-    try:
-        off = catalog.load_table(spark, sf_dir, "documents", fanout=True)
-        assert (
-            "Exchange"
-            not in off._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        spark.conf.set("spark_graft.scan_fanout.enabled", "true")
     # at-scale estimate (scan already fills the cluster): no-op
     monkeypatch.setattr(
         catalog, "_est_scan_tasks", lambda path: 10_000
