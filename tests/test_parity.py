@@ -67,6 +67,7 @@ _GATED = (
     "dedup_lexical_vs_semantic",
 )
 
+
 @pytest.mark.parametrize("name", _GATED)
 def test_query_parity_gates_off(
     name, spark, sf_dir, con, gates_off, fast_paths_off
