@@ -510,21 +510,30 @@ def _cc_labels(sym: DataFrame) -> DataFrame:
     return labels
 
 
-ORACLE_DEDUP_CC = """
-WITH RECURSIVE {ctes},
-pairs AS (
-  {pairs}
-), edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
+def _cc_reach_ctes(pairs: str) -> str:
+    """The DuckDB connected-component block every CC oracle shares: the
+    symmetric `edges` of the (doc_a, doc_b) pair CTE named ``pairs``,
+    their `nodes`, and the recursive `reach` of (doc_id, lbl) — MIN(lbl)
+    per doc_id is the min-label the Spark propagation converges to.
+    Needs WITH RECURSIVE."""
+    return f"""edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM {pairs}
   UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
+  SELECT doc_b AS src, doc_a AS dst FROM {pairs}
 ), nodes AS (
   SELECT DISTINCT src AS doc_id FROM edges
 ), reach (doc_id, lbl) AS (
   SELECT doc_id, doc_id FROM nodes
   UNION
   SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id
-)
+)"""
+
+
+ORACLE_DEDUP_CC = f"""
+WITH RECURSIVE {{ctes}},
+pairs AS (
+  {{pairs}}
+), {_cc_reach_ctes("pairs")}
 SELECT doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY doc_id
 """
 
@@ -602,31 +611,21 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEDUP_KEEP_LIST = """
-WITH RECURSIVE {ctes},
+ORACLE_DEDUP_KEEP_LIST = f"""
+WITH RECURSIVE {{ctes}},
 pairs AS (
-  {pairs}
-), edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-), nodes AS (
-  SELECT DISTINCT src AS doc_id FROM edges
-), reach (doc_id, lbl) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id
-), cc AS (
+  {{pairs}}
+), {_cc_reach_ctes("pairs")}, cc AS (
   SELECT doc_id, MIN(lbl) AS cc_label FROM reach GROUP BY doc_id
 ), fp AS (
-  SELECT doc_id, md5({norm}) AS fingerprint FROM documents
+  SELECT doc_id, md5({{norm}}) AS fingerprint FROM documents
 ), keepers AS (
   SELECT fingerprint, MIN(doc_id) AS keeper_id FROM fp GROUP BY fingerprint
 ), wn AS MATERIALIZED (
   -- winnow pairs emit doc_a < doc_b: doc_b rows are the docs with a
   -- smaller-id winnow partner (MATERIALIZED: the whole gram chain
   -- must not re-inline into downstream compositions per reference)
-  SELECT DISTINCT doc_b AS doc_id FROM ({winnow_pairs}) wp
+  SELECT DISTINCT doc_b AS doc_id FROM ({{winnow_pairs}}) wp
 )
 SELECT fp.doc_id,
        CASE WHEN fp.doc_id != k.keeper_id THEN 'exact_dup'
@@ -1581,6 +1580,81 @@ WINNOW_BUCKET_CAP = 20  # per-fingerprint doc cap (the LSH_BUCKET_CAP role;
 # tighter than LSH's 50: the synthetic corpus's 31-word vocabulary makes
 # 8-char grams brutally common, and bucket cost is cap^2 per fingerprint)
 
+
+def _winnow_window_minima(
+    docs: DataFrame, h: str, h_sql: str, key: str
+) -> DataFrame:
+    """The winnowing selection both winnowing DAGs share (Schleimer et
+    al., SIGMOD 2003): explode each doc's K-char gram positions p over
+    the normalized text, hash each gram into column ``h`` (``h_sql``
+    reads `norm` and `p`), and take the MIN of ``h`` over the W-gram
+    window starting at p as column ``key``. Returns the window-START rows
+    (doc_id, p, ng, h, key): p <= ng - W + 1, plus p = 1 so a doc shorter
+    than W grams (its clipped frame spans every gram) still selects one.
+
+    The gram hash is a codegen'd COLUMN expression on the exploded frame
+    — not a per-element lambda; ng (the gram count) derives from the
+    length, because a second whole-partition count window over the
+    engine's largest explode would cost a full extra pass (round-10
+    review); the window is ONE doc-partitioned frame, no global sort."""
+    grams = (
+        docs.select("doc_id", F.expr(_NORM_SPARK).alias("norm"))
+        .select(
+            "doc_id",
+            "norm",
+            F.posexplode_outer(
+                F.expr(
+                    f"if(length(norm) >= {WINNOW_K},"
+                    f" sequence(1, length(norm) - {WINNOW_K} + 1),"
+                    " array())"
+                )
+            ).alias("i", "p"),
+        )
+        .where(F.col("p").isNotNull())
+        .select(
+            "doc_id",
+            "p",
+            (F.length("norm") - (WINNOW_K - 1)).alias("ng"),
+            F.expr(h_sql).alias(h),
+        )
+    )
+    win = (
+        Window.partitionBy("doc_id")
+        .orderBy("p")
+        .rowsBetween(0, WINNOW_W - 1)
+    )
+    return grams.withColumn(key, F.min(h).over(win)).where(
+        (F.col("p") <= F.col("ng") - WINNOW_W + 1) | (F.col("p") == 1)
+    )
+
+
+def _winnow_window_duck(h_sql: str, key: str) -> str:
+    """DuckDB twin of _winnow_window_minima: a query of the window-start
+    rows (doc_id, p, ng, key), ``h_sql`` hashing the gram at `p` of
+    `norm`."""
+    return f"""
+  SELECT * FROM (
+    SELECT doc_id, p, ng,
+           MIN(h) OVER (
+             PARTITION BY doc_id ORDER BY p
+             ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING
+           ) AS {key}
+    FROM (
+      SELECT doc_id, p,
+             length(norm) - {WINNOW_K} + 1 AS ng,
+             {h_sql} AS h
+      FROM (
+        SELECT doc_id, {_NORM_DUCK} AS norm,
+               unnest(generate_series(1, length({_NORM_DUCK}) - {WINNOW_K} + 1))
+                 AS p
+        FROM documents
+        WHERE text IS NOT NULL AND length({_NORM_DUCK}) >= {WINNOW_K}
+      )
+    ) g
+  ) WHERE p <= ng - {WINNOW_W} + 1 OR p = 1
+"""
+
+
 def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-fingerprint near-dup pairs via WINNOWING (Schleimer,
     Wilkerson & Aiken, "Winnowing: Local Algorithms for Document
@@ -1621,44 +1695,9 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     not) and merge-pinned (stat-less under the window/distinct — the
     family broadcast trap)."""
     docs = load_table(spark, sf_dir, "documents", fanout="doc_id")
-    grams = (
-        docs.select(
-            "doc_id",
-            F.expr(_NORM_SPARK).alias("norm"),
-        )
-        .select(
-            "doc_id",
-            "norm",
-            F.posexplode_outer(
-                F.expr(
-                    f"if(length(norm) >= {WINNOW_K},"
-                    f" sequence(1, length(norm) - {WINNOW_K} + 1),"
-                    " array())"
-                )
-            ).alias("i", "p"),
-        )
-        .where(F.col("p").isNotNull())
-        .select(
-            "doc_id",
-            "p",
-            # ng = gram count, derivable from the length — a second
-            # whole-partition count window over the engine's largest
-            # explode would cost a full extra pass (round-10 review)
-            (F.length("norm") - (WINNOW_K - 1)).alias("ng"),
-            F.expr(f"md5(substring(norm, p, {WINNOW_K}))").alias("h"),
-        )
-    )
-    win = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(0, WINNOW_W - 1)
-    )
     sel = (
-        grams.withColumn("fp", F.min("h").over(win))
-        # window STARTS only: t <= n_grams - W + 1 (short docs keep t=1,
-        # where the clipped frame spans every gram)
-        .where(
-            (F.col("p") <= F.col("ng") - WINNOW_W + 1) | (F.col("p") == 1)
+        _winnow_window_minima(
+            docs, "h", f"md5(substring(norm, p, {WINNOW_K}))", "fp"
         )
         .select("doc_id", "fp")
         .distinct()
@@ -1689,27 +1728,11 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_WINNOW_H_DUCK = f"md5(substring(norm, CAST(p AS INT), {WINNOW_K}))"
+
 ORACLE_DEDUP_WINNOWING = f"""
-WITH g AS (
-  SELECT doc_id, p,
-         length(norm) - {WINNOW_K} + 1 AS ng,
-         md5(substring(norm, CAST(p AS INT), {WINNOW_K})) AS h
-  FROM (
-    SELECT doc_id, {_NORM_DUCK} AS norm,
-           unnest(generate_series(1, length({_NORM_DUCK}) - {WINNOW_K} + 1))
-             AS p
-    FROM documents
-    WHERE text IS NOT NULL AND length({_NORM_DUCK}) >= {WINNOW_K}
-  )
-), sel AS (
-  SELECT DISTINCT doc_id, fp FROM (
-    SELECT doc_id, p, ng,
-           MIN(h) OVER (
-             PARTITION BY doc_id ORDER BY p
-             ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING
-           ) AS fp
-    FROM g
-  ) WHERE p <= ng - {WINNOW_W} + 1 OR p = 1
+WITH sel AS (
+  SELECT DISTINCT doc_id, fp FROM ({_winnow_window_duck(_WINNOW_H_DUCK, "fp")})
 ), capped AS (
   SELECT doc_id, fp FROM (
     SELECT doc_id, fp,
@@ -1803,40 +1826,15 @@ def _winnow_selected_positions(docs: DataFrame) -> DataFrame:
     run of repeated content re-selects the same document position
     instead of one per window). dedup_winnowing's set-based selection
     needs no tie-break (tied minima share the hash); carrying positions
-    does. Shares the gram/window topology with dedup_winnowing."""
-    grams = (
-        docs.select("doc_id", F.expr(_NORM_SPARK).alias("norm"))
-        .select(
-            "doc_id",
-            "norm",
-            F.posexplode_outer(
-                F.expr(
-                    f"if(length(norm) >= {WINNOW_K},"
-                    f" sequence(1, length(norm) - {WINNOW_K} + 1),"
-                    " array())"
-                )
-            ).alias("i", "p"),
-        )
-        .where(F.col("p").isNotNull())
-        .select(
-            "doc_id",
-            "p",
-            (F.length("norm") - (WINNOW_K - 1)).alias("ng"),
-            F.expr(
-                f"concat(md5(substring(norm, p, {WINNOW_K})),"
-                f" lpad(cast({_POS_ENC_CEIL} - p as string), 10, '0'))"
-            ).alias("hk"),
-        )
-    )
-    win = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(0, WINNOW_W - 1)
-    )
+    does. Shares the gram/window stage (_winnow_window_minima) with
+    dedup_winnowing."""
     return (
-        grams.withColumn("key", F.min("hk").over(win))
-        .where(
-            (F.col("p") <= F.col("ng") - WINNOW_W + 1) | (F.col("p") == 1)
+        _winnow_window_minima(
+            docs,
+            "hk",
+            f"concat(md5(substring(norm, p, {WINNOW_K})),"
+            f" lpad(cast({_POS_ENC_CEIL} - p as string), 10, '0'))",
+            "key",
         )
         .select(
             "doc_id",
@@ -1981,30 +1979,14 @@ def dedup_winnow_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DEDUP_WINNOW_SPANS = f"""
-WITH g AS (
-  SELECT doc_id, p,
-         length(norm) - {WINNOW_K} + 1 AS ng,
-         md5(substring(norm, CAST(p AS INT), {WINNOW_K}))
-           || lpad(CAST({_POS_ENC_CEIL} - p AS VARCHAR), 10, '0') AS hk
-  FROM (
-    SELECT doc_id, {_NORM_DUCK} AS norm,
-           unnest(generate_series(1, length({_NORM_DUCK}) - {WINNOW_K} + 1))
-             AS p
-    FROM documents
-    WHERE text IS NOT NULL AND length({_NORM_DUCK}) >= {WINNOW_K}
-  )
-), selpos AS MATERIALIZED (
+WITH selpos AS MATERIALIZED (
   SELECT DISTINCT doc_id,
          substring(key, 1, 32) AS fp,
          {_POS_ENC_CEIL} - CAST(substring(key, 33, 10) AS BIGINT) AS pos
-  FROM (
-    SELECT doc_id, p, ng,
-           MIN(hk) OVER (
-             PARTITION BY doc_id ORDER BY p
-             ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING
-           ) AS key
-    FROM g
-  ) WHERE p <= ng - {WINNOW_W} + 1 OR p = 1
+  FROM ({_winnow_window_duck(
+      f"{_WINNOW_H_DUCK} || lpad(CAST({_POS_ENC_CEIL} - p AS VARCHAR), 10, '0')",
+      "key",
+  )})
 ), capped AS MATERIALIZED (
   SELECT doc_id, fp, pos FROM (
     SELECT doc_id, fp, pos,
@@ -2338,30 +2320,163 @@ ORACLES["dedup_cross_source_overlap"] = _oracle_cross_source_overlap()
 
 SPAN_W = 6             # tokens per span for repeated-span detection
 
-# Distinct hashed W-token spans of a doc. Same projection-barrier
-# discipline as _SHINGLES_FROM_TOKS: `toks` is a materialized column with
-# >=2 non-lambda references (the two size() calls), so CollapseProject
-# keeps the tokenizer chain evaluated once; the lambda's slice/concat_ws
-# read the cheap column reference. Docs shorter than SPAN_W contribute no
+# Hashed W-token spans of a doc, one per start position (1-based start =
+# array index), every repeat kept. Same projection-barrier discipline as
+# _SHINGLES_FROM_TOKS: `toks` is a materialized column with >=2
+# non-lambda references (the two size() calls), so CollapseProject keeps
+# the tokenizer chain evaluated once; the lambda's slice/concat_ws read
+# the cheap column reference. Docs shorter than SPAN_W contribute no
 # spans (sequence(1, n) with n <= 0 would count DOWN in Spark — the guard
 # is load-bearing, not cosmetic).
 #
 # Key type: xxhash64 LONG, not an md5 string — the span key rides two
-# shuffles (census agg + join-back) in both span operators, and an
+# shuffles (census agg + join-back) in every span operator, and an
 # 8-byte long is ~5x narrower on the wire than a 32-char md5 (the
 # mm_chunk_dedup int64-key lesson; measured same-session on decorrelated
 # replicas: 0.80x at x8, 0.95x at x32 of sf0.1). The DuckDB oracles keep
-# md5 — no hash value reaches any output, so parity only needs GROUPING
-# equality, which any injective-modulo-collisions key gives. Collision
-# posture: 64-bit keys expect ~n^2/2^65 false span merges (a handful per
-# 10^12 spans) — noise for a duplication AUDIT/removal of >= 2-doc
-# spans, and the paper's own pipeline hashes spans the same way.
-_SPANS_FROM_TOKS = (
-    f"array_distinct(if(size(toks) >= {SPAN_W}, "
+# md5 (_SPAN_OCCS_DUCK) — no hash value reaches any output, so parity
+# only needs GROUPING equality, which any injective-modulo-collisions key
+# gives. Collision posture: 64-bit keys expect ~n^2/2^65 false span
+# merges (a handful per 10^12 spans) — noise for a duplication
+# AUDIT/removal of >= 2-doc spans, and the paper's own pipeline hashes
+# spans the same way.
+_SPAN_OCCS_FROM_TOKS = (
+    f"if(size(toks) >= {SPAN_W}, "
     f"transform(sequence(1, size(toks) - {SPAN_W - 1}), "
     f"i -> xxhash64(concat_ws(' ', slice(toks, i, {SPAN_W})))), "
-    "cast(array() as array<bigint>)))"
+    "cast(array() as array<bigint>))"
 )
+# the distinct span set per doc — what a census counts
+_SPANS_FROM_TOKS = f"array_distinct({_SPAN_OCCS_FROM_TOKS})"
+
+# DuckDB twin of _SPAN_OCCS_FROM_TOKS over a token list `t`
+_SPAN_OCCS_DUCK = f"""CASE WHEN len(t) >= {SPAN_W} THEN
+           list_transform(generate_series(1, len(t) - {SPAN_W - 1}),
+             i -> md5(array_to_string(t[i:i+{SPAN_W - 1}], ' ')))
+           ELSE [] END"""
+
+
+def _span_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, toks): the span family's token stream — the normalized
+    text split on spaces."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select(
+        "doc_id", F.expr(f"split({_NORM_SPARK}, ' ')").alias("toks")
+    )
+
+
+def _span_occurrences(toks: DataFrame) -> DataFrame:
+    """(doc_id, i, g): every span occurrence with its 1-based start,
+    repeats kept — the removal faces need every occurrence (a span
+    repeated twice inside one doc covers two token ranges), where a
+    census wants the distinct set. _outer so InferFiltersFromGenerate
+    cannot clone the tokenizer chain into a scan-side Filter (the family
+    discipline), with the span-less docs' null row dying on the cheap
+    generator-output guard."""
+    return (
+        toks.select(
+            "doc_id",
+            F.posexplode_outer(F.expr(_SPAN_OCCS_FROM_TOKS)).alias("i0", "g"),
+        )
+        .where(F.col("g").isNotNull())
+        .select("doc_id", (F.col("i0") + 1).alias("i"), "g")
+    )
+
+
+def _excise_covered(toks: DataFrame, starts: DataFrame) -> DataFrame:
+    """The removal faces' shared tail, after each face's own duplication
+    rule picked the span starts to excise: widen every (doc_id, i) row
+    of ``starts`` to its SPAN_W covered positions, LEFT-join the
+    per-token position frame to flag covered tokens, and rebuild each
+    doc's kept text. One row per doc with tokens (NULL-text docs
+    tokenize to no positions and drop — the family's NULL contract):
+    n_tokens, n_removed, cleaned_text over the normalized token stream.
+
+    The covered-position dedup is a groupBy-distinct with partial
+    aggregation (a boilerplate-heavy doc's overlapping spans compress
+    map-side); the position join is merge-pinned (the stat-less explode
+    underneath misestimates either side); one final groupBy(doc) rebuilds
+    the kept text with a sort-free array_sort(collect_list(struct(p,
+    tok))) (p is unique per doc, so the struct sort is a total order;
+    the window-free rebuild keeps the aggregation map-side-combining)."""
+    covered = (
+        starts.select(
+            "doc_id",
+            F.explode(F.expr(f"sequence(i, i + {SPAN_W - 1})")).alias("p"),
+        )
+        .distinct()
+        .withColumn("covered", F.lit(True))
+    )
+    tokpos = (
+        toks.select("doc_id", F.posexplode_outer("toks").alias("p0", "tok"))
+        .where(F.col("p0").isNotNull())
+        .select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
+    )
+    return (
+        tokpos.join(covered.hint("merge"), ["doc_id", "p"], "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_tokens"),
+            F.sum(
+                F.when(F.col("covered"), F.lit(1)).otherwise(F.lit(0))
+            ).alias("n_removed"),
+            F.concat_ws(
+                " ",
+                F.expr(
+                    "transform(array_sort(collect_list("
+                    "case when covered is null then struct(p, tok) end"
+                    ")), x -> x.tok)"
+                ),
+            ).alias("cleaned_text"),
+        )
+    )
+
+
+def _span_removal_oracle(dup: str, keys: str, where: str = "") -> str:
+    """DuckDB twin of the removal faces: the shared toks/spans/occ/
+    covered/tokpos chain and rebuild around one face's duplication rule
+    — ``dup`` is the body of the `dup` CTE over `occ`, joined back
+    USING (``keys``), with ``where`` filtering the joined starts."""
+    return f"""
+WITH toks AS (
+  SELECT doc_id, string_split({_NORM_DUCK}, ' ') AS t FROM documents
+),
+spans AS (
+  SELECT doc_id, t, {_SPAN_OCCS_DUCK} AS gs
+  FROM toks
+),
+occ AS (
+  SELECT doc_id, unnest(gs) AS g,
+         unnest(generate_series(1, len(gs))) AS i
+  FROM spans
+),
+dup AS (
+  {dup}
+),
+covered AS (
+  SELECT DISTINCT doc_id, p FROM (
+    SELECT occ.doc_id,
+           unnest(generate_series(i, i + {SPAN_W - 1})) AS p
+    FROM occ JOIN dup USING ({keys})
+    {where}
+  ) x
+),
+tokpos AS (
+  SELECT doc_id, unnest(t) AS tok,
+         unnest(generate_series(1, len(t))) AS p
+  FROM spans
+)
+SELECT tp.doc_id,
+       COUNT(*) AS n_tokens,
+       CAST(SUM(CASE WHEN c.p IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_removed,
+       COALESCE(array_to_string(
+         list(tp.tok ORDER BY tp.p) FILTER (WHERE c.p IS NULL), ' '),
+         '') AS cleaned_text
+FROM tokpos tp
+LEFT JOIN covered c ON tp.doc_id = c.doc_id AND tp.p = c.p
+GROUP BY tp.doc_id
+"""
 
 
 def dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2410,10 +2525,7 @@ def dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     collects, nothing is quadratic: O(tokens) rows through two
     shuffles. dup_frac is a single IEEE division of two exact ints —
     bit-identical across engines, no summation-order hazard."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.expr(f"split({_NORM_SPARK}, ' ')").alias("toks")
-    )
+    toks = _span_toks(spark, sf_dir)
     spans = toks.select(
         "doc_id", F.expr(_SPANS_FROM_TOKS).alias("spans")
     )
@@ -2451,11 +2563,7 @@ WITH toks AS (
   SELECT doc_id, string_split({_NORM_DUCK}, ' ') AS t FROM documents
 ),
 spans AS (
-  SELECT doc_id,
-         list_distinct(CASE WHEN len(t) >= {SPAN_W} THEN
-           list_transform(generate_series(1, len(t) - {SPAN_W - 1}),
-             i -> md5(array_to_string(t[i:i+{SPAN_W - 1}], ' ')))
-           ELSE [] END) AS gs
+  SELECT doc_id, list_distinct({_SPAN_OCCS_DUCK}) AS gs
   FROM toks
 ),
 grams AS (
@@ -2478,19 +2586,6 @@ QUERIES["dedup_repeated_ngrams"] = dedup_repeated_ngrams
 ORACLES["dedup_repeated_ngrams"] = ORACLE_REPEATED_NGRAMS
 
 
-# Non-distinct occurrence-level span hashes with their 1-based start
-# positions — the REMOVAL op needs every occurrence (a span repeated
-# twice inside one doc covers two token ranges), where the audit's
-# census wants the distinct set. Same projection-barrier and short-doc
-# guard as _SPANS_FROM_TOKS.
-_SPAN_OCCS_FROM_TOKS = (
-    f"if(size(toks) >= {SPAN_W}, "
-    f"transform(sequence(1, size(toks) - {SPAN_W - 1}), "
-    f"i -> xxhash64(concat_ws(' ', slice(toks, i, {SPAN_W})))), "
-    "cast(array() as array<bigint>))"
-)
-
-
 def text_remove_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CLEANED corpus the span audit argues for (Lee et al.,
     arXiv:2107.06499 — the paper's deliverable is the deduplicated
@@ -2510,29 +2605,20 @@ def text_remove_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-doc variant is a census swap away.
 
     Shape: the census branch is EXACTLY the audit's (distinct spans per
-    doc -> map-side-partial groupBy count >= 2); the removal branch
-    explodes occurrence-level span starts, joins the census (merge-
-    pinned — inherits the never-broadcast-the-grams rule, same stat-less
-    explode underneath), widens each duplicated start to its SPAN_W
-    covered positions, and LEFT-joins the per-token position frame to
-    flag covered tokens; one final groupBy(doc) rebuilds the kept text
-    with a sort-free array_sort(collect_list(struct(p, tok))) (p is
-    unique per doc, so the struct sort is a total order; the window-free
-    rebuild keeps the aggregation map-side-combining).
+    doc -> map-side-partial groupBy count >= 2); the occurrence-level
+    span starts (_span_occurrences) join the census (merge-pinned —
+    inherits the never-broadcast-the-grams rule, same stat-less explode
+    underneath), and _excise_covered widens, flags and rebuilds — the
+    tail all three removal faces share.
 
     100 TB posture: every frame is O(tokens) rows — no quadratic term,
     nothing collects. Both span joins are merge-pinned against the
     stat-less-explode broadcast trap (the measured dedup_repeated_ngrams
-    scar); the covered-position dedup is a groupBy-distinct with partial
-    aggregation (a boilerplate-heavy doc's overlapping spans compress
-    map-side). The doc-level rebuild groupBy carries each token exactly
+    scar). The doc-level rebuild groupBy carries each token exactly
     once — the same volume the tokenizer already shuffled — and AQE
     skew-splits documents do not exist (doc_id is unique per row group
     of bounded doc length)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.expr(f"split({_NORM_SPARK}, ' ')").alias("toks")
-    )
+    toks = _span_toks(spark, sf_dir)
     # census: the audit's distinct-per-doc span counts (>= 2 docs)
     census = (
         toks.select(
@@ -2544,98 +2630,15 @@ def text_remove_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n_docs_span") >= 2)
         .select("g")
     )
-    # occurrence-level span starts (1-based), every repeat kept; _outer
-    # so InferFiltersFromGenerate cannot clone the tokenizer chain into
-    # a scan-side Filter (the family discipline), with the span-less
-    # docs' null row dying on the cheap generator-output guard
-    occ = (
-        toks.select(
-            "doc_id",
-            F.posexplode_outer(F.expr(_SPAN_OCCS_FROM_TOKS)).alias("i0", "g"),
-        )
-        .where(F.col("g").isNotNull())
-        .select("doc_id", (F.col("i0") + 1).alias("i"), "g")
-    )
-    covered = (
-        occ.join(census.hint("merge"), "g")
-        .select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(i, i + {SPAN_W - 1})")).alias("p"),
-        )
-        .distinct()
-        .withColumn("covered", F.lit(True))
-    )
-    tokpos = (
-        toks.select(
-            "doc_id", F.posexplode_outer("toks").alias("p0", "tok")
-        )
-        .where(F.col("p0").isNotNull())
-        .select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
-    )
-    return (
-        tokpos.join(covered.hint("merge"), ["doc_id", "p"], "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum(
-                F.when(F.col("covered"), F.lit(1)).otherwise(F.lit(0))
-            ).alias("n_removed"),
-            F.concat_ws(
-                " ",
-                F.expr(
-                    "transform(array_sort(collect_list("
-                    "case when covered is null then struct(p, tok) end"
-                    ")), x -> x.tok)"
-                ),
-            ).alias("cleaned_text"),
-        )
-    )
+    occ = _span_occurrences(toks)
+    return _excise_covered(toks, occ.join(census.hint("merge"), "g"))
 
 
-ORACLE_REMOVE_REPEATED_SPANS = f"""
-WITH toks AS (
-  SELECT doc_id, string_split({_NORM_DUCK}, ' ') AS t FROM documents
-),
-spans AS (
-  SELECT doc_id, t,
-         CASE WHEN len(t) >= {SPAN_W} THEN
-           list_transform(generate_series(1, len(t) - {SPAN_W - 1}),
-             i -> md5(array_to_string(t[i:i+{SPAN_W - 1}], ' ')))
-         ELSE [] END AS gs
-  FROM toks
-),
-occ AS (
-  SELECT doc_id, unnest(gs) AS g,
-         unnest(generate_series(1, len(gs))) AS i
-  FROM spans
-),
-census AS (
-  SELECT g FROM (SELECT DISTINCT doc_id, g FROM occ) dd
-  GROUP BY g HAVING COUNT(*) >= 2
-),
-covered AS (
-  SELECT DISTINCT doc_id, p FROM (
-    SELECT doc_id,
-           unnest(generate_series(i, i + {SPAN_W - 1})) AS p
-    FROM occ JOIN census USING (g)
-  ) x
-),
-tokpos AS (
-  SELECT doc_id, unnest(t) AS tok,
-         unnest(generate_series(1, len(t))) AS p
-  FROM spans
+ORACLE_REMOVE_REPEATED_SPANS = _span_removal_oracle(
+    """SELECT g FROM (SELECT DISTINCT doc_id, g FROM occ) dd
+  GROUP BY g HAVING COUNT(*) >= 2""",
+    "g",
 )
-SELECT tp.doc_id,
-       COUNT(*) AS n_tokens,
-       CAST(SUM(CASE WHEN c.p IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_removed,
-       COALESCE(array_to_string(
-         list(tp.tok ORDER BY tp.p) FILTER (WHERE c.p IS NULL), ' '),
-         '') AS cleaned_text
-FROM tokpos tp
-LEFT JOIN covered c ON tp.doc_id = c.doc_id AND tp.p = c.p
-GROUP BY tp.doc_id
-"""
 
 # Benchmark split for decontamination: the sampling module's md5-bucket
 # convention over the stable doc key — deterministic, engine-agnostic,
@@ -2714,11 +2717,7 @@ WITH toks AS (
   FROM documents
 ),
 spans AS (
-  SELECT doc_id, is_bench,
-         list_distinct(CASE WHEN len(t) >= {SPAN_W} THEN
-           list_transform(generate_series(1, len(t) - {SPAN_W - 1}),
-             i -> md5(array_to_string(t[i:i+{SPAN_W - 1}], ' ')))
-           ELSE [] END) AS gs
+  SELECT doc_id, is_bench, list_distinct({_SPAN_OCCS_DUCK}) AS gs
   FROM toks
 ),
 grams AS (
@@ -2749,7 +2748,7 @@ def text_remove_within_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered by such a span and emit the cleaned text — exactly the
     "census swap" the cross-doc op's docstring promises: the duplication
     predicate becomes occurrence count >= 2 GROUPED BY (doc, span), and
-    the covered/rebuild machinery is shared verbatim.
+    the covered/rebuild machinery is the shared _excise_covered.
 
     Output per doc with spans (NULL-text docs drop — family contract):
     n_tokens, n_removed, cleaned_text over the normalized token stream.
@@ -2766,101 +2765,21 @@ def text_remove_within_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents, so web-boilerplate hot spans cannot skew this one at
     all). Both span joins stay merge-pinned: the stat-less explode
     underneath misestimates either side."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.expr(f"split({_NORM_SPARK}, ' ')").alias("toks")
-    )
-    occ = (
-        toks.select(
-            "doc_id",
-            F.posexplode_outer(F.expr(_SPAN_OCCS_FROM_TOKS)).alias("i0", "g"),
-        )
-        .where(F.col("g").isNotNull())
-        .select("doc_id", (F.col("i0") + 1).alias("i"), "g")
-    )
+    toks = _span_toks(spark, sf_dir)
+    occ = _span_occurrences(toks)
     dup = (
         occ.groupBy("doc_id", "g")
         .agg(F.count("*").alias("n_occ"))
         .where(F.col("n_occ") >= 2)
         .select("doc_id", "g")
     )
-    covered = (
-        occ.join(dup.hint("merge"), ["doc_id", "g"])
-        .select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(i, i + {SPAN_W - 1})")).alias("p"),
-        )
-        .distinct()
-        .withColumn("covered", F.lit(True))
-    )
-    tokpos = (
-        toks.select("doc_id", F.posexplode_outer("toks").alias("p0", "tok"))
-        .where(F.col("p0").isNotNull())
-        .select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
-    )
-    return (
-        tokpos.join(covered.hint("merge"), ["doc_id", "p"], "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum(
-                F.when(F.col("covered"), F.lit(1)).otherwise(F.lit(0))
-            ).alias("n_removed"),
-            F.concat_ws(
-                " ",
-                F.expr(
-                    "transform(array_sort(collect_list("
-                    "case when covered is null then struct(p, tok) end"
-                    ")), x -> x.tok)"
-                ),
-            ).alias("cleaned_text"),
-        )
-    )
+    return _excise_covered(toks, occ.join(dup.hint("merge"), ["doc_id", "g"]))
 
 
-ORACLE_REMOVE_WITHIN_REPEATS = f"""
-WITH toks AS (
-  SELECT doc_id, string_split({_NORM_DUCK}, ' ') AS t FROM documents
-),
-spans AS (
-  SELECT doc_id, t,
-         CASE WHEN len(t) >= {SPAN_W} THEN
-           list_transform(generate_series(1, len(t) - {SPAN_W - 1}),
-             i -> md5(array_to_string(t[i:i+{SPAN_W - 1}], ' ')))
-         ELSE [] END AS gs
-  FROM toks
-),
-occ AS (
-  SELECT doc_id, unnest(gs) AS g,
-         unnest(generate_series(1, len(gs))) AS i
-  FROM spans
-),
-dup AS (
-  SELECT doc_id, g FROM occ GROUP BY doc_id, g HAVING COUNT(*) >= 2
-),
-covered AS (
-  SELECT DISTINCT doc_id, p FROM (
-    SELECT occ.doc_id,
-           unnest(generate_series(i, i + {SPAN_W - 1})) AS p
-    FROM occ JOIN dup USING (doc_id, g)
-  ) x
-),
-tokpos AS (
-  SELECT doc_id, unnest(t) AS tok,
-         unnest(generate_series(1, len(t))) AS p
-  FROM spans
+ORACLE_REMOVE_WITHIN_REPEATS = _span_removal_oracle(
+    "SELECT doc_id, g FROM occ GROUP BY doc_id, g HAVING COUNT(*) >= 2",
+    "doc_id, g",
 )
-SELECT tp.doc_id,
-       COUNT(*) AS n_tokens,
-       CAST(SUM(CASE WHEN c.p IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_removed,
-       COALESCE(array_to_string(
-         list(tp.tok ORDER BY tp.p) FILTER (WHERE c.p IS NULL), ' '),
-         '') AS cleaned_text
-FROM tokpos tp
-LEFT JOIN covered c ON tp.doc_id = c.doc_id AND tp.p = c.p
-GROUP BY tp.doc_id
-"""
 
 QUERIES["text_remove_within_repeats"] = text_remove_within_repeats
 ORACLES["text_remove_within_repeats"] = ORACLE_REMOVE_WITHIN_REPEATS
@@ -2887,104 +2806,27 @@ def text_dedup_within_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     the covered widening filters i > first_i — one extra long per census
     row, no new shuffle, both joins merge-pinned for the same stat-less
     explode reason."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.expr(f"split({_NORM_SPARK}, ' ')").alias("toks")
-    )
-    occ = (
-        toks.select(
-            "doc_id",
-            F.posexplode_outer(F.expr(_SPAN_OCCS_FROM_TOKS)).alias("i0", "g"),
-        )
-        .where(F.col("g").isNotNull())
-        .select("doc_id", (F.col("i0") + 1).alias("i"), "g")
-    )
+    toks = _span_toks(spark, sf_dir)
+    occ = _span_occurrences(toks)
     dup = (
         occ.groupBy("doc_id", "g")
         .agg(F.count("*").alias("n_occ"), F.min("i").alias("first_i"))
         .where(F.col("n_occ") >= 2)
         .select("doc_id", "g", "first_i")
     )
-    covered = (
+    starts = (
         occ.join(dup.hint("merge"), ["doc_id", "g"])
         .where(F.col("i") > F.col("first_i"))  # keep the first occurrence
-        .select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(i, i + {SPAN_W - 1})")).alias("p"),
-        )
-        .distinct()
-        .withColumn("covered", F.lit(True))
     )
-    tokpos = (
-        toks.select("doc_id", F.posexplode_outer("toks").alias("p0", "tok"))
-        .where(F.col("p0").isNotNull())
-        .select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
-    )
-    return (
-        tokpos.join(covered.hint("merge"), ["doc_id", "p"], "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum(
-                F.when(F.col("covered"), F.lit(1)).otherwise(F.lit(0))
-            ).alias("n_removed"),
-            F.concat_ws(
-                " ",
-                F.expr(
-                    "transform(array_sort(collect_list("
-                    "case when covered is null then struct(p, tok) end"
-                    ")), x -> x.tok)"
-                ),
-            ).alias("cleaned_text"),
-        )
-    )
+    return _excise_covered(toks, starts)
 
 
-ORACLE_DEDUP_WITHIN_KEEP_FIRST = f"""
-WITH toks AS (
-  SELECT doc_id, string_split({_NORM_DUCK}, ' ') AS t FROM documents
-),
-spans AS (
-  SELECT doc_id, t,
-         CASE WHEN len(t) >= {SPAN_W} THEN
-           list_transform(generate_series(1, len(t) - {SPAN_W - 1}),
-             i -> md5(array_to_string(t[i:i+{SPAN_W - 1}], ' ')))
-         ELSE [] END AS gs
-  FROM toks
-),
-occ AS (
-  SELECT doc_id, unnest(gs) AS g,
-         unnest(generate_series(1, len(gs))) AS i
-  FROM spans
-),
-dup AS (
-  SELECT doc_id, g, MIN(i) AS first_i FROM occ
-  GROUP BY doc_id, g HAVING COUNT(*) >= 2
-),
-covered AS (
-  SELECT DISTINCT doc_id, p FROM (
-    SELECT occ.doc_id,
-           unnest(generate_series(i, i + {SPAN_W - 1})) AS p
-    FROM occ JOIN dup USING (doc_id, g)
-    WHERE occ.i > dup.first_i
-  ) x
-),
-tokpos AS (
-  SELECT doc_id, unnest(t) AS tok,
-         unnest(generate_series(1, len(t))) AS p
-  FROM spans
+ORACLE_DEDUP_WITHIN_KEEP_FIRST = _span_removal_oracle(
+    """SELECT doc_id, g, MIN(i) AS first_i FROM occ
+  GROUP BY doc_id, g HAVING COUNT(*) >= 2""",
+    "doc_id, g",
+    "WHERE occ.i > dup.first_i",
 )
-SELECT tp.doc_id,
-       COUNT(*) AS n_tokens,
-       CAST(SUM(CASE WHEN c.p IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_removed,
-       COALESCE(array_to_string(
-         list(tp.tok ORDER BY tp.p) FILTER (WHERE c.p IS NULL), ' '),
-         '') AS cleaned_text
-FROM tokpos tp
-LEFT JOIN covered c ON tp.doc_id = c.doc_id AND tp.p = c.p
-GROUP BY tp.doc_id
-"""
 
 QUERIES["text_dedup_within_keep_first"] = text_dedup_within_keep_first
 ORACLES["text_dedup_within_keep_first"] = ORACLE_DEDUP_WITHIN_KEEP_FIRST

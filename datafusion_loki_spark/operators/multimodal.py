@@ -4224,7 +4224,14 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-repeats family precedent for exact engine twins of kernel
     math. No reference analogue (datafusion-loki has no multimodal
     surface); this is the BASELINE 'multimodal columns' mandate."""
-    from pyspark.sql import Window
+    return _phash_pairs(_phash_fingerprints(spark, sf_dir))
+
+
+def _phash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, h1, h2): mm_phash_neardup's fingerprint frame, checkpointed
+    so the byte kernel runs once though both join sides of _phash_pairs
+    consume it. A caller that checkpoints the pairs releases this frame
+    once they are materialized (nothing else reads it)."""
 
     def _phash_rows(batches):
         import pandas as pd
@@ -4246,12 +4253,19 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).astype("int64")
 
     aug = _phash_corpus(media_table(spark, sf_dir))
-    fp = (
+    return (
         aug.mapInPandas(_phash_rows, "doc_id long, h1 long, h2 long")
         # both join sides consume the fingerprint frame; materialize so
         # the byte-kernel pass runs once (the simhash_hamming rule)
         .localCheckpoint(eager=True)
     )
+
+
+def _phash_pairs(fp: DataFrame) -> DataFrame:
+    """mm_phash_neardup's pairs over a (doc_id, h1, h2) fingerprint frame:
+    banded candidates, capped per bucket, Hamming-verified."""
+    from pyspark.sql import Window
+
     band_exprs = [
         F.expr(f"shiftright(h1, {8 * k}) & 255" if k < 4
                else f"shiftright(h2, {8 * (k - 4)}) & 255")
@@ -4527,21 +4541,17 @@ def mm_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mm_keep_list_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    val: "DataFrame | None" = None,
-    val_builder=None,
+    spark: SparkSession, sf_dir: str, val_builder=None
 ) -> DataFrame:
-    """mm_dedup_keep_list's body, with an optional PRECOMPUTED decode
-    verdict frame (doc_id, ok) — OPTIMIZATION_r15: compositions that
-    consume BOTH the keep-list and the admission verdict
-    (mm_corpus_manifest, and corpus_ship_card through it) were paying
-    the mm_decode_validate encode+decode kernel twice per query DAG
-    (Catalyst has no cross-branch subtree reuse); they now materialize
-    the ~4-column verdict once via localCheckpoint and pass it here
-    (``val``) — or, better, pass a ``val_builder`` thunk so that
-    materialization OVERLAPS the other two eager sub-DAGs below
-    (guide §2.6). Same rows any way.
+    """mm_dedup_keep_list's body, with an optional builder of a
+    PRECOMPUTED decode verdict frame (doc_id, ok, ...) — OPTIMIZATION_r15:
+    compositions that consume BOTH the keep-list and the admission
+    verdict (mm_corpus_manifest, and corpus_ship_card through it) were
+    paying the mm_decode_validate encode+decode kernel twice per query
+    DAG (Catalyst has no cross-branch subtree reuse); they now pass a
+    ``val_builder`` thunk that materializes the ~4-column verdict once
+    via localCheckpoint, and that materialization OVERLAPS the other two
+    eager sub-DAGs below (guide §2.6). Same rows either way.
 
     OPTIMIZATION_r15 change 8: the three eager, mutually independent
     sub-materializations — the phash pair checkpoint, the semantic
@@ -4556,18 +4566,21 @@ def _mm_keep_list_frame(
         _semantic_index_members,
     )
 
+    def phash_pairs() -> DataFrame:
+        fp = _phash_fingerprints(spark, sf_dir)
+        pairs = (
+            _phash_pairs(fp).select("doc_a", "doc_b").localCheckpoint(eager=True)
+        )
+        # the pair checkpoint was the fingerprints' only reader
+        release(fp)
+        return pairs
+
     built = materialize_concurrently(
-        lambda: (
-            mm_phash_neardup(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .localCheckpoint(eager=True)
-        ),
+        phash_pairs,
         lambda: _semantic_index_members(spark, sf_dir),
         *((val_builder,) if val_builder is not None else ()),
     )
     pairs, members = built[0], built[1]
-    if val_builder is not None:
-        val = built[2]
     sym = pairs.select(
         F.explode(
             F.expr(
@@ -4592,9 +4605,9 @@ def _mm_keep_list_frame(
     sem = _mm_semantic_verdict(spark, sf_dir, members).select(
         "doc_id", "is_sem_kept"
     )
-    if val is None:
-        val = mm_decode_validate(spark, sf_dir)
-    val = val.select("doc_id", "ok")
+    val = (
+        built[2] if val_builder is not None else mm_decode_validate(spark, sf_dir)
+    ).select("doc_id", "ok")
     return (
         fp.join(keepers, "fingerprint")
         .join(cc, "doc_id", "left")
@@ -4617,7 +4630,10 @@ def _mm_keep_list_frame(
 
 
 def _oracle_mm_keep_list() -> str:
-    from datafusion_loki_spark.operators.dedup import _semantic_pairs_ctes
+    from datafusion_loki_spark.operators.dedup import (
+        _cc_reach_ctes,
+        _semantic_pairs_ctes,
+    )
 
     return f"""
 WITH RECURSIVE {_PHASH_CTES},
@@ -4625,17 +4641,7 @@ qpairs AS (
   SELECT doc_a, doc_b FROM pairs
   WHERE hamming <= {MM_PHASH_HAM_MAX}
   GROUP BY doc_a, doc_b
-), edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM qpairs
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM qpairs
-), nodes AS (
-  SELECT DISTINCT src AS doc_id FROM edges
-), reach (doc_id, lbl) AS (
-  SELECT doc_id, doc_id FROM nodes
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id
-), cc AS (
+), {_cc_reach_ctes("qpairs")}, cc AS (
   SELECT doc_id, MIN(lbl) AS cc_label FROM reach GROUP BY doc_id
 ), keepers AS (
   -- grouping on the hex payload == grouping on the md5 digest; the

@@ -98,11 +98,12 @@ def test_cc_groups_leaves_no_checkpoint_behind(spark, sf_dir):
     assert _live_ids(spark) - before == set()
 
 
-
 def test_mm_keep_list_releases_phash_pairs(spark, sf_dir):
     # the CC labels read the phash pair checkpoint only while they are
-    # built, so the call releases it. Every checkpoint the call makes is
-    # held here, so the ContextCleaner cannot free one in its place.
+    # built, and the pair checkpoint is the only reader of the phash
+    # fingerprint checkpoint, so the call releases both. Every checkpoint
+    # the call makes is held here, so the ContextCleaner cannot free one
+    # in its place.
     from unittest import mock
 
     from datafusion_loki_spark.operators.multimodal import mm_dedup_keep_list
@@ -121,3 +122,6 @@ def test_mm_keep_list_releases_phash_pairs(spark, sf_dir):
     pairs = [f for f in made if f.columns == ["doc_a", "doc_b"]]
     assert pairs
     assert all(f._jdf.logicalPlan().rdd().id() not in live for f in pairs)
+    fps = [f for f in made if f.columns == ["doc_id", "h1", "h2"]]
+    assert fps
+    assert all(f._jdf.logicalPlan().rdd().id() not in live for f in fps)

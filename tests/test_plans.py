@@ -818,7 +818,7 @@ def test_cc_local_matches_distributed(spark, sf_dir, gates_off):
     assert local and local == dist
 
 
-def test_overlap_helper_order_kill_switch_and_errors():
+def test_overlap_helper_keeps_thunk_order_and_raises():
     # OPTIMIZATION_r15 change 8: results come back in thunk order and a
     # thunk's exception propagates unchanged
     from datafusion_loki_spark.functions.overlap import (
@@ -835,7 +835,7 @@ def test_overlap_helper_order_kill_switch_and_errors():
         materialize_concurrently(lambda: 1, boom)
 
 
-def test_overlap_kill_switch_matches_concurrent(
+def test_keep_list_rows_match_sequential_and_distributed(
     spark, sf_dir, gates_off, fast_paths_off
 ):
     # change 8 changes WHEN the eager sub-DAGs run, never what they
@@ -991,20 +991,31 @@ def test_repeated_ngrams_join_back_never_broadcasts_grams(spark, sf_dir):
     assert "BroadcastHashJoin" not in plan, plan
 
 
-def test_remove_repeated_spans_inherits_span_family_plan_rules(spark, sf_dir):
-    # The removal op reuses the audit's census + join-back topology and
-    # must inherit its pins: both span joins merge-pinned (the stat-less
+@pytest.mark.parametrize(
+    "name",
+    [
+        "text_remove_repeated_spans",
+        "text_remove_within_repeats",
+        "text_dedup_within_keep_first",
+    ],
+)
+def test_span_removal_inherits_span_family_plan_rules(spark, sf_dir, name):
+    # The removal ops reuse the audit's census + join-back topology
+    # (a cross-doc census, a per-doc dup count, or a per-doc dup count
+    # plus the keep-first filter, all feeding _excise_covered) and must
+    # inherit its pins: both span joins merge-pinned (the stat-less
     # explode underneath would otherwise broadcast a token-scale side),
     # no inferred generate-filter cloning the tokenizer into the scan,
     # and the covered-position distinct keeps map-side partial
     # aggregation (two HashAggregates around its exchange).
-    plan = _plan(spark, sf_dir, "text_remove_repeated_spans")
+    plan = _plan(spark, sf_dir, name)
     assert plan.count("SortMergeJoin") == 2, plan
     assert "BroadcastHashJoin" not in plan, plan
-    opt = _optimized(spark, sf_dir, "text_remove_repeated_spans")
-    # one tokenize chain per branch (census/occ/tokpos) — lineage
-    # recompute is the documented trade; anything above 3 means a chain
-    # got cloned into a Filter or re-inlined per column
+    opt = _optimized(spark, sf_dir, name)
+    # one tokenize chain per branch (census/occ/tokpos; the within ops'
+    # occ/dup share one) — lineage recompute is the documented trade;
+    # anything above 3 means a chain got cloned into a Filter or
+    # re-inlined per column
     assert opt.count("split(") <= 3, f"split() x{opt.count('split(')}:\n{opt}"
 
 
@@ -1054,29 +1065,6 @@ def test_matryoshka_one_pair_pass_checkpointed_topk(spark, sf_dir):
     n_scans = plan.count("Scan parquet") or plan.count("FileScan")
     assert n_scans == 0, plan  # topk checkpoint feeds BOTH branches
     assert "CartesianProduct" not in plan, plan
-
-
-def test_within_repeats_inherits_span_family_plan_rules(spark, sf_dir):
-    # same pins as the cross-doc removal op: both span joins merge-pinned
-    # (stat-less explode underneath), no broadcast, bounded tokenize
-    # chains (occ/dup share one, tokpos re-derives — <= 3 split chains)
-    plan = _plan(spark, sf_dir, "text_remove_within_repeats")
-    assert plan.count("SortMergeJoin") == 2, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    opt = _optimized(spark, sf_dir, "text_remove_within_repeats")
-    assert opt.count("split(") <= 3, f"split() x{opt.count('split(')}:\n{opt}"
-
-
-def test_within_keep_first_inherits_span_family_plan_rules(spark, sf_dir):
-    # the keep-first variant (round-9) carries min(start) through the
-    # census but must keep the exact plan shape of its remove-all
-    # sibling: both span joins merge-pinned, no broadcast, <= 3
-    # tokenize chains
-    plan = _plan(spark, sf_dir, "text_dedup_within_keep_first")
-    assert plan.count("SortMergeJoin") == 2, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    opt = _optimized(spark, sf_dir, "text_dedup_within_keep_first")
-    assert opt.count("split(") <= 3, f"split() x{opt.count('split(')}:\n{opt}"
 
 
 def test_scrub_pii_pure_projection(spark, sf_dir):
