@@ -15,9 +15,16 @@ order and the first exception propagates unchanged.
 
 This changes WHEN the same jobs run, never what they compute — every
 thunk is the identical eager call the operator previously made inline.
+Each thread runs its thunk under the caller's Spark local properties
+(job group, description, scheduler pool), so the jobs it starts are
+charged to, and cancellable with, the caller's group — also when an
+overlapped thunk overlaps thunks of its own.
 """
 
+import warnings
 from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 
 
 def materialize_concurrently(*thunks):
@@ -27,6 +34,12 @@ def materialize_concurrently(*thunks):
     bounded collects); a single thunk degrades to a plain call."""
     if len(thunks) == 1:
         return (thunks[0](),)
+    # the warning says only that session tags are not carried over
+    with warnings.catch_warnings():
+        warnings.filterwarnings(
+            "ignore", "Spark session is not provided", UserWarning
+        )
+        thunks = [inheritable_thread_target(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return tuple(f.result() for f in futures)

@@ -1227,10 +1227,12 @@ def _decimal_replay_safe(spark: SparkSession, E) -> bool:
         (prec=60) returns a finite mean;
     (c) pre-JDK-19 JVMs: Spark's cast stringifies via Double.toString,
         which is only guaranteed shortest-roundtrip (== repr) on 19+ —
-        on older JVMs run a ONE-JOB canary comparing Spark's own
-        double→decimal(38,20)→string cast against _dec20 on a bounded
-        deterministic subsample (extremes + strides) of the actual
-        values, cached per (application, sample). Sampled, not
+        on older JVMs run a canary comparing Spark's own
+        double→decimal(38,20)→string cast of a one-column local frame
+        (Spark folds the cast into the local relation, so it starts no
+        job) against _dec20 on a bounded deterministic subsample
+        (extremes + strides) of the actual values, cached per
+        (application, sample). Sampled, not
         exhaustive — the bit-exactness pins in tests/ verify full
         equality on the test corpora; the canary catches a
         systematically divergent JVM."""
@@ -1265,19 +1267,23 @@ def _decimal_replay_safe(spark: SparkSession, E) -> bool:
     )
     ok = _REPLAY_CANARY_OK.get(key)
     if ok is None:
-        values = sample.tolist()
-        cols = [
-            F.lit(v).cast("decimal(38,20)").cast("string") for v in values
-        ]
-        jvm_strs = list(spark.range(1).select(*cols).first())
         from decimal import Decimal
 
+        # one double column cast the way the distributed loop casts its
+        # column; each row carries its own value back (doubles cross
+        # Arrow bit-exact), so the check does not lean on row order
+        rows = (
+            local.local_frame(
+                spark, [(v,) for v in sample.tolist()], "v double"
+            )
+            .select("v", F.col("v").cast("decimal(38,20)").cast("string"))
+            .collect()
+        )
         # value comparison (Decimal == ignores exponent/format), so a
         # notation difference between BigDecimal.toString and Python's
         # Decimal.__str__ can never masquerade as a replay divergence
-        ok = all(
-            s is not None and Decimal(s) == _dec20(v)
-            for v, s in zip(values, jvm_strs)
+        ok = len(rows) == sample.size and all(
+            s is not None and Decimal(s) == _dec20(v) for v, s in rows
         )
         _REPLAY_CANARY_OK[key] = ok
         if len(_REPLAY_CANARY_OK) > 64:  # long-lived driver hygiene

@@ -69,6 +69,12 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Python data source filter pushdown (the loki reader's pushFilters).
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # Fork Python workers from a daemon that has already imported
+        # pandas, pyarrow and this package's worker-side modules
+        # (_daemon.py): a worker that Spark discards, as a LIMIT that
+        # stops reading a Python scan early does, is replaced without
+        # re-paying ~0.6 s of imports.
+        .config("spark.python.daemon.module", "datafusion_loki_spark._daemon")
         # Deterministic timestamp semantics: string→timestamp casts and
         # date functions resolve in UTC everywhere (the loki wire protocol
         # is ns-since-epoch; a host-tz-dependent session would make the

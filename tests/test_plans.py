@@ -835,6 +835,39 @@ def test_overlap_helper_keeps_thunk_order_and_raises():
         materialize_concurrently(lambda: 1, boom)
 
 
+def test_overlap_jobs_are_charged_to_the_callers_job_group(spark):
+    # the threads run their thunks under the caller's local properties:
+    # every job two concurrent count() thunks start is listed under the
+    # caller's job group, exactly as when the thunks run inline
+    import time
+
+    from datafusion_loki_spark.functions.overlap import (
+        materialize_concurrently,
+    )
+
+    sc = spark.sparkContext
+    thunks = (
+        lambda: spark.range(10).count(),
+        lambda: spark.range(20).filter("id % 2 = 0").count(),
+    )
+
+    def group_jobs(run):
+        group = f"overlap_{time.time_ns()}"
+        sc.setJobGroup(group, "overlap")
+        try:
+            result = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    inline = group_jobs(lambda: tuple(t() for t in thunks))
+    concurrent = group_jobs(lambda: materialize_concurrently(*thunks))
+    assert inline[0] == concurrent[0] == (10, 10)
+    assert concurrent[1] == inline[1] >= 2
+
+
 def test_keep_list_rows_match_sequential_and_distributed(
     spark, sf_dir, gates_off, fast_paths_off
 ):

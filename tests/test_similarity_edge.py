@@ -195,9 +195,61 @@ def test_replay_canary_reruns_for_a_new_value_regime(spark, monkeypatch):
     # The pre-JDK-19 stringification canary caches its verdict per
     # (application, sampled values): a later fit whose values sit in a
     # different regime (exponent-notation doubles) must run its own
-    # one-job canary, while a repeat of a fit — rows in any order —
-    # reuses the cached verdict and starts no job.
+    # canary, while a repeat of a fit — rows in any order — reuses the
+    # cached verdict. The canary casts a local frame, which Spark folds
+    # driver-side, so no call starts a Spark job.
     import time
+
+    import numpy as np
+    import pytest
+
+    from datafusion_loki_spark.functions import local
+    from datafusion_loki_spark.operators import similarity
+
+    jvm_spec = spark._jvm.java.lang.System.getProperty(
+        "java.specification.version"
+    )
+    if float(jvm_spec) >= 19:
+        pytest.skip("the canary only runs on pre-19 JVMs")
+    monkeypatch.setattr(similarity, "_REPLAY_CANARY_OK", {})
+    frames = []
+    local_frame = local.local_frame
+
+    def counting_local_frame(*args):
+        frames.append(args)
+        return local_frame(*args)
+
+    monkeypatch.setattr(local, "local_frame", counting_local_frame)
+    sc = spark.sparkContext
+
+    def canaries_of(E):
+        group = f"replay_canary_{time.time_ns()}"
+        sc.setJobGroup(group, "replay canary")
+        before = len(frames)
+        try:
+            ok = similarity._decimal_replay_safe(spark, E)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert ok
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        return len(frames) - before
+
+    plain = np.array([[0.25, -1.5], [3.0, 0.125], [2.75, -0.5]])
+    tiny = np.array([[1.5e-7, -2.25e-9], [3e-6, 7.5e-8]])
+    assert canaries_of(plain) == 1
+    assert canaries_of(tiny) == 1
+    assert canaries_of(plain) == 0
+    assert canaries_of(plain[::-1].copy()) == 0
+    assert canaries_of(tiny) == 0
+
+
+def test_replay_canary_catches_a_divergent_replay(spark, monkeypatch):
+    # The canary compares Spark's own double→decimal(38,20)→string cast
+    # with _dec20 on this JVM: a replay that rounds differently from
+    # Spark must turn the local fit off.
+    from decimal import Decimal
 
     import numpy as np
     import pytest
@@ -209,25 +261,13 @@ def test_replay_canary_reruns_for_a_new_value_regime(spark, monkeypatch):
     )
     if float(jvm_spec) >= 19:
         pytest.skip("the canary only runs on pre-19 JVMs")
+    E = np.array([[0.25, -1.5], [3.0, 0.125], [1.5e-7, -2.25e-9]])
     monkeypatch.setattr(similarity, "_REPLAY_CANARY_OK", {})
-    sc = spark.sparkContext
+    assert similarity._decimal_replay_safe(spark, E)
 
-    def jobs_of(E):
-        group = f"replay_canary_{time.time_ns()}"
-        sc.setJobGroup(group, "replay canary")
-        try:
-            ok = similarity._decimal_replay_safe(spark, E)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert ok
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    plain = np.array([[0.25, -1.5], [3.0, 0.125], [2.75, -0.5]])
-    tiny = np.array([[1.5e-7, -2.25e-9], [3e-6, 7.5e-8]])
-    assert jobs_of(plain) == 1
-    assert jobs_of(tiny) == 1
-    assert jobs_of(plain) == 0
-    assert jobs_of(plain[::-1].copy()) == 0
-    assert jobs_of(tiny) == 0
+    dec20 = similarity._dec20
+    monkeypatch.setattr(similarity, "_REPLAY_CANARY_OK", {})
+    monkeypatch.setattr(
+        similarity, "_dec20", lambda x: dec20(x) + Decimal("1e-20")
+    )
+    assert not similarity._decimal_replay_safe(spark, E)
