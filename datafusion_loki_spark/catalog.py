@@ -13,13 +13,91 @@ SURVEY.md §7.4): ns on the wire, µs in SQL.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import threading
+from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
+
+from datafusion_loki_spark.session import parquet_schema_confs
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+
+def _local_path(path: str) -> "str | None":
+    """``path`` as a local filesystem path, or None when the local
+    filesystem cannot see it: a scheme-prefixed URI (s3://, hdfs:// —
+    i.e. exactly the at-scale deployment) or a ``file://`` URI naming
+    another host. A ``file:`` URI is local, so it is unwrapped."""
+    if path.lower().startswith("file:"):
+        url = urlparse(path)
+        if url.netloc not in ("", "localhost") or not url.path:
+            return None
+        return unquote(url.path)
+    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path):
+        return None
+    return path
+
+
+def _footer_digest(path: str) -> "bytes | None":
+    """Digest of the footer of the local parquet FILE at ``path``: the
+    bytes Spark reads to infer its schema. None for anything else — a
+    directory, a remote URI, a file that does not end in a plain
+    parquet footer."""
+    local = _local_path(path)
+    if local is None or not os.path.isfile(local):
+        return None
+    try:
+        with open(local, "rb") as f:
+            f.seek(-8, os.SEEK_END)
+            tail = f.read(8)
+            if tail[4:] != b"PAR1":
+                return None
+            f.seek(-8 - int.from_bytes(tail[:4], "little"), os.SEEK_END)
+            return hashlib.blake2b(f.read()).digest()
+    except OSError:
+        return None
+
+
+_SCHEMA_MEMO_CAP = 256
+_schema_memo: "OrderedDict[tuple, StructType]" = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without re-inferring a schema this
+    process has already inferred: Spark infers a parquet schema by
+    running a footer-reading job on every read.
+
+    For a local parquet file the memo key is the footer's digest plus
+    the session's values of the confs that shape inference, so a
+    rewritten file (same size and mtime too) or a flipped conf infers
+    again. A hit reads with the memoized schema as the user schema;
+    every read still lists and scans its file, and only the StructType
+    is kept. Directories and remote URIs read exactly as
+    ``spark.read.parquet`` does. Overlap threads may race a miss: at
+    worst one inference runs twice."""
+    digest = _footer_digest(path)
+    if digest is None:
+        return spark.read.parquet(path)
+    key = (digest, parquet_schema_confs(spark))
+    with _schema_memo_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_memo_lock:
+        _schema_memo[key] = df.schema
+        while len(_schema_memo) > _SCHEMA_MEMO_CAP:
+            _schema_memo.popitem(last=False)
+    return df
 
 
 def probe_events_ts_is_long(spark: SparkSession, path: str) -> bool:
@@ -29,11 +107,11 @@ def probe_events_ts_is_long(spark: SparkSession, path: str) -> bool:
     the batch loader and the file-stream source, so the two paths can
     never disagree on the encoding dispatch."""
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     except Exception:
         # TIMESTAMP(NANOS) parquet: Spark raises unless read as raw int64.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     return isinstance(df.schema["ts"].dataType, LongType)
 
 
@@ -61,23 +139,15 @@ def _est_scan_tasks(path: str) -> "int | None":
     about), so it is safe to call on every load_table.
 
     Returns None — "can't tell" — for any path the LOCAL filesystem
-    cannot list: a scheme-prefixed URI (s3://, hdfs:// — i.e. exactly
-    the at-scale deployment) or a dir with no visible parquet files.
-    The caller must treat None as FAIL CLOSED (skip the fan-out): the
-    r15 shape returned 1 here, which would have round-robin-shuffled
-    every payload byte of a full-corpus remote scan (r16 worklist #2).
-    A ``file://`` URI is local, so it is unwrapped to its path first."""
+    cannot list (``_local_path``) or a dir with no visible parquet
+    files. The caller must treat None as FAIL CLOSED (skip the
+    fan-out): the r15 shape returned 1 here, which would have
+    round-robin-shuffled every payload byte of a full-corpus remote
+    scan (r16 worklist #2)."""
     import glob
-    import re
-    from urllib.parse import unquote, urlparse
 
-    if path.lower().startswith("file:"):
-        url = urlparse(path)
-        if url.netloc not in ("", "localhost") or not url.path:
-            return None
-        path = unquote(url.path)
-    # scheme-prefixed URI: not a local path, os.stat would lie
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path):
+    path = _local_path(path)
+    if path is None:
         return None
     if os.path.isfile(path):
         files = [path]
@@ -154,9 +224,9 @@ def load_table(
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         ts_is_long = probe_events_ts_is_long(spark, path)
-        df = normalize_events_ts(spark.read.parquet(path), ts_is_long)
+        df = normalize_events_ts(read_parquet(spark, path), ts_is_long)
     else:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     if fanout:
         df = scan_fanout(
             df, spark, path, key=fanout if isinstance(fanout, str) else None

@@ -111,3 +111,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Every Spark SQL conf whose value changes the schema Spark infers from a
+# parquet footer: the ones ParquetToSparkSchemaConverter reads in Spark
+# 4.1.2. They key catalog.read_parquet's schema memo and choose no path.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+)
+
+
+def parquet_schema_confs(spark: SparkSession) -> tuple:
+    """The session's values of the confs that shape parquet schema
+    inference, in ``_PARQUET_SCHEMA_CONFS`` order."""
+    return tuple(spark.conf.get(key) for key in _PARQUET_SCHEMA_CONFS)
