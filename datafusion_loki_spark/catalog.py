@@ -88,8 +88,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     key = (digest, parquet_schema_confs(spark))
     with _schema_memo_lock:
         schema = _schema_memo.get(key)
-        if schema is not None:
-            _schema_memo.move_to_end(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
     df = spark.read.parquet(path)

@@ -134,3 +134,66 @@ def test_the_memo_stays_within_its_bound(spark, tmp_path, memo, monkeypatch):
         catalog.load_table(spark, str(tmp_path), f"t{i}")
         assert len(memo) == min(i + 1, 3)
     assert [s.names for s in memo.values()] == [["c2"], ["c3"], ["c4"]]
+
+
+def test_concurrent_reads_keep_the_memo_bounded_and_keyed(tmp_path, memo, monkeypatch):
+    # overlap threads share the memo: with more threads than cores and a
+    # short switch interval, every read must still get its own file's
+    # schema and the memo must stay within its bound (a fake session:
+    # this pins the memo's bookkeeping, not Spark)
+    import sys
+    import threading
+    import types
+
+    from pyspark.sql.types import StructField, StructType
+
+    cap, n_files, n_threads = 4, 12, 16
+    monkeypatch.setattr(catalog, "_SCHEMA_MEMO_CAP", cap)
+    paths = [str(tmp_path / f"t{i}.parquet") for i in range(n_files)]
+    for i, path in enumerate(paths):
+        _write(path, **{f"c{i}": [i]})
+
+    def column(path):  # t<i>.parquet holds the one column c<i>
+        return "c" + os.path.basename(path)[1 : -len(".parquet")]
+
+    class Reader:
+        def __init__(self, schema=None):
+            self._schema = schema
+
+        def schema(self, schema):
+            return Reader(schema)
+
+        def parquet(self, path):
+            inferred = StructType([StructField(column(path), LongType())])
+            if self._schema is not None:
+                assert self._schema == inferred, (path, self._schema)
+            return types.SimpleNamespace(schema=self._schema or inferred)
+
+    fake = types.SimpleNamespace(
+        conf=types.SimpleNamespace(get=lambda key: "v"),
+        read=Reader(),
+    )
+    errors = []
+
+    def worker(k):
+        try:
+            for j in range(60):
+                path = paths[(k * 7 + j) % n_files]
+                got = catalog.read_parquet(fake, path).schema
+                assert got.names == [column(path)]
+        except Exception as e:  # collected: a thread's assertion is not the test's
+            errors.append(e)
+
+    before = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(before)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert 1 <= len(memo) <= cap
