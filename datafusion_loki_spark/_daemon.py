@@ -20,6 +20,13 @@ the ``pyspark.zip`` directory re-read too.
 Spark launches it as ``python -m datafusion_loki_spark._daemon
 <worker module>``; ``pyspark.daemon`` reads the worker module from
 ``sys.argv[1]`` when imported.
+
+The daemon and its workers accept on a Unix domain socket, not on
+loopback TCP: ``get_spark`` sets ``spark.python.unix.domain.socket.enabled``
+and points ``spark.python.unix.domain.socket.dir`` at a private, short
+directory of the driver process, where ``manager()`` binds
+``.<uuid4>.sock``. Over that socket a worker skips the auth secret it
+checks over TCP, so the directory's 0700 mode is the access control.
 """
 
 import importlib

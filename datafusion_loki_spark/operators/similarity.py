@@ -1335,6 +1335,11 @@ def _local_lloyd(train_es: list, seed_cents: list) -> list:
     return cents
 
 
+# The 1-row codebook's schema: what _kmeans_cents_row yields, what
+# _cents_local_df builds and what {base}/centroids.parquet holds.
+CENTS_SCHEMA = "cents array<struct<cid:bigint,vec:array<double>>>"
+
+
 def _cents_local_df(spark: SparkSession, cents: list) -> DataFrame:
     """The 1-row codebook frame (same shape _kmeans_cents_row yields)
     from a driver-side [(cid, vec)] list, as a local relation — not as
@@ -1343,8 +1348,14 @@ def _cents_local_df(spark: SparkSession, cents: list) -> DataFrame:
     return local.local_frame(
         spark,
         [([(int(c), [float(x) for x in v]) for c, v in cents],)],
-        "cents array<struct<cid:bigint,vec:array<double>>>",
+        CENTS_SCHEMA,
     )
+
+
+def read_codebook(spark: SparkSession, base_dir: str) -> DataFrame:
+    """The persisted codebook of the index snapshot at ``base_dir``,
+    read with its known schema: no schema-inference job."""
+    return spark.read.schema(CENTS_SCHEMA).parquet(f"{base_dir}/centroids.parquet")
 
 
 def _local_fit_inputs(train_d: DataFrame, seeds_d: DataFrame):
@@ -1777,7 +1788,7 @@ def _query_ivf_index_once(
         "vec_id", F.expr(_TO_DOUBLE.format(a="embedding")).alias("e")
     ).where(F.col("vec_id") < N_QUERIES)
     base_dir = resolve_index_base(spark, index_dir)
-    cents = spark.read.parquet(f"{base_dir}/centroids.parquet")
+    cents = read_codebook(spark, base_dir)
     # materialize the probe frame ONCE (queries x IVF_PROBES rows): both
     # the driver-side probed-cell set below and the scorer's broadcast
     # side read it. r16: COLLECT it (bounded by construction — the same
@@ -2833,7 +2844,7 @@ def append_ivf_index(
     build once / append per-ingest / refit only when the cell-balance
     audit (sim_cell_balance) says the codebook has drifted."""
     base_dir = resolve_index_base(spark, index_dir)
-    cents = spark.read.parquet(f"{base_dir}/centroids.parquet")
+    cents = read_codebook(spark, base_dir)
     (
         _members_projection(_kmeans_assign(batch_d, cents))
         .write.mode("append")

@@ -1834,16 +1834,14 @@ def _bpe_stage(spark: SparkSession, sf_dir: str, vocab: DataFrame) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     key = docs.agg(F.expr(_BPE_FP_SPARK).alias("k")).first().k
     path = os.path.join(_SCRATCH_ROOT, _BPE_STAGE_FAMILY, key)
-    (
-        vocab.select(
-            F.lit(key).alias("sf_key"),
-            "w",
-            F.expr("size(split(trim(s), ' '))").alias("n_sym"),
-        )
-        .write.mode("overwrite")
-        .parquet(path)
+    staged = vocab.select(
+        F.lit(key).alias("sf_key"),
+        "w",
+        F.expr("size(split(trim(s), ' '))").alias("n_sym"),
     )
-    return spark.read.parquet(path).select("w", "n_sym")
+    staged.write.mode("overwrite").parquet(path)
+    # read back with the schema just written: no schema-inference job
+    return spark.read.schema(staged.schema).parquet(path).select("w", "n_sym")
 
 
 def text_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:

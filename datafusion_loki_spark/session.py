@@ -9,9 +9,23 @@ columnar. Tests run on local[N]; nothing here is local-mode specific.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+
+@functools.cache
+def _socket_dir() -> str:
+    """This process's directory for Spark's Python-worker Unix sockets:
+    made once under ``/tmp`` (mode 0700, whatever TMPDIR says) and
+    removed when the interpreter that made it exits."""
+    path = tempfile.mkdtemp(prefix="spark-uds-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(
@@ -75,6 +89,20 @@ def get_spark(
         # stops reading a Python scan early does, is replaced without
         # re-paying ~0.6 s of imports.
         .config("spark.python.daemon.module", "datafusion_loki_spark._daemon")
+        # Talk to Python workers over a Unix domain socket, not loopback
+        # TCP. Over TCP every JVM<->worker round trip can wait for
+        # Nagle's algorithm to meet the peer's delayed ACK, Linux's
+        # 40 ms minimum timer: a 1-row mapInArrow waited 40-47 ms for
+        # its one input row, 0.1-2 ms over the socket, and a Loki scan
+        # task pays it per call. The socket lives in a directory of its
+        # own (_socket_dir): short, because the worker daemon binds
+        # <dir>/.<uuid4>.sock and Linux caps that path at 107 bytes,
+        # which TMPDIR or java.io.tmpdir (Spark's default) under a deep
+        # checkout exceeds; and private (0700), because over the socket
+        # pyspark.daemon skips the auth secret it checks over TCP, so
+        # the directory's permissions are the only access control.
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
         # Deterministic timestamp semantics: string→timestamp casts and
         # date functions resolve in UTC everywhere (the loki wire protocol
         # is ns-since-epoch; a host-tz-dependent session would make the

@@ -1335,6 +1335,7 @@ def _ivf_ingest_batch_fn(index_dir: str):
             _NRM_E_SPARK,
             _TO_DOUBLE,
             _kmeans_assign,
+            read_codebook,
             resolve_index_base,
         )
 
@@ -1343,7 +1344,7 @@ def _ivf_ingest_batch_fn(index_dir: str):
         # new snapshot, and subsequent batches must land inside it (the
         # superseded base dir is dead — writing there loses the batch)
         base_dir = resolve_index_base(spark_b, index_dir)
-        cents = spark_b.read.parquet(f"{base_dir}/centroids.parquet")
+        cents = read_codebook(spark_b, base_dir)
         batch_d = batch_df.select(
             "vec_id", F.expr(_TO_DOUBLE.format(a="embedding")).alias("e")
         )
