@@ -24,9 +24,16 @@ explicit argument:
 
 Determinism: the salt is ``xxhash64 mod N`` of the cluster (or all)
 columns — replayable, no RNG.
+
+The module also holds the manifest bookkeeping of the package's
+versioned directories (``atomic_manifest_commit``, ``VersionedDir``).
 """
 
 from __future__ import annotations
+
+import re
+import uuid
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -117,8 +124,8 @@ def atomic_manifest_commit(
     """Commit a JSON manifest file via create-temp + rename — the shared
     commit primitive of both snapshot protocols (the streaming ingest
     fold's ``manifest-v{N}.json`` and the whole-index
-    ``index-manifest-v{M}.json``), factored so the two hand-rolled
-    copies can never drift on the race rules:
+    ``index-manifest-v{M}.json``, both through VersionedDir.commit), so
+    the two can never drift on the race rules:
 
     - the temp name is unique PER ATTEMPT, not per version: two
       concurrent committers targeting the same version must never share
@@ -133,7 +140,6 @@ def atomic_manifest_commit(
       conditional PUT.
     """
     import json
-    import uuid
 
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.Path(dir_path).getFileSystem(
@@ -155,6 +161,130 @@ def atomic_manifest_commit(
             f"committed {final} first (version already exists), or this "
             f"attempt's temp {tmp} was swept by another run's GC (only "
             "possible if the attempt outlived the GC age gate)"
+        )
+
+
+# temps and unreferenced entries younger than this are presumed to belong
+# to a live concurrent attempt and are left for a later run's GC (ADVICE
+# r9: a post-commit sweep could delete an in-flight attempt's temp)
+_TMP_SWEEP_AGE_MS = 60 * 60 * 1000
+
+
+def _fs_now_ms(jvm, fs, dir_path: str) -> int:
+    """The filesystem's OWN clock: mtime of a freshly-created probe file.
+
+    The sweep's age gate compares against mtimes that the FS stamped,
+    so 'now' must come from the same clock — driver wall time
+    (time.time()) can skew against an object store's clock, making a
+    live attempt's temp look older than the gate (swept, failing its
+    rename) or crashed temps look perpetually young (round-11 ADVICE).
+    The probe name is NONCED per attempt (the manifest-temp rule):
+    concurrent attempts each probe their own file, so one attempt's
+    delete can never race another's create/stat — a fixed name made
+    getFileStatus throwable mid-race (round-11 review). A crash between
+    create and delete leaves one empty dot-file; it matches neither the
+    manifest pattern nor the temp pattern, so readers and the sweep
+    ignore it."""
+    probe = jvm.org.apache.hadoop.fs.Path(
+        f"{dir_path}/.gc-clock-probe.{uuid.uuid4().hex}"
+    )
+    fs.create(probe, True).close()
+    try:
+        return fs.getFileStatus(probe).getModificationTime()
+    finally:
+        fs.delete(probe, False)
+
+
+class Listing(NamedTuple):
+    """One listing of a VersionedDir: committed manifest versions
+    (ascending), subdirectories and nonce'd manifest temps, each entry a
+    (name, modification_ms) pair sorted by name."""
+
+    versions: list[int]
+    dirs: list[tuple[str, int]]
+    tmps: list[tuple[str, int]]
+
+
+class VersionedDir:
+    """A directory whose current state is named by its newest
+    ``{prefix}-v{N}.json`` manifest — the one bookkeeping shared by both
+    snapshot protocols: the IVF index root (``index-manifest-v{M}``
+    over ``base-v{M}-{nonce}/`` snapshot dirs) and the streamed-ingest
+    table (``manifest-v{N}`` over ``gen=`` partitions). The rules:
+
+    - the newest manifest is authoritative for reads; a listing feeds
+      only version numbering, fold-set selection and GC;
+    - a commit is ``atomic_manifest_commit`` (nonce'd temp + rename, no
+      delete-before-rename), so a version collision fails loudly;
+    - a writer lists BEFORE it writes anything, and its GC works from
+      that pre-commit listing, so it never sweeps its own in-flight state
+      nor one an attempt started after it;
+    - what GC cannot prove dead — temps and unreferenced entries that may
+      belong to a live concurrent attempt — is swept only once older
+      than ``_TMP_SWEEP_AGE_MS`` on the filesystem's own clock.
+
+    A missing directory lists empty and creates nothing."""
+
+    def __init__(self, spark, path: str, prefix: str):
+        self.spark, self.path, self.prefix = spark, path, prefix
+        self._jvm = spark._jvm
+        self._fs = self._jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
+        self._manifest_re = re.compile(rf"{re.escape(prefix)}-v(\d+)\.json")
+
+    def _path(self, name: str):
+        return self._jvm.org.apache.hadoop.fs.Path(f"{self.path}/{name}")
+
+    def manifest_name(self, version: int) -> str:
+        return f"{self.prefix}-v{version}.json"
+
+    def listing(self) -> Listing:
+        versions, dirs, tmps = [], [], []
+        tmp = f".{self.prefix}-"  # atomic_manifest_commit's temp names
+        jpath = self._jvm.org.apache.hadoop.fs.Path(self.path)
+        if self._fs.exists(jpath):
+            for status in self._fs.listStatus(jpath):
+                name = status.getPath().getName()
+                entry = (name, status.getModificationTime())
+                if status.isDirectory():
+                    dirs.append(entry)
+                elif name.startswith(tmp) and name.endswith(".tmp"):
+                    tmps.append(entry)
+                elif m := self._manifest_re.fullmatch(name):
+                    versions.append(int(m.group(1)))
+        return Listing(sorted(versions), sorted(dirs), sorted(tmps))
+
+    def newest(self, listing: Listing | None = None) -> dict | None:
+        """The highest-version manifest, or None when there is none."""
+        versions = (listing or self.listing()).versions
+        if not versions:
+            return None
+        return read_json_file(
+            self.spark, f"{self.path}/{self.manifest_name(versions[-1])}"
+        )
+
+    def commit(self, version: int, payload: dict) -> None:
+        atomic_manifest_commit(
+            self.spark, self.path, self.manifest_name(version), payload
+        )
+
+    def delete(self, names) -> None:
+        """Delete the named entries (files or whole directories)."""
+        for name in names:
+            self._fs.delete(self._path(name), True)
+
+    def sweep_aged(self, entries: list[tuple[str, int]]) -> None:
+        """Delete the (name, modification_ms) entries at least
+        ``_TMP_SWEEP_AGE_MS`` old. The FS clock is probed only when there
+        is something to age-gate: an unconditional probe costs three FS
+        round trips and, via fs.create's implicit mkdirs, could conjure
+        the directory itself (round-11 review)."""
+        if not entries:
+            return
+        now_ms = _fs_now_ms(self._jvm, self._fs, self.path)
+        self.delete(
+            n for n, mod_ms in entries if now_ms - mod_ms >= _TMP_SWEEP_AGE_MS
         )
 
 

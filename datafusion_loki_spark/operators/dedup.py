@@ -2848,18 +2848,15 @@ def _semantic_index_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sample-fit k-means DAG executes exactly once per call however
     many frames read the members back."""
     from datafusion_loki_spark.operators.similarity import (
+        _read_members,
         build_ivf_index,
         scratch_index_dir,
     )
 
     index_dir = scratch_index_dir(spark, sf_dir, "semdedup")
-    build_ivf_index(spark, sf_dir, index_dir)
-    from datafusion_loki_spark.operators.similarity import _read_members
-
-    # explicit-schema read: ONE schema contract per table (round-10
-    # review — the empty-terminal-state hardening must not leave a
-    # schema-less reader behind)
-    return _read_members(spark, index_dir)
+    # explicit-schema read of the snapshot the build committed: ONE
+    # schema contract per table (round-10 review)
+    return _read_members(spark, build_ivf_index(spark, sf_dir, index_dir))
 
 
 def _semantic_pairs(members: DataFrame) -> DataFrame:

@@ -24,7 +24,6 @@ partial filtering). LSH shuffles once on the signature key.
 from __future__ import annotations
 
 import hashlib
-import re
 import uuid
 
 import pyspark.sql.functions as F
@@ -1543,8 +1542,9 @@ def scratch_index_dir(spark: SparkSession, sf_dir: str, family: str) -> str:
     workers, a bench run beside a driver run — must never race one
     directory's overwrite against the other's scan). Deterministic
     within a session, which is all the build-then-query lifecycle needs;
-    every build overwrites, so cross-session reuse was never real —
-    which is why each call also sweeps sessions staler than the TTL."""
+    every build commits a fresh snapshot, so cross-session reuse was
+    never real — which is why each call also sweeps sessions staler than
+    the TTL."""
     import os
 
     _sweep_stale_scratch()
@@ -1613,20 +1613,21 @@ def _ivf_probe_and_score(
     )
 
 
-def build_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+def build_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> str:
     """Materialize the IVF index to disk — the production lifecycle
     (build once, query many) that the fit-inline operators amortize away
-    at test scale. Writes:
+    at test scale. Commits a fresh snapshot (the whole-index snapshot
+    protocol below) and returns its base dir, which holds:
 
-    - ``{base}/centroids.parquet`` — the 1-row codebook (K centroid
-      structs), exactly the localCheckpoint'd training output;
-    - ``{base}/members.parquet`` — (vec_id, e, c_nrm) PARTITIONED BY
-      cluster_id, so each IVF cell is its own partition directory;
+    - ``centroids.parquet`` — the 1-row codebook (K centroid structs),
+      exactly the localCheckpoint'd training output;
+    - ``members.parquet`` — (vec_id, e, c_nrm) PARTITIONED BY
+      cluster_id, so each IVF cell is its own partition directory.
 
-    where ``base`` is the resolved snapshot dir (resolve_index_base):
-    ``index_dir`` itself for a fresh index (flat legacy layout, no
-    manifest), or the manifest's base-v dir when rebuilding over a
-    retrained index.
+    Build is the from-scratch verb: a rebuild over a maintained index
+    commits a new snapshot, and the old one's tombstones and ingest
+    generations die with the superseded base dir, so they can neither
+    hide freshly built rows nor resurrect rows the rebuild never saw.
 
     100 TB posture: the build pays the sample-fit training plus ONE full
     corpus pass (assignment) and one corpus write clustered by cell —
@@ -1637,38 +1638,20 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     emb_d = emb.select(
         "vec_id", F.expr(_TO_DOUBLE.format(a="embedding")).alias("e")
     )
-    assigned, cents = _kmeans_fit(
-        emb_d, emb_d.where(F.expr(_TRAIN_PRED_SPARK))
+    _, base = _commit_index(
+        spark,
+        index_dir,
+        lambda _: _kmeans_fit(emb_d, emb_d.where(F.expr(_TRAIN_PRED_SPARK))),
     )
-    # a fresh index has no manifest and resolves to the flat root; a
-    # REBUILD over a retrained index overwrites its current snapshot
-    # in place (build is the from-scratch verb, not a new generation).
-    # Build-is-from-scratch also means the snapshot's MAINTENANCE state
-    # dies with the old contents: stale tombstones would hide freshly
-    # built rows whose (cluster_id, vec_id, gen) keys still match, and
-    # stale ingest generations would resurrect rows the rebuild never
-    # saw (round-12 ADVICE). Delete them FIRST — a crash mid-build then
-    # leaves a partial clean-slate snapshot a re-run repairs, never a
-    # new index haunted by the old one's deletes.
-    base_dir = resolve_index_base(spark, index_dir)
-    for stale in ("tombstones.parquet", "members_ingest.parquet"):
-        _, fs, jpath = _index_fs(spark, f"{base_dir}/{stale}")
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
-    _write_index(assigned, cents, base_dir)
+    return f"{index_dir}/{base}"
 
 
 def _write_index(assigned: DataFrame, cents: DataFrame, base_dir: str):
     """The ONE index write contract (overwrite layout, partitioning,
-    paths) shared by build and retrain — two hand-written copies were
-    drifting on write ORDER (round-11 review). Centroids commit FIRST:
-    a crash between the writes leaves the new codebook over the old
-    members — for BUILD (flat layout, no manifest) that is a
-    recall-degraded but duplicate-free index a re-run repairs;
-    members-first would leave assignments no codebook explains. For
-    RETRAIN the pair lands in an unreferenced base-v dir and readers
-    see nothing until the index-manifest commit (the whole-index
-    snapshot protocol above) — the mixed state is no longer readable."""
+    paths) shared by build and retrain through _commit_index. The pair
+    lands in an unreferenced base-v dir, so readers see nothing until the
+    index-manifest commit; centroids commit FIRST, so a crash
+    between the writes never leaves assignments no codebook explains."""
     cents.write.mode("overwrite").parquet(f"{base_dir}/centroids.parquet")
     (
         _members_projection(assigned)
@@ -1693,21 +1676,37 @@ def query_ivf_index(
     _ivf_probe_and_score read path, bit-identical to the fit-inline
     operator.
 
-    Bounded GC-race retry (round-12 Next #3): a retrain's post-commit GC
-    can sweep the base a reader resolved between the reader's manifest
-    resolution and its file reads. The eager work inside this function
-    (centroids read, probe checkpoint, member-file listing) is wrapped
-    in ONE retry on missing-path failures — the re-resolve lands on the
-    newly committed snapshot, so the race degrades to a second
-    resolution instead of a user-visible error. Files swept AFTER the
-    returned frame's listing (mid-action) still fail loud-transient —
-    true wait-for-readers needs leases (PERF_NOTES stance)."""
-    try:
-        return _query_ivf_index_once(spark, sf_dir, index_dir)
-    except Exception as e:  # noqa: BLE001 — filtered just below
-        if not _is_missing_path_error(e):
-            raise
-        return _query_ivf_index_once(spark, sf_dir, index_dir)
+    The eager work here (centroids read, probe collect, member-file
+    listing) runs under _retry_on_moved_snapshot with 2 attempts: a
+    retrain's post-commit GC sweeping the base this reader resolved
+    degrades to one re-resolution. The returned frame is lazy, so files
+    swept AFTER its listing still fail loud-transient —
+    query_ivf_index_eager covers the action too."""
+    return _retry_on_moved_snapshot(
+        spark,
+        index_dir,
+        2,
+        lambda base_dir: _query_ivf_index_once(spark, sf_dir, base_dir),
+    )
+
+
+def _retry_on_moved_snapshot(spark, index_dir: str, attempts: int, run):
+    """``run(base_dir)`` against the current snapshot, retried on a
+    vanished-path failure only if the snapshot MOVED: the same failure
+    under an unmoved manifest is real missing data and raises (never
+    spin on corruption). Lease-free by design: a bounded re-read instead
+    of reader bookkeeping (the PERF_NOTES leases-vs-retry stance)."""
+    base_dir = resolve_index_base(spark, index_dir)
+    for attempt in range(1, attempts + 1):
+        try:
+            return run(base_dir)
+        except Exception as e:  # noqa: BLE001 — filtered just below
+            if attempt == attempts or not _is_missing_path_error(e):
+                raise
+            moved = resolve_index_base(spark, index_dir)
+            if moved == base_dir:
+                raise
+            base_dir = moved
 
 
 def _is_missing_path_error(e: Exception) -> bool:
@@ -1734,60 +1733,38 @@ def query_ivf_index_eager(
     max_attempts: int = 3,
     _pre_action_hook=None,
 ) -> DataFrame:
-    """Whole-ACTION bounded retry (round 14 — closes the round-13
-    honest limit: 'a base swept mid-ACTION, after file listing, still
-    fails loud-transient'). query_ivf_index's retry covers its EAGER
-    work, but the frame it returns is lazy — a retrain's age-gated GC
-    can sweep the resolved base between the frame's file LISTING and
-    the caller's action reading those files. This entry point
-    materializes the result (a bounded queries x k frame — an eager
-    localCheckpoint, so post-return GC can't touch it either) inside a
-    retry loop KEYED BY THE MANIFEST VERSION: on a vanished-path
-    failure it re-resolves, and retries only if the snapshot actually
-    moved — the same failure with an UNMOVED manifest is real missing
-    data and raises (never spin on corruption). Lease-free by design:
-    bounded re-read of a bounded result instead of reader bookkeeping
-    (the PERF_NOTES leases-vs-retry stance, resolved in favor of
-    retry).
+    """query_ivf_index with the ACTION inside the retry (round 14 —
+    closes the round-13 honest limit: 'a base swept mid-ACTION, after
+    file listing, still fails loud-transient'). The frame
+    query_ivf_index returns is lazy — a retrain's age-gated GC can sweep
+    the resolved base between the frame's file LISTING and the caller's
+    action. This entry point materializes the result (a bounded
+    queries x k frame — an eager localCheckpoint, so post-return GC
+    can't touch it either) under the same _retry_on_moved_snapshot rule,
+    with ``max_attempts`` attempts.
 
     ``_pre_action_hook`` is a TEST-ONLY injection point, called once
     between plan construction and materialization, so the crash-window
     test can run a retrain + GC deterministically inside the window
     (tests/test_index_snapshot.py)."""
+    hooks = [_pre_action_hook] if _pre_action_hook is not None else []
 
-    def snapshot_key():
-        manifest = read_index_manifest(spark, index_dir)
-        return None if manifest is None else manifest["base"]
+    def run(base_dir):
+        frame = _query_ivf_index_once(spark, sf_dir, base_dir)
+        if hooks:
+            hooks.pop()()
+        return frame.localCheckpoint(eager=True)
 
-    last: Exception | None = None
-    for _ in range(max_attempts):
-        key = snapshot_key()
-        frame = query_ivf_index(spark, sf_dir, index_dir)
-        if _pre_action_hook is not None:
-            hook, _pre_action_hook = _pre_action_hook, None
-            hook()
-        try:
-            return frame.localCheckpoint(eager=True)
-        except Exception as e:  # noqa: BLE001 — filtered just below
-            if not _is_missing_path_error(e):
-                raise
-            if snapshot_key() == key:
-                # nothing was committed over us: the files are missing
-                # for a non-GC reason — surface it
-                raise
-            last = e
-    assert last is not None
-    raise last
+    return _retry_on_moved_snapshot(spark, index_dir, max_attempts, run)
 
 
 def _query_ivf_index_once(
-    spark: SparkSession, sf_dir: str, index_dir: str
+    spark: SparkSession, sf_dir: str, base_dir: str
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries_d = emb.select(
         "vec_id", F.expr(_TO_DOUBLE.format(a="embedding")).alias("e")
     ).where(F.col("vec_id") < N_QUERIES)
-    base_dir = resolve_index_base(spark, index_dir)
     cents = read_codebook(spark, base_dir)
     # materialize the probe frame ONCE (queries x IVF_PROBES rows): both
     # the driver-side probed-cell set below and the scorer's broadcast
@@ -2862,97 +2839,89 @@ def _index_fs(spark: SparkSession, path: str):
 
 # --- whole-index snapshot protocol -------------------------------------------
 #
-# retrain_ivf_index rewrites BOTH halves of the index (codebook + members),
-# and before round 12 those two overwrites were the documented crash/reader
-# window: a reader between them saw the new codebook over the old members —
-# assignments the codebook doesn't explain (the round-11 honest-limits
-# note). The fix is the ingest fold's manifest protocol applied to the
-# WHOLE index directory:
+# The index root is a layout.VersionedDir (listing, newest manifest,
+# age-gated sweep and the atomic commit live there, shared with the ingest
+# fold's manifest):
 #
-#   {index_dir}/index-manifest-v{M}.json   <- newest version wins (atomic
-#                                             create-temp + rename commit)
+#   {index_dir}/index-manifest-v{M}.json   <- newest version wins
 #   {index_dir}/base-v{M}-{nonce}/         <- ONE self-contained snapshot:
 #       centroids.parquet                     codebook
 #       members.parquet/                      cell-partitioned base table
 #       tombstones.parquet/                   pending deletes (optional)
 #       members_ingest.parquet/               streamed generations (optional)
 #
+# build and retrain both commit through _commit_index: the fresh base lands
+# in an unreferenced dir and the manifest rename is the single commit point
+# (before it readers see the old snapshot exactly, after it the new one).
 # Every reader and every incremental writer (append / delete / ingest /
-# compact) RESOLVES the base directory through the newest manifest first,
-# so tombstones and ingest generations written after a retrain live INSIDE
-# the generation they apply to — a retrain's fold consumes them by
-# construction (the new base dir starts empty) and the manifest rename is
-# the single commit point: before it readers see the old snapshot exactly,
-# after it the new one exactly. A never-retrained index has no manifest
-# and resolves to {index_dir} itself — the legacy flat layout, unchanged,
-# which is also what build_ivf_index writes (generation 0 IS the root).
+# compact) RESOLVES the base through the newest manifest once per
+# operation, so tombstones and ingest generations live INSIDE the snapshot
+# they apply to and die with it when a build or retrain supersedes it.
 #
-# Crash windows (all repaired by re-running the retrain, single-writer
+# Crash windows (all repaired by re-running the verb, single-writer
 # batch-maintenance contract):
-#   - before the manifest commit: an orphan base-v dir nobody references;
-#     readers still see the old snapshot exactly (THE closed window). The
-#     orphan is age-gated GC'd by a later retrain (it may belong to a
-#     live concurrent attempt — same rule as the manifest-temp sweep).
-#   - after the commit, before GC: the superseded snapshot's files linger;
-#     readers resolved to the new base never touch them; the next retrain
-#     re-sweeps. Old tombstones/ingest linger INSIDE the dead base dir,
-#     so they can never be mis-applied to the new base (the flat layout
-#     could not have guaranteed this — a leftover root tombstone would
-#     have hidden a re-ingested id the retrain legitimately absorbed).
+#   - before the commit: an orphan base-v dir nobody references; it is
+#     age-gated GC'd by a later commit (it may belong to a live attempt);
+#   - after the commit, before GC: the superseded snapshot lingers, read by
+#     nobody; the next commit re-sweeps it;
 #   - GC racing a reader that resolved the OLD manifest: the reader fails
-#     loudly on deleted files (transient, retry resolves the new base) —
-#     the same stance as the ingest fold's post-commit GC, never silent
-#     wrong answers.
-
-_INDEX_MANIFEST_RE = re.compile(r"index-manifest-v(\d+)\.json$")
+#     loudly on deleted files and the query entry points re-resolve
+#     (_retry_on_moved_snapshot) — never silent wrong answers.
 
 
-def _list_index_root(spark: SparkSession, index_dir: str):
-    """(manifest_versions, base_dirs, tmp_entries) from the root listing —
-    the manifest is authoritative for reads; ``base_dirs`` and
-    ``tmp_entries`` are (name, modification_ms) pairs feeding only the
-    retrain's age-gated GC."""
-    _, fs, jpath = _index_fs(spark, index_dir)
-    versions, bases, tmps = [], [], []
-    if not fs.exists(jpath):
-        return versions, bases, tmps
-    for status in fs.listStatus(jpath):
-        fname = status.getPath().getName()
-        if status.isDirectory() and fname.startswith("base-v"):
-            bases.append((fname, status.getModificationTime()))
-        elif fname.startswith(".index-manifest-") and fname.endswith(".tmp"):
-            tmps.append((fname, status.getModificationTime()))
-        else:
-            m = _INDEX_MANIFEST_RE.match(fname)
-            if m:
-                versions.append(int(m.group(1)))
-    return sorted(versions), bases, tmps
+def _index_root(spark: SparkSession, index_dir: str):
+    from datafusion_loki_spark.functions.layout import VersionedDir
+
+    return VersionedDir(spark, index_dir, "index-manifest")
 
 
-def read_index_manifest(spark: SparkSession, index_dir: str):
-    """The highest-version index manifest, or None (never retrained —
-    the flat legacy layout)."""
-    from datafusion_loki_spark.functions.layout import read_json_file
-
-    versions, _, _ = _list_index_root(spark, index_dir)
-    if not versions:
-        return None
-    return read_json_file(
-        spark, f"{index_dir}/index-manifest-v{versions[-1]}.json"
-    )
+def _snapshot_base(index_dir: str, manifest: dict | None) -> str:
+    if manifest is None:
+        raise FileNotFoundError(
+            f"{index_dir} holds no IVF index snapshot (no"
+            " index-manifest-v*.json): build_ivf_index commits the first"
+        )
+    return f"{index_dir}/{manifest['base']}"
 
 
 def resolve_index_base(spark: SparkSession, index_dir: str) -> str:
     """The directory holding the CURRENT index snapshot: the newest
-    manifest's base-v dir, or ``index_dir`` itself for a never-retrained
-    index. Every read/write path of the lifecycle resolves through this
-    exactly once per operation (one resolution per operation, not per
-    file, so a single operation can never straddle a concurrent retrain's
-    commit with half its paths old and half new)."""
-    manifest = read_index_manifest(spark, index_dir)
-    if manifest is None:
-        return index_dir
-    return f"{index_dir}/{manifest['base']}"
+    manifest's base-v dir. Every read/write path of the lifecycle
+    resolves through this exactly once per operation, so a single
+    operation can never straddle a concurrent commit with half its paths
+    old and half new."""
+    return _snapshot_base(index_dir, _index_root(spark, index_dir).newest())
+
+
+def _commit_index(spark: SparkSession, index_dir: str, fit) -> tuple[int, str]:
+    """Commit a new index snapshot: list the root, run ``fit(manifest)``
+    (the current manifest or None) for the (assigned, cents) pair, write
+    it to a fresh ``base-v{M}-{nonce}`` dir, commit
+    ``index-manifest-v{M}`` (M = newest version + 1, or 0 in a directory
+    with none), then GC. Returns (M, base dir name).
+
+    The root is listed BEFORE fit reads anything and before this attempt
+    writes anything: a concurrent commit of the same version then makes
+    the rename fail loudly (the loser's dir is never referenced), and
+    the GC never sweeps this attempt's own in-flight state. GC is pure
+    cleanup — the superseded base and manifests are dead under the new
+    manifest; other base dirs and temps may be a live attempt's and are
+    age-gated."""
+    root = _index_root(spark, index_dir)
+    pre = root.listing()
+    old = root.newest(pre)
+    version = pre.versions[-1] + 1 if pre.versions else 0
+    assigned, cents = fit(old)
+    base = f"base-v{version}-{uuid.uuid4().hex[:8]}"
+    _write_index(assigned, cents, f"{index_dir}/{base}")
+    root.commit(version, {"version": version, "base": base})
+    dead = [old["base"]] if old else []
+    root.delete(dead + [root.manifest_name(v) for v in pre.versions])
+    root.sweep_aged(
+        [d for d in pre.dirs if d[0].startswith("base-v") and d[0] not in dead]
+        + pre.tmps
+    )
+    return version, base
 
 
 # the ``gen`` a tombstone records for a base-table (members.parquet)
@@ -2963,10 +2932,13 @@ TOMBSTONE_BASE_GEN = -(2**62)
 
 # explicit read schemas (_members_projection is the write-side contract):
 # schema-less parquet reads CRASH on a data-less directory ('unable to
-# infer schema'), and both tables have legitimate empty terminal states —
+# infer schema'), and the tables have legitimate empty terminal states —
 # members after a delete-everything compaction, tombstones after a crash
-# window — that must read as 0 rows (round-10 review)
+# window — that must read as 0 rows (round-10 review); a known schema
+# also starts no inference job. The streamed-ingest table
+# (pipeline.ivf_ingest_stream) adds its ``gen`` partition column.
 MEMBERS_SCHEMA = "vec_id bigint, e array<double>, c_nrm double, cluster_id int"
+INGEST_SCHEMA = f"{MEMBERS_SCHEMA}, gen bigint"
 TOMBSTONES_SCHEMA = "vec_id bigint, gen bigint, cluster_id int"
 
 
@@ -3258,7 +3230,7 @@ def sim_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     and appended cells as one table — candidates from the batch can and
     do displace base candidates in the top-k.
 
-    Idempotence: the build overwrites the member table before the one
+    Idempotence: the build commits a fresh snapshot before the one
     append, so repeated invocations (warm-up, parity, bench) see the
     identical two-generation index. Exactness: +0.25 on a double and
     the id offset are exact; assignment and scoring reuse the shared
@@ -3412,13 +3384,11 @@ def retrain_ivf_index(spark: SparkSession, index_dir: str) -> dict:
     decimal-exact means), which is exactly what the oracle replays.
 
     Crash/concurrency contract — the whole-index snapshot protocol
-    (section above): the fresh base lands in an UNREFERENCED
-    ``base-v{M}-{nonce}`` dir, and the atomic ``index-manifest-v{M}``
-    rename is the single commit point. A reader at ANY moment sees
-    either the old snapshot exactly or the new one exactly — the
-    round-11 honest limit (a reader between the centroid and member
-    overwrites saw a mixed codebook/members state) is closed: those
-    two writes now happen where no manifest points. Tombstones and
+    (section above, _commit_index): the fresh base lands in an
+    UNREFERENCED ``base-v{M}-{nonce}`` dir, and the atomic
+    ``index-manifest-v{M}`` rename is the single commit point. A reader
+    at ANY moment sees either the old snapshot exactly or the new one
+    exactly. Tombstones and
     ingest generations are consumed STRUCTURALLY — they live inside
     the superseded base dir, which the new snapshot never references —
     so there is no ordering window in which a stale tombstone could
@@ -3439,107 +3409,32 @@ def retrain_ivf_index(spark: SparkSession, index_dir: str) -> dict:
     frame, the sample-fit iteration passes (never the full corpus),
     ONE full assignment pass, one clustered write — the build's cost
     profile plus the dedup window, which is the floor for a refit. The
-    copy-on-write base costs no extra pass: the old layout's in-place
-    overwrite wrote the same bytes, just on top of the files readers
-    were using. Returns audit stats."""
-    from datafusion_loki_spark.functions.layout import (
-        atomic_manifest_commit,
-    )
-    from datafusion_loki_spark.streaming.pipeline import (
-        _TMP_SWEEP_AGE_MS,
-        _fs_now_ms,
-        ivf_members_versioned,
-    )
+    copy-on-write base costs no extra pass. Returns audit stats."""
+    from datafusion_loki_spark.streaming.pipeline import ivf_members_versioned
 
-    jvm, fs, _ = _index_fs(spark, index_dir)
-    # pre-commit snapshot of the root: the manifest chain tells us what
-    # the commit supersedes; bases/tmps feed the age-gated orphan sweep
-    # (listed BEFORE this attempt writes anything, so it never sweeps
-    # its own in-flight state — the compact_ivf_ingest rule)
-    old_manifest = read_index_manifest(spark, index_dir)
-    versions, pre_bases, pre_tmps = _list_index_root(spark, index_dir)
-    old_base_name = old_manifest["base"] if old_manifest else None
-    old_base = (
-        f"{index_dir}/{old_base_name}" if old_base_name else index_dir
-    )
-    new_version = (versions[-1] if versions else 0) + 1
     newest = Window.partitionBy("vec_id").orderBy(
         F.desc("gen"), F.asc("cluster_id")
     )
-    live_d = (
-        ivf_members_versioned(spark, old_base)
-        .select("vec_id", "e", "gen", "cluster_id")
-        .withColumn("rn", F.row_number().over(newest))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "e")
-        .localCheckpoint(eager=True)
-    )
-    seeds = live_d.orderBy("vec_id").limit(KMEANS_K)
-    assigned, cents = _kmeans_fit(
-        live_d, live_d.where(F.expr(_TRAIN_PRED_SPARK)), seeds_d=seeds
-    )
-    new_base_name = f"base-v{new_version}-{uuid.uuid4().hex[:8]}"
-    _write_index(assigned, cents, f"{index_dir}/{new_base_name}")
-    # THE commit: atomic rename; a concurrent attempt that won this
-    # version makes the rename fail loudly (contract violation surfaced,
-    # winner's data untouched — our orphan dir is swept by a later GC)
-    atomic_manifest_commit(
-        spark,
-        index_dir,
-        f"index-manifest-v{new_version}.json",
-        {"version": new_version, "base": new_base_name},
-    )
-    # --- post-commit GC (pure cleanup: nothing below is referenced by
-    # the committed manifest; a crash mid-GC leaves garbage bytes a
-    # later retrain re-sweeps, never wrong results) ---
-    # the flat legacy root's four well-known entries are dead under ANY
-    # committed manifest (the root layout is only resolvable with no
-    # manifest at all) — swept unconditionally, so a first retrain that
-    # crashed before ITS sweep is re-swept by every later retrain
-    for sub in (
-        "centroids.parquet",
-        "members.parquet",
-        "tombstones.parquet",
-        "members_ingest.parquet",
-    ):
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{sub}"), True
+    fitted = {}
+
+    def fit(manifest):
+        live_d = (
+            ivf_members_versioned(spark, _snapshot_base(index_dir, manifest))
+            .select("vec_id", "e", "gen", "cluster_id")
+            .withColumn("rn", F.row_number().over(newest))
+            .where(F.col("rn") == 1)
+            .select("vec_id", "e")
+            .localCheckpoint(eager=True)
         )
-    now_ms = None
-    for name, mod_ms in pre_bases:
-        if name == old_base_name:
-            # the superseded snapshot — certainly dead under the new
-            # manifest (its tombstones/ingest die inside it)
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{name}"), True
-            )
-        else:
-            # an orphan from a crashed attempt — or a LIVE concurrent
-            # attempt's in-flight dir: age-gate on the FS's own clock,
-            # exactly like the manifest-temp sweep
-            if now_ms is None:
-                now_ms = _fs_now_ms(jvm, fs, index_dir)
-            if now_ms - mod_ms >= _TMP_SWEEP_AGE_MS:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{name}"),
-                    True,
-                )
-    for v in versions:  # every pre-listed manifest is now superseded
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{index_dir}/index-manifest-v{v}.json"
-            ),
-            False,
+        seeds = live_d.orderBy("vec_id").limit(KMEANS_K)
+        assigned, cents = _kmeans_fit(
+            live_d, live_d.where(F.expr(_TRAIN_PRED_SPARK)), seeds_d=seeds
         )
-    if pre_tmps:
-        if now_ms is None:
-            now_ms = _fs_now_ms(jvm, fs, index_dir)
-        for fname, mod_ms in pre_tmps:
-            if now_ms - mod_ms >= _TMP_SWEEP_AGE_MS:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{fname}"),
-                    False,
-                )
+        fitted.update(live_d=live_d, cents=cents)
+        return assigned, cents
+
+    new_version, new_base_name = _commit_index(spark, index_dir, fit)
+    live_d, cents = fitted["live_d"], fitted["cents"]
     stats = {
         "rows_reindexed": live_d.count(),
         "k_cells": cents.select(F.expr("size(cents)")).first()[0],
@@ -3641,8 +3536,8 @@ def sim_ivf_snapshot_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round-11 honest-limits closure — retrain's in-place overwrite
     pair is now an unreferenced base-v dir plus one atomic manifest
     rename). The sequence drives every resolver path end-to-end: build
-    (flat legacy layout) -> retrain (commits index-manifest-v1, GCs the
-    flat snapshot) -> append + delete (both resolve the manifest and
+    (commits index-manifest-v0) -> retrain (commits index-manifest-v1,
+    GCs base-v0) -> append + delete (both resolve the manifest and
     land INSIDE base-v1: the batch through the snapshot's codebook, the
     tombstone pinned to its cell/generation) -> query (centroids,
     partition-pruned members, and the tombstone anti-join all read the
@@ -3652,7 +3547,7 @@ def sim_ivf_snapshot_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-identical to the build (deterministic sample-fit, seeds = the
     K lowest live vec_ids = the build's vec_id < K set), so routing the
     same append/delete through the RETRAINED snapshot must answer
-    bit-for-bit what the flat-layout lifecycle answers. What this entry
+    bit-for-bit what the never-retrained lifecycle answers. What this entry
     adds to the correctness gate is the protocol itself: manifest
     round-trip, per-verb base resolution, and snapshot-scoped
     tombstones between the scan and the answer."""

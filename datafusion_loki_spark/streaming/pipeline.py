@@ -15,7 +15,6 @@ not history. Both shuffle once on their grouping key per micro-batch.
 
 from __future__ import annotations
 
-import re
 import uuid
 from typing import Any, Iterator
 
@@ -1414,57 +1413,53 @@ def ivf_members(spark: SparkSession, index_dir: str) -> DataFrame:
     generation directories are pruned at the scan, never read — which is
     also what makes a replay of an already-folded micro-batch invisible
     (its re-created gen dir sits at <= folded_upto)."""
-    return ivf_members_versioned(spark, index_dir).select(
-        "vec_id", "cluster_id", "e", "c_nrm"
+    from datafusion_loki_spark.operators.similarity import resolve_index_base
+
+    return ivf_members_versioned(
+        spark, resolve_index_base(spark, index_dir)
+    ).select("vec_id", "cluster_id", "e", "c_nrm")
+
+
+def _ingest_dir(spark: SparkSession, base_dir: str):
+    """The streamed-ingest table of the snapshot at ``base_dir``, with
+    its compaction manifests (``manifest-v{N}.json``)."""
+    from datafusion_loki_spark.functions.layout import VersionedDir
+
+    return VersionedDir(
+        spark, f"{base_dir}/members_ingest.parquet", "manifest"
     )
 
 
-def ivf_members_versioned(
-    spark: SparkSession, index_dir: str
-) -> DataFrame:
+def ivf_members_versioned(spark: SparkSession, base_dir: str) -> DataFrame:
     """ivf_members plus the ``gen`` column (TOMBSTONE_BASE_GEN for base
     rows) — the generation-scoped view the delete path keys tombstones
     by, so a re-ingest of a deleted vec_id (a different gen) stays
     visible while the deleted copy does not (round-10 review: key-only
-    tombstones swallowed re-ingests and resurrected on fold)."""
+    tombstones swallowed re-ingests and resurrected on fold).
+    ``base_dir`` is a RESOLVED snapshot dir (resolve_index_base): the
+    base table, ingest generations, their manifest and the tombstone
+    anti-join all come from it."""
     from datafusion_loki_spark.operators.similarity import (
+        INGEST_SCHEMA,
         TOMBSTONE_BASE_GEN,
-        _index_fs,
         _read_members,
         _subtract_tombstones,
-        resolve_index_base,
     )
 
-    # one snapshot resolution for the whole view: base table, ingest
-    # generations, their manifest, and the tombstone anti-join must all
-    # come from the SAME base dir (resolution is idempotent, so callers
-    # holding an already-resolved dir pass straight through)
-    base_dir = resolve_index_base(spark, index_dir)
     cols = ["vec_id", "cluster_id", "e", "c_nrm"]
     base = (
         _read_members(spark, base_dir)
         .select(*cols)
         .withColumn("gen", F.lit(TOMBSTONE_BASE_GEN))
     )
-    from pyspark.errors import AnalysisException
-
-    # cheap existence pre-check before the read (r16, guide §1): a
-    # never-streamed-into index — every BATCH lifecycle verb — used to
-    # pay a thrown-and-caught AnalysisException per view construction
-    # (measured 127 ms per probe across the Py4J boundary vs 0.9 ms for
-    # fs.exists; one probe per delete/retrain call). The try/except
-    # stays for the existing-but-data-less directory terminal state.
-    ingest_path = f"{base_dir}/members_ingest.parquet"
-    _, fs, jpath = _index_fs(spark, ingest_path)
-    if not fs.exists(jpath):
+    ingest_dir = _ingest_dir(spark, base_dir)
+    state = ingest_dir.listing()
+    if not state.dirs:
+        # never streamed into (every BATCH lifecycle verb) or data-less:
+        # no generation to read, so no scan of it either
         return _subtract_tombstones(spark, base_dir, base, versioned=True)
-    try:
-        ingest = spark.read.parquet(ingest_path)
-    except AnalysisException as e:
-        if not _is_empty_sink_error(e):
-            raise
-        return _subtract_tombstones(spark, base_dir, base, versioned=True)
-    manifest = _read_ingest_manifest(spark, base_dir)
+    ingest = spark.read.schema(INGEST_SCHEMA).parquet(ingest_dir.path)
+    manifest = ingest_dir.newest(state)
     if manifest is not None:
         ingest = ingest.where(
             (F.col("gen") == manifest["active_gen"])
@@ -1497,127 +1492,37 @@ def ivf_members_versioned(
 # ivf_ingest_stream lands ONE gen=<batch_id> partition per micro-batch; at
 # a real cadence that is thousands of small parquet files per cluster per
 # day. compact_ivf_ingest is the periodic maintenance job that folds old
-# generations into one compacted partition, copy-on-write with an atomic
-# manifest pointer (a hand-rolled miniature of the table-format commit
-# protocol), because the in-place functions/layout.py::compact_partitions
-# rewrite cannot move rows ACROSS partition values without a crash window
-# in which rows exist twice:
+# generations into one compacted partition, copy-on-write behind the
+# table's manifest (a layout.VersionedDir: listing, newest manifest,
+# atomic commit and age-gated sweep are shared with the index root),
+# because the in-place functions/layout.py::compact_partitions rewrite
+# cannot move rows ACROSS partition values without a crash window in which
+# rows exist twice:
 #
 # 1. fold input = the active compacted generation (if any) + every real
 #    generation in (folded_upto, new_cutoff]; written to a FRESH partition
 #    whose gen id is unique PER ATTEMPT (-(version * 10^9 + nonce)) so two
 #    concurrent compactions can never write into the same partition — the
 #    loser of the manifest race leaves an orphan dir, never clobbers the
-#    winner's committed data (round-9 ADVICE: the deterministic
-#    gen=-(version+1) id let the loser's dynamic overwrite delete the
-#    winner's already-committed files before the loser failed its rename);
-# 2. the manifest — manifest-v{N}.json, written create-temp + rename, the
-#    highest version wins — is swapped to point at the new generation;
-#    this is the commit: before it, readers see the old state exactly;
-#    after it, the new state exactly;
+#    winner's committed data (round-9 ADVICE);
+# 2. manifest-v{N}.json is committed pointing at the new generation; before
+#    it, readers see the old state exactly; after it, the new state exactly;
 # 3. folded real-generation dirs, superseded compacted dirs, and stale
 #    manifests are deleted — pure GC, because the reader predicate
 #    (gen == active OR gen > folded_upto) already excludes them, so a
 #    crash mid-GC leaves garbage bytes, never wrong results. A rerun
-#    re-GCs.
+#    re-GCs; crashed attempts' temps go through the age-gated sweep.
 #
 # Replay interplay: Structured Streaming only redelivers the LAST
 # uncommitted batch, but even a hypothetical replay of a FOLDED batch id
 # converges — its dynamic overwrite re-creates gen=<id> at <= folded_upto,
 # which the reader prunes and the next compaction GC deletes.
 
-_INGEST_MANIFEST_RE = re.compile(r"manifest-v(\d+)\.json$")
 
-
-# manifest temps younger than this are presumed to belong to a live
-# concurrent attempt and are left for a later run's GC (ADVICE r9: the
-# post-commit sweep could delete an in-flight attempt's temp)
-_TMP_SWEEP_AGE_MS = 60 * 60 * 1000
-
-
-def _fs_now_ms(jvm, fs, dir_path: str) -> int:
-    """The filesystem's OWN clock: mtime of a freshly-created probe file.
-
-    The tmp-sweep age gate compares against temp mtimes that the FS
-    stamped, so 'now' must come from the same clock — driver wall time
-    (time.time()) can skew against an object store's clock, making a
-    live attempt's temp look older than the gate (swept, failing its
-    rename) or crashed temps look perpetually young (round-11 ADVICE).
-    The probe name is NONCED per attempt (the manifest-temp rule):
-    concurrent compactions each probe their own file, so one attempt's
-    delete can never race another's create/stat — a fixed name made
-    getFileStatus throwable mid-race (round-11 review). A crash between
-    create and delete leaves one empty dot-file; it matches neither the
-    manifest regex nor the temp pattern, so readers and the sweep
-    ignore it."""
-    probe = jvm.org.apache.hadoop.fs.Path(
-        f"{dir_path}/.gc-clock-probe.{uuid.uuid4().hex}"
-    )
-    fs.create(probe, True).close()
-    try:
-        return fs.getFileStatus(probe).getModificationTime()
-    finally:
-        fs.delete(probe, False)
-
-
-def _list_ingest_state(spark: SparkSession, ingest_path: str):
-    """(real_gens, compacted_gens, manifest_versions, tmp_entries)
-    from the directory listing — the manifest is authoritative for
-    reads; the listing only feeds fold-set selection and GC.
-    ``tmp_entries`` are (name, modification_ms) for ``.manifest-*.tmp``
-    files: crashed attempts' nonce'd temps, but possibly also a LIVE
-    concurrent attempt's in-flight temp — GC must age-gate them."""
-    from datafusion_loki_spark.operators.similarity import _index_fs
-
-    jvm, fs, jpath = _index_fs(spark, ingest_path)
-    real, compacted, manifests, tmps = [], [], [], []
-    if not fs.exists(jpath):
-        return real, compacted, manifests, tmps
-    for status in fs.listStatus(jpath):
-        fname = status.getPath().getName()
-        if status.isDirectory() and fname.startswith("gen="):
-            g = int(fname[4:])
-            (compacted if g < 0 else real).append(g)
-        elif fname.startswith(".manifest-") and fname.endswith(".tmp"):
-            tmps.append((fname, status.getModificationTime()))
-        else:
-            m = _INGEST_MANIFEST_RE.match(fname)
-            if m:
-                manifests.append(int(m.group(1)))
-    return sorted(real), sorted(compacted), sorted(manifests), sorted(tmps)
-
-
-def _read_ingest_manifest(spark: SparkSession, base_dir: str):
-    """The highest-version manifest, or None (never compacted).
-    ``base_dir`` is a RESOLVED snapshot dir (resolve_index_base)."""
-    from datafusion_loki_spark.functions.layout import read_json_file
-
-    ingest_path = f"{base_dir}/members_ingest.parquet"
-    _, _, versions, _ = _list_ingest_state(spark, ingest_path)
-    if not versions:
-        return None
-    return read_json_file(
-        spark, f"{ingest_path}/manifest-v{versions[-1]}.json"
-    )
-
-
-def _write_ingest_manifest(spark: SparkSession, base_dir: str, manifest: dict):
-    """Commit ``manifest-v{N}.json`` via layout.atomic_manifest_commit —
-    the shared nonce'd-temp + no-delete-before-rename primitive (the
-    race rules this path accreted over rounds 9-11 now live there, one
-    definition for both snapshot protocols). The temp name the helper
-    produces (``.manifest-v{N}.json.{nonce}.tmp``) still matches the GC
-    sweep's ``.manifest-*.tmp`` pattern."""
-    from datafusion_loki_spark.functions.layout import (
-        atomic_manifest_commit,
-    )
-
-    atomic_manifest_commit(
-        spark,
-        f"{base_dir}/members_ingest.parquet",
-        f"manifest-v{manifest['version']}.json",
-        manifest,
-    )
+def _gens(listing) -> tuple[list[int], list[int]]:
+    """(real, compacted) generation ids of an ingest-table listing."""
+    gens = sorted(int(n[4:]) for n, _ in listing.dirs if n.startswith("gen="))
+    return [g for g in gens if g >= 0], [g for g in gens if g < 0]
 
 
 def compact_ivf_ingest(
@@ -1642,74 +1547,41 @@ def compact_ivf_ingest(
         raise ValueError("keep_last must be >= 1 (the redelivery window)")
     from datafusion_loki_spark.functions.layout import count_parquet_files
     from datafusion_loki_spark.operators.similarity import (
-        _index_fs,
+        INGEST_SCHEMA,
         resolve_index_base,
     )
 
     base_dir = resolve_index_base(spark, index_dir)
-    ingest_path = f"{base_dir}/members_ingest.parquet"
+    ingest = _ingest_dir(spark, base_dir)
+    ingest_path = ingest.path
     files_before = count_parquet_files(spark, ingest_path)
-    manifest = _read_ingest_manifest(spark, base_dir)
+    # listed before this attempt writes anything: the temp sweep below
+    # works from this snapshot only, so it can never sweep its own temp
+    # nor one of an attempt that started after it
+    pre = ingest.listing()
+    manifest = ingest.newest(pre)
     prev_version = manifest["version"] if manifest else 0
     prev_cutoff = manifest["folded_upto"] if manifest else -1
     active_gen = manifest["active_gen"] if manifest else None
+    real, _ = _gens(pre)
 
-    real, compacted, manifest_versions, pre_tmps = _list_ingest_state(
-        spark, ingest_path
-    )
-    jvm, fs, _ = _index_fs(spark, ingest_path)
-
-    def gc() -> None:
-        for g in real:
-            if g <= prev_cutoff:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{ingest_path}/gen={g}"),
-                    True,
-                )
-        for g in compacted:
-            if active_gen is None or g != active_gen:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{ingest_path}/gen={g}"),
-                    True,
-                )
-        for v in manifest_versions:
-            if v != prev_version:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(
-                        f"{ingest_path}/manifest-v{v}.json"
-                    ),
-                    False,
-                )
-        # crashed attempts leave nonce'd .manifest-*.tmp files (the temps
-        # are unique per attempt since round 9). The sweep uses ONLY the
-        # PRE-commit snapshot (taken before this attempt created its own
-        # temp, so it can never self-sweep) AND age-gates on modification
-        # time: a temp listed pre-commit could still belong to a LIVE
-        # concurrent attempt that has not renamed yet — sweeping it would
-        # make that attempt's rename fail with a misleading message
-        # (round-9 ADVICE). Only temps old enough that their attempt is
-        # certainly dead are collected; younger ones wait for a later run.
-        # 'now' comes from the FILESYSTEM's clock (probe-file mtime), the
-        # same clock that stamped the temps — see _fs_now_ms. Probed
-        # ONLY when there are temps to age-gate: an unconditional probe
-        # would cost three FS round-trips per compaction and, via
-        # fs.create's implicit mkdirs, could conjure the ingest dir on a
-        # never-ingested index (round-11 review).
-        if pre_tmps:
-            now_ms = _fs_now_ms(jvm, fs, ingest_path)
-            for fname, mod_ms in pre_tmps:
-                if now_ms - mod_ms >= _TMP_SWEEP_AGE_MS:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(
-                            f"{ingest_path}/{fname}"
-                        ),
-                        False,
-                    )
+    def gc(state) -> None:
+        state_real, state_compacted = _gens(state)
+        ingest.delete(
+            [f"gen={g}" for g in state_real if g <= prev_cutoff]
+            + [f"gen={g}" for g in state_compacted if g != active_gen]
+            + [
+                ingest.manifest_name(v)
+                for v in state.versions
+                if v != prev_version
+            ]
+        )
+        ingest.sweep_aged(pre.tmps)
 
     live = [g for g in real if g > prev_cutoff]
     fold = live[:-keep_last]
     if not fold:
-        gc()  # still collect leftovers from replays/crashes
+        gc(pre)  # still collect leftovers from replays/crashes
         return {
             "folded_gens": 0,
             "rows_compacted": 0,
@@ -1727,7 +1599,7 @@ def compact_ivf_ingest(
     # readers never parse it — the manifest's active_gen is authoritative
     # and the no-manifest guard (gen >= 0) excludes every negative id.
     new_gen = -(new_version * 1_000_000_000 + uuid.uuid4().int % 1_000_000_000)
-    src = spark.read.parquet(ingest_path)
+    src = spark.read.schema(INGEST_SCHEMA).parquet(ingest_path)
     in_fold = F.col("gen").isin(fold)
     if active_gen is not None:
         in_fold = in_fold | (F.col("gen") == active_gen)
@@ -1783,9 +1655,8 @@ def compact_ivf_ingest(
         partition_by=["gen", "cluster_id"],
         files_per_partition=files_per_partition,
     )
-    _write_ingest_manifest(
-        spark,
-        base_dir,
+    ingest.commit(
+        new_version,
         {
             "version": new_version,
             "active_gen": new_gen,
@@ -1793,14 +1664,9 @@ def compact_ivf_ingest(
         },
     )
     # post-commit GC under the NEW manifest — gens/manifests re-listed,
-    # but the tmp sweep keeps the PRE-commit snapshot (pre_tmps): a
-    # post-commit re-listing would include temps created by attempts
-    # that started after ours, which may be in-flight
+    # the temp sweep still from the pre-commit listing
     prev_version, prev_cutoff, active_gen = new_version, new_cutoff, new_gen
-    real, compacted, manifest_versions, _ = _list_ingest_state(
-        spark, ingest_path
-    )
-    gc()
+    gc(ingest.listing())
     # AFTER the manifest commit: consume every ingest-scoped tombstone
     # that is now dead under the NEW manifest — folded this run, or left
     # by a prior run's crash window (a crash before this line leaves

@@ -1,19 +1,17 @@
-"""Whole-index snapshot protocol (round-12: the round-11 honest-limits
-closure). retrain_ivf_index used to overwrite codebook + members in
-place — a reader between the two writes saw a mixed state. Now the
-fresh base lands in an unreferenced ``base-v{M}-{nonce}`` dir and the
-atomic ``index-manifest-v{M}.json`` rename is the single commit point.
-Pins the four contracts:
+"""Whole-index snapshot protocol. build_ivf_index and retrain_ivf_index
+both land a fresh base in an unreferenced ``base-v{M}-{nonce}`` dir, and
+the atomic ``index-manifest-v{M}.json`` rename is the single commit
+point. Pins the four contracts:
 
 1. a reader at ANY moment resolves a complete snapshot — old exactly or
    new exactly, never mixed (crash between the base writes, crash before
-   the manifest commit);
+   the manifest commit), for a retrain and for a rebuild;
 2. incremental writers (append / delete / streamed ingest / compact)
-   land INSIDE the committed snapshot, so a later retrain's fold
-   consumes them structurally;
-3. GC: a second retrain removes the superseded base-v dir and manifest;
-   root legacy leftovers are re-swept; orphan base dirs are age-gated
-   (a young one may belong to a live concurrent attempt);
+   land INSIDE the committed snapshot, so a later commit supersedes
+   them structurally;
+3. GC: the next commit removes the superseded base-v dir and manifest;
+   orphan base dirs are age-gated (a young one may belong to a live
+   concurrent attempt);
 4. the manifest commit is optimistic — a version collision fails loudly,
    never clobbers.
 """
@@ -21,6 +19,7 @@ Pins the four contracts:
 from __future__ import annotations
 
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -30,10 +29,11 @@ from datafusion_loki_spark.operators.similarity import (
     _TO_DOUBLE,
     append_ivf_index,
     build_ivf_index,
+    _index_root,
     compact_ivf_members,
     delete_ivf_index,
     query_ivf_index,
-    read_index_manifest,
+    query_ivf_index_eager,
     resolve_index_base,
     retrain_ivf_index,
 )
@@ -48,12 +48,42 @@ def _probe(spark, index_dir):
     )
 
 
-def test_fresh_index_resolves_to_flat_root(spark, tmp_path):
+def _manifest(spark, index_dir):
+    return _index_root(spark, index_dir).newest()
+
+
+def _entries(index_dir):
+    """The root's entries, hidden checksum and temp files aside."""
+    return sorted(n for n in os.listdir(index_dir) if not n.startswith("."))
+
+
+def test_fresh_build_commits_manifest_v0(spark, tmp_path):
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
-    assert read_index_manifest(spark, index_dir) is None
-    assert resolve_index_base(spark, index_dir) == index_dir
-    assert os.path.exists(f"{index_dir}/members.parquet")
+    base = build_ivf_index(spark, SF, index_dir)
+    manifest = _manifest(spark, index_dir)
+    assert manifest["version"] == 0
+    assert base == resolve_index_base(spark, index_dir)
+    assert base == f"{index_dir}/{manifest['base']}"
+    assert manifest["base"].startswith("base-v0-")
+    # nothing of the index lives at the root: one manifest, one snapshot
+    assert _entries(index_dir) == sorted(
+        ["index-manifest-v0.json", manifest["base"]]
+    )
+    assert os.path.exists(f"{base}/members.parquet")
+    assert os.path.exists(f"{base}/centroids.parquet")
+
+
+def test_directory_without_manifest_raises(spark, tmp_path):
+    index_dir = str(tmp_path / "idx")
+    os.makedirs(f"{index_dir}/members.parquet")  # no manifest beside it
+    for call in (
+        lambda: resolve_index_base(spark, index_dir),
+        lambda: query_ivf_index(spark, SF, index_dir),
+        lambda: query_ivf_index_eager(spark, SF, index_dir),
+        lambda: retrain_ivf_index(spark, index_dir),
+    ):
+        with pytest.raises(FileNotFoundError, match=re.escape(index_dir)):
+            call()
 
 
 def test_reader_never_sees_mixed_state_mid_retrain(
@@ -82,7 +112,7 @@ def test_reader_never_sees_mixed_state_mid_retrain(
     with pytest.raises(RuntimeError, match="between the base writes"):
         retrain_ivf_index(spark, index_dir)
     # no commit happened; readers resolve the intact old snapshot
-    assert read_index_manifest(spark, index_dir) is None
+    assert _manifest(spark, index_dir)["version"] == 0
     assert _probe(spark, index_dir) == p0
 
     monkeypatch.setattr(similarity, "_write_index", real_write)
@@ -94,7 +124,7 @@ def test_reader_never_sees_mixed_state_mid_retrain(
     monkeypatch.setattr(layout, "atomic_manifest_commit", die_before_commit)
     with pytest.raises(RuntimeError, match="before the manifest commit"):
         retrain_ivf_index(spark, index_dir)
-    assert read_index_manifest(spark, index_dir) is None
+    assert _manifest(spark, index_dir)["version"] == 0
     assert _probe(spark, index_dir) == p0
 
     # repair = re-run; the orphan base dirs from both crashes are young,
@@ -108,12 +138,13 @@ def test_reader_never_sees_mixed_state_mid_retrain(
 
 def test_second_retrain_gcs_superseded_snapshot(spark, tmp_path):
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
+    b0 = build_ivf_index(spark, SF, index_dir)
     p0 = _probe(spark, index_dir)
     s1 = retrain_ivf_index(spark, index_dir)
-    assert read_index_manifest(spark, index_dir)["base"] == s1["base"]
-    # the flat legacy snapshot is gone; the committed one answers
-    assert not os.path.exists(f"{index_dir}/members.parquet")
+    assert _manifest(spark, index_dir)["base"] == s1["base"]
+    # the built snapshot is gone; the committed one answers
+    assert not os.path.exists(b0)
+    assert not os.path.exists(f"{index_dir}/index-manifest-v0.json")
     assert _probe(spark, index_dir) == p0
     s2 = retrain_ivf_index(spark, index_dir)
     assert s2["version"] == 2
@@ -159,8 +190,9 @@ def test_post_retrain_writers_land_inside_the_snapshot(spark, tmp_path):
     )
     assert os.path.exists(f"{base}/members_ingest.parquet")
     assert os.path.exists(f"{base}/tombstones.parquet")
-    assert not os.path.exists(f"{index_dir}/members_ingest.parquet")
-    assert not os.path.exists(f"{index_dir}/tombstones.parquet")
+    assert _entries(index_dir) == sorted(
+        ["index-manifest-v1.json", os.path.basename(base)]
+    )
 
     live_ids = {
         r.vec_id
@@ -192,8 +224,9 @@ def test_post_retrain_writers_land_inside_the_snapshot(spark, tmp_path):
     assert still_live == live_ids
 
 
-def test_orphan_base_dirs_are_age_gated(spark, tmp_path):
-    from datafusion_loki_spark.streaming.pipeline import _TMP_SWEEP_AGE_MS
+@pytest.mark.parametrize("verb", ["build", "retrain"])
+def test_orphan_base_dirs_are_age_gated(spark, tmp_path, verb):
+    from datafusion_loki_spark.functions.layout import _TMP_SWEEP_AGE_MS
 
     index_dir = str(tmp_path / "idx")
     build_ivf_index(spark, SF, index_dir)
@@ -203,12 +236,15 @@ def test_orphan_base_dirs_are_age_gated(spark, tmp_path):
     os.makedirs(young_orphan)
     stale = (os.path.getmtime(old_orphan) * 1000 - _TMP_SWEEP_AGE_MS) / 1000 - 60
     os.utime(old_orphan, (stale, stale))
-    retrain_ivf_index(spark, index_dir)
+    if verb == "build":
+        build_ivf_index(spark, SF, index_dir)
+    else:
+        retrain_ivf_index(spark, index_dir)
     assert not os.path.exists(old_orphan)   # certainly-dead orphan swept
     assert os.path.exists(young_orphan)     # may be a live attempt: kept
     # NOTE: the fake orphans predate the commit, so the version counter
     # (max manifest version + 1, NOT max base dir) is unaffected
-    assert read_index_manifest(spark, index_dir)["version"] == 1
+    assert _manifest(spark, index_dir)["version"] == 1
 
 
 def test_manifest_commit_collision_fails_loud(spark, tmp_path):
@@ -223,25 +259,15 @@ def test_manifest_commit_collision_fails_loud(spark, tmp_path):
         atomic_manifest_commit(spark, d, "index-manifest-v1.json", {"v": 2})
 
 
-def test_resolution_is_idempotent(spark, tmp_path):
-    index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
-    retrain_ivf_index(spark, index_dir)
-    base = resolve_index_base(spark, index_dir)
-    # a base dir holds no manifests, so resolving it is a fixpoint —
-    # internal helpers can accept either form (ivf_members_versioned is
-    # called with both index_dir and pre-resolved base dirs)
-    assert resolve_index_base(spark, base) == base
-
-
 def test_rebuild_over_maintained_index_yields_clean_snapshot(
     spark, tmp_path
 ):
     """build is the from-scratch verb (round-12 ADVICE): rebuilding over
-    a maintained snapshot must also clear its tombstones and streamed
-    generations — a stale tombstone whose (cluster_id, vec_id, gen) key
-    matches a freshly built row would silently hide it, and a stale
-    ingest generation would resurrect rows the rebuild never saw."""
+    a maintained snapshot must leave its tombstones and streamed
+    generations behind — a stale tombstone whose (cluster_id, vec_id,
+    gen) key matches a freshly built row would silently hide it, and a
+    stale ingest generation would resurrect rows the rebuild never saw.
+    They die with the superseded base dir."""
     from datafusion_loki_spark.streaming import pipeline
 
     index_dir = str(tmp_path / "idx")
@@ -263,11 +289,12 @@ def test_rebuild_over_maintained_index_yields_clean_snapshot(
     )
     assert os.path.exists(f"{base}/tombstones.parquet")
     assert os.path.exists(f"{base}/members_ingest.parquet")
-    # REBUILD: the maintenance state dies with the old contents
-    build_ivf_index(spark, SF, index_dir)
-    assert resolve_index_base(spark, index_dir) == base
-    assert not os.path.exists(f"{base}/tombstones.parquet")
-    assert not os.path.exists(f"{base}/members_ingest.parquet")
+    # REBUILD: a new snapshot; the maintenance state dies with the old
+    new_base = build_ivf_index(spark, SF, index_dir)
+    assert new_base == resolve_index_base(spark, index_dir) != base
+    assert not os.path.exists(base)
+    assert not os.path.exists(f"{new_base}/tombstones.parquet")
+    assert not os.path.exists(f"{new_base}/members_ingest.parquet")
     live_ids = {
         r.vec_id
         for r in pipeline.ivf_members(spark, index_dir)
@@ -278,6 +305,54 @@ def test_rebuild_over_maintained_index_yields_clean_snapshot(
     assert (2 * IVF_APPEND_OFFSET + 3) not in live_ids  # gen gone
     # and the read path answers exactly like a fresh build
     assert _probe(spark, index_dir) == p_fresh
+
+
+def test_rebuild_crash_keeps_the_maintained_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    # a REBUILD that dies inside its base writes must leave the previous
+    # snapshot answering exactly as before — its tombstone still hiding
+    # the deleted row, its streamed generation still live
+    from datafusion_loki_spark.operators import similarity
+    from datafusion_loki_spark.streaming import pipeline
+
+    index_dir = str(tmp_path / "idx")
+    build_ivf_index(spark, SF, index_dir)
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    pipeline._ivf_ingest_batch_fn(index_dir)(
+        emb.select(
+            (F.col("vec_id") + 2 * IVF_APPEND_OFFSET).alias("vec_id"),
+            "embedding",
+        ),
+        0,
+    )
+    delete_ivf_index(
+        spark, index_dir, spark.createDataFrame([(5,)], "vec_id long")
+    )
+
+    def live_ids():
+        return {
+            r.vec_id
+            for r in pipeline.ivf_members(spark, index_dir)
+            .select("vec_id")
+            .collect()
+        }
+
+    ids, p_before = live_ids(), _probe(spark, index_dir)
+    assert 5 not in ids and (2 * IVF_APPEND_OFFSET + 3) in ids
+
+    def die_between_the_writes(assigned, cents, base_dir):
+        cents.write.mode("overwrite").parquet(
+            f"{base_dir}/centroids.parquet"
+        )
+        raise RuntimeError("simulated crash inside the rebuild")
+
+    monkeypatch.setattr(similarity, "_write_index", die_between_the_writes)
+    with pytest.raises(RuntimeError, match="inside the rebuild"):
+        build_ivf_index(spark, SF, index_dir)
+    assert _manifest(spark, index_dir)["version"] == 0
+    assert live_ids() == ids
+    assert _probe(spark, index_dir) == p_before
 
 
 def test_gc_racing_reader_retries_once(spark, tmp_path, monkeypatch):
@@ -295,6 +370,10 @@ def test_gc_racing_reader_retries_once(spark, tmp_path, monkeypatch):
     retrain_ivf_index(spark, index_dir)  # GC sweeps stale_base
     assert not os.path.exists(stale_base)
 
+    # without the retry: loud missing-path failure
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        sim._query_ivf_index_once(spark, SF, stale_base).collect()
+
     real_resolve = sim.resolve_index_base
     calls = {"n": 0}
 
@@ -305,11 +384,7 @@ def test_gc_racing_reader_retries_once(spark, tmp_path, monkeypatch):
         return real_resolve(s, d)
 
     monkeypatch.setattr(sim, "resolve_index_base", raced_resolve)
-    # without the retry: loud missing-path failure
-    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
-        sim._query_ivf_index_once(spark, SF, index_dir).collect()
     # with the retry: one re-resolve, correct answers from the new base
-    calls["n"] = 0
     assert _probe(spark, index_dir) == p0
     assert calls["n"] == 2
 
@@ -321,13 +396,9 @@ def test_eager_query_survives_mid_action_gc(spark, tmp_path):
     # in that window (otherwise this test proves nothing); then the
     # whole-ACTION retry turns the same window into a clean re-read of
     # the new snapshot.
-    from datafusion_loki_spark.operators.similarity import (
-        query_ivf_index_eager,
-    )
-
     index_dir = str(tmp_path / "idx")
     build_ivf_index(spark, SF, index_dir)
-    retrain_ivf_index(spark, index_dir)  # snapshot protocol active (v1)
+    retrain_ivf_index(spark, index_dir)  # commits v1
     expected = _probe(spark, index_dir)
 
     # control: lazy frame built against v1, then a retrain commits v2
@@ -355,19 +426,17 @@ def test_eager_query_survives_mid_action_gc(spark, tmp_path):
     assert got == expected
 
 
-def test_eager_query_raises_when_snapshot_did_not_move(spark, tmp_path):
-    # the retry is keyed by the manifest version: files missing while
-    # the manifest is UNMOVED is corruption, not a GC race — it must
-    # surface, never spin
+@pytest.mark.parametrize("entry", [query_ivf_index, query_ivf_index_eager],
+                         ids=lambda f: f.__name__)
+def test_eager_query_raises_when_snapshot_did_not_move(spark, tmp_path, entry):
+    # both entry points retry only when the snapshot MOVED: files missing
+    # while the manifest is unmoved is corruption, not a GC race — it
+    # must surface, never spin
     import shutil
-
-    from datafusion_loki_spark.operators.similarity import (
-        query_ivf_index_eager,
-    )
 
     index_dir = str(tmp_path / "idx")
     build_ivf_index(spark, SF, index_dir)
     s1 = retrain_ivf_index(spark, index_dir)
     shutil.rmtree(f"{index_dir}/{s1['base']}")
     with pytest.raises(Exception, match="FileNotFound|does not exist|PATH_NOT_FOUND"):
-        query_ivf_index_eager(spark, SF, index_dir)
+        entry(spark, SF, index_dir).collect()

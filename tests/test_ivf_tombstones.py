@@ -26,6 +26,7 @@ from datafusion_loki_spark.operators.similarity import (
     compact_ivf_members,
     delete_ivf_index,
     query_ivf_index,
+    resolve_index_base,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -68,17 +69,18 @@ def test_delete_anti_join_then_compact_value_identical(spark, tmp_path):
     assert not ({c for (_q, _r, c, _c) in after_anti} & deleted)
     assert after_anti != before
 
-    n_before = spark.read.parquet(f"{index_dir}/members.parquet").count()
+    base = resolve_index_base(spark, index_dir)
+    n_before = spark.read.parquet(f"{base}/members.parquet").count()
     stats = compact_ivf_members(spark, index_dir)
     assert stats["rows_deleted"] == len(deleted)
     assert stats["rows"] == n_before - len(deleted)
     # all tombstones targeted this table: the set is fully consumed
-    assert not os.path.exists(f"{index_dir}/tombstones.parquet")
+    assert not os.path.exists(f"{base}/tombstones.parquet")
     # the folded index answers IDENTICALLY to the anti-join view
     assert _probe(spark, index_dir) == after_anti
     on_disk = {
         r.vec_id
-        for r in spark.read.parquet(f"{index_dir}/members.parquet")
+        for r in spark.read.parquet(f"{base}/members.parquet")
         .select("vec_id")
         .collect()
     }
@@ -99,25 +101,28 @@ def test_delete_is_idempotent_and_unknown_ids_are_ignored(spark, tmp_path):
         index_dir,
         spark.range(10).select((F.col("id") + 77_000_000).alias("vec_id")),
     )
-    tombs = spark.read.parquet(f"{index_dir}/tombstones.parquet")
+    tombs = spark.read.parquet(
+        f"{resolve_index_base(spark, index_dir)}/tombstones.parquet"
+    )
     assert tombs.count() == n_ids
 
 
 def test_delete_everything_empties_cells_and_directories(spark, tmp_path):
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
+    base = build_ivf_index(spark, SF, index_dir)
+    assert base == resolve_index_base(spark, index_dir)
     all_ids = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id")
     delete_ivf_index(spark, index_dir, all_ids)
     assert _probe(spark, index_dir) == []
     compact_ivf_members(spark, index_dir)
     # every cell emptied: the dynamic overwrite left nothing behind and
     # the emptied-cell sweep removed every cluster_id=* directory
-    members_dir = f"{index_dir}/members.parquet"
+    members_dir = f"{base}/members.parquet"
     leftover = [
         d for d in os.listdir(members_dir) if d.startswith("cluster_id=")
     ]
     assert leftover == [], leftover
-    assert not os.path.exists(f"{index_dir}/tombstones.parquet")
+    assert not os.path.exists(f"{base}/tombstones.parquet")
     # the DATA-LESS terminal state must stay readable (round-10 review:
     # a schema-less read crashed on inference): queries answer empty,
     # deletes no-op without creating a tombstone dir, a second
@@ -126,7 +131,7 @@ def test_delete_everything_empties_cells_and_directories(spark, tmp_path):
     delete_ivf_index(
         spark, index_dir, spark.createDataFrame([(1,)], "vec_id long")
     )
-    assert not os.path.exists(f"{index_dir}/tombstones.parquet")
+    assert not os.path.exists(f"{base}/tombstones.parquet")
     stats2 = compact_ivf_members(spark, index_dir)
     assert stats2["rows"] == 0 and stats2["rows_deleted"] == 0
 
@@ -136,14 +141,15 @@ def test_no_match_delete_on_fresh_index_writes_nothing(spark, tmp_path):
     # tombstones.parquet (just _SUCCESS) that every subsequent read of
     # the index tripped over
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
+    base = build_ivf_index(spark, SF, index_dir)
     before = _probe(spark, index_dir)
     delete_ivf_index(
         spark,
         index_dir,
         spark.range(5).select((F.col("id") + 88_000_000).alias("vec_id")),
     )
-    assert not os.path.exists(f"{index_dir}/tombstones.parquet")
+    assert resolve_index_base(spark, index_dir) == base
+    assert not os.path.exists(f"{base}/tombstones.parquet")
     assert _probe(spark, index_dir) == before
 
 
@@ -153,7 +159,7 @@ def test_ingest_compaction_consumes_only_its_own_tombstones(
     from datafusion_loki_spark.streaming import pipeline
 
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
+    base = build_ivf_index(spark, SF, index_dir)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     batch_fn = pipeline._ivf_ingest_batch_fn(index_dir)
     for i, bid in ((1, 0), (2, 1), (3, 2)):
@@ -200,7 +206,7 @@ def test_ingest_compaction_consumes_only_its_own_tombstones(
     # (its row still lives in members.parquet)
     tombs = {
         r.vec_id
-        for r in spark.read.parquet(f"{index_dir}/tombstones.parquet")
+        for r in spark.read.parquet(f"{base}/tombstones.parquet")
         .select("vec_id")
         .collect()
     }
@@ -208,7 +214,7 @@ def test_ingest_compaction_consumes_only_its_own_tombstones(
     # the batch compactor then consumes the survivor
     mstats = compact_ivf_members(spark, index_dir)
     assert mstats["rows_deleted"] == 1
-    assert not os.path.exists(f"{index_dir}/tombstones.parquet")
+    assert not os.path.exists(f"{base}/tombstones.parquet")
     assert {
         r.vec_id
         for r in pipeline.ivf_members(spark, index_dir)
@@ -230,7 +236,7 @@ def test_reingest_of_deleted_id_stays_visible_no_resurrection(
     from datafusion_loki_spark.streaming import pipeline
 
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
+    base = build_ivf_index(spark, SF, index_dir)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     batch_fn = pipeline._ivf_ingest_batch_fn(index_dir)
     victim = IVF_APPEND_OFFSET + 7
@@ -270,7 +276,7 @@ def test_reingest_of_deleted_id_stays_visible_no_resurrection(
     stats = pipeline.compact_ivf_ingest(spark, index_dir, keep_last=1)
     assert stats["folded_gens"] == 1
     assert stats["rows_compacted"] == 40 - 1
-    assert not os.path.exists(f"{index_dir}/tombstones.parquet")
+    assert not os.path.exists(f"{base}/tombstones.parquet")
     assert (
         pipeline.ivf_members(spark, index_dir)
         .where(F.col("vec_id") == victim)
@@ -288,6 +294,7 @@ def test_retrain_equals_fresh_build_on_live_set(spark, tmp_path):
     # set — the codebook refits, every row reassigns, nothing else
     from datafusion_loki_spark.operators.similarity import (
         _TRAIN_PRED_SPARK,
+        _index_root,
         _kmeans_fit,
         _members_projection,
         retrain_ivf_index,
@@ -319,13 +326,17 @@ def test_retrain_equals_fresh_build_on_live_set(spark, tmp_path):
         live.where(F.expr(_TRAIN_PRED_SPARK)),
         seeds_d=live.orderBy("vec_id").limit(KMEANS_K),
     )
+    base = f"{fresh_dir}/base-v0-fresh"
     (
         _members_projection(assigned)
         .write.mode("overwrite")
         .partitionBy("cluster_id")
-        .parquet(f"{fresh_dir}/members.parquet")
+        .parquet(f"{base}/members.parquet")
     )
-    cents.write.mode("overwrite").parquet(f"{fresh_dir}/centroids.parquet")
+    cents.write.mode("overwrite").parquet(f"{base}/centroids.parquet")
+    _index_root(spark, fresh_dir).commit(
+        0, {"version": 0, "base": "base-v0-fresh"}
+    )
     assert _probe(spark, index_dir) == _probe(spark, fresh_dir)
 
 
@@ -341,7 +352,7 @@ def test_retrain_consumes_tombstones_and_ingest_generations(
     from datafusion_loki_spark.streaming import pipeline
 
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
+    old_base = build_ivf_index(spark, SF, index_dir)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     batch_fn = pipeline._ivf_ingest_batch_fn(index_dir)
     batch_fn(
@@ -359,18 +370,12 @@ def test_retrain_consumes_tombstones_and_ingest_generations(
     stats = retrain_ivf_index(spark, index_dir)
     assert stats["rows_reindexed"] == n_live
 
-    # the superseded flat snapshot is GC'd wholesale — consumed
-    # tombstones/ingest AND the old base table (round-12: the retrain
-    # commits a fresh base-v dir through the index manifest)
-    from datafusion_loki_spark.operators.similarity import (
-        resolve_index_base,
-    )
-
-    for sub in ("tombstones.parquet", "members_ingest.parquet",
-                "members.parquet", "centroids.parquet"):
-        assert not os.path.exists(f"{index_dir}/{sub}")
+    # the superseded snapshot is GC'd wholesale — consumed
+    # tombstones/ingest AND the old base table (the retrain commits a
+    # fresh base-v dir through the index manifest)
+    assert not os.path.exists(old_base)
     base = resolve_index_base(spark, index_dir)
-    assert base != index_dir
+    assert base != old_base
     on_disk = spark.read.parquet(f"{base}/members.parquet")
     ids = {r.vec_id for r in on_disk.select("vec_id").collect()}
     assert victim not in ids
@@ -402,21 +407,18 @@ def test_retrain_rerun_after_crash_window_does_not_duplicate(
 ):
     # round-11's crash window (member overwrite committed, ingest delete
     # missing -> absorbed rows visible twice) is STRUCTURAL history under
-    # the round-12 snapshot protocol: the leftovers a crash-before-GC
-    # leaves sit in the superseded flat snapshot, which no reader and no
-    # re-run resolves. Simulate exactly that window — retrain committed,
-    # GC never ran for the old ingest dir — and pin that (a) reads never
-    # see the leftovers, (b) the re-run folds nothing twice.
+    # the snapshot protocol: the leftovers a crash-before-GC leaves sit in
+    # the superseded snapshot, which no reader and no re-run resolves.
+    # Simulate exactly that window — retrain committed, GC never ran for
+    # the old base dir — and pin that (a) reads never see the leftovers,
+    # (b) the re-run folds nothing twice.
     import shutil
 
-    from datafusion_loki_spark.operators.similarity import (
-        resolve_index_base,
-        retrain_ivf_index,
-    )
+    from datafusion_loki_spark.operators.similarity import retrain_ivf_index
     from datafusion_loki_spark.streaming import pipeline
 
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, SF, index_dir)
+    old_base = build_ivf_index(spark, SF, index_dir)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     batch_fn = pipeline._ivf_ingest_batch_fn(index_dir)
     batch_fn(
@@ -427,16 +429,13 @@ def test_retrain_rerun_after_crash_window_does_not_duplicate(
         0,
     )
     n_live = pipeline.ivf_members(spark, index_dir).count()
-    shutil.copytree(
-        f"{index_dir}/members_ingest.parquet", str(tmp_path / "snap")
-    )
+    shutil.copytree(old_base, str(tmp_path / "snap"))
     s1 = retrain_ivf_index(spark, index_dir)
     p1 = _probe(spark, index_dir)
-    # the crash-before-GC leftover: the old flat snapshot's ingest dir
-    # reappears at the root, exactly as if retrain died before sweeping
-    shutil.copytree(
-        str(tmp_path / "snap"), f"{index_dir}/members_ingest.parquet"
-    )
+    # the crash-before-GC leftover: the old snapshot's base dir, ingest
+    # generation included, reappears exactly as if retrain died before
+    # sweeping it
+    shutil.copytree(str(tmp_path / "snap"), old_base)
     # (a) readers resolve the committed snapshot; the leftover is invisible
     assert pipeline.ivf_members(spark, index_dir).count() == n_live
     assert _probe(spark, index_dir) == p1
@@ -467,10 +466,6 @@ def test_retrain_survives_deleting_all_low_seed_ids(spark, tmp_path):
     delete_ivf_index(spark, index_dir, low)
     stats = retrain_ivf_index(spark, index_dir)
     assert stats["k_cells"] == KMEANS_K
-    from datafusion_loki_spark.operators.similarity import (
-        resolve_index_base,
-    )
-
     members = spark.read.parquet(
         f"{resolve_index_base(spark, index_dir)}/members.parquet"
     )

@@ -1,11 +1,14 @@
 """Parquet directories the package writes itself are read back with the
 schema it wrote: the IVF codebook (``similarity.read_codebook``, used by
-the index query, the batch append and the streamed ingest) and the BPE
-stage (``text._bpe_stage``). Each such read starts one Spark job fewer
-than the read that infers the schema, and nothing else about it moves."""
+the index query, the batch append and the streamed ingest), the
+streamed-ingest table (``similarity.INGEST_SCHEMA``, read by the merged
+member view and the ingest compaction) and the BPE stage
+(``text._bpe_stage``). Each such read starts one Spark job fewer than
+the read that infers the schema, and nothing else about it moves."""
 
 from __future__ import annotations
 
+import os
 import shutil
 from unittest import mock
 
@@ -66,8 +69,9 @@ def _embeddings(spark):
 
 
 def test_codebook_read_starts_no_job_and_matches_the_inferred_read(spark, index_dir):
-    path = f"{index_dir}/centroids.parquet"
-    known, jobs_known = _job_ids(spark, lambda: sim.read_codebook(spark, index_dir))
+    base = sim.resolve_index_base(spark, index_dir)
+    path = f"{base}/centroids.parquet"
+    known, jobs_known = _job_ids(spark, lambda: sim.read_codebook(spark, base))
     inferred, jobs_inferred = _job_ids(spark, lambda: spark.read.parquet(path))
     assert jobs_known == [] and len(jobs_inferred) == 1
     assert known.schema == inferred.schema
@@ -75,19 +79,20 @@ def test_codebook_read_starts_no_job_and_matches_the_inferred_read(spark, index_
 
 
 def test_distributed_fit_writes_the_known_codebook_schema(spark, tmp_path, gates_off):
-    path = str(tmp_path / "idx")
     with gates_off() as refused:
-        sim.build_ivf_index(spark, SF, path)
+        base = sim.build_ivf_index(spark, SF, str(tmp_path / "idx"))
     assert refused
     assert (
-        sim.read_codebook(spark, path).schema
-        == spark.read.parquet(f"{path}/centroids.parquet").schema
+        sim.read_codebook(spark, base).schema
+        == spark.read.parquet(f"{base}/centroids.parquet").schema
     )
 
 
 def test_index_query_reads_the_codebook_without_inference(spark, index_dir):
+    base = sim.resolve_index_base(spark, index_dir)
+
     def call():
-        return sim._query_ivf_index_once(spark, SF, index_dir)
+        return sim._query_ivf_index_once(spark, SF, base)
 
     call().collect()  # warm the table-schema memo for both runs
     known, inferred = _one_job_fewer(spark, call, _codebook)
@@ -124,8 +129,74 @@ def test_index_writers_read_the_codebook_without_inference(
     with _inferring(_codebook):
         _, jobs_inferred = _job_ids(spark, write(inferred_dir))
     assert len(jobs_known) == len(jobs_inferred) - 1, (jobs_known, jobs_inferred)
-    assert _rows(spark.read.parquet(f"{known_dir}/{members}")) == _rows(
-        spark.read.parquet(f"{inferred_dir}/{members}")
+    assert _rows(_table(spark, known_dir, members)) == _rows(
+        _table(spark, inferred_dir, members)
+    )
+
+
+def _table(spark, index_dir, name):
+    return spark.read.parquet(f"{sim.resolve_index_base(spark, index_dir)}/{name}")
+
+
+def _ingest(s):
+    return s == sim.INGEST_SCHEMA
+
+
+@pytest.fixture(scope="module")
+def ingested_dir(spark, tmp_path_factory):
+    """An index with two streamed generations (gens 0 and 1)."""
+    path = str(tmp_path_factory.mktemp("ingest") / "idx")
+    sim.build_ivf_index(spark, SF, path)
+    emb = _embeddings(spark)
+    for gen in (0, 1):
+        pipeline._ivf_ingest_batch_fn(path)(
+            emb.select(
+                (F.col("vec_id") + sim.IVF_APPEND_OFFSET * (gen + 1)).alias("vec_id"),
+                "embedding",
+            ),
+            gen,
+        )
+    return path
+
+
+def test_ingest_view_reads_without_inference(spark, ingested_dir):
+    base = sim.resolve_index_base(spark, ingested_dir)
+    known, inferred = _one_job_fewer(
+        spark, lambda: pipeline.ivf_members_versioned(spark, base), _ingest
+    )
+    assert known[1] == inferred[1]
+    assert len(known[1]) == 3 * _embeddings(spark).count()
+
+
+def test_ingest_compaction_reads_without_inference(spark, ingested_dir, tmp_path):
+    known_dir, inferred_dir = str(tmp_path / "known"), str(tmp_path / "inferred")
+    shutil.copytree(ingested_dir, known_dir)
+    shutil.copytree(ingested_dir, inferred_dir)
+
+    def compact(d):
+        return lambda: pipeline.compact_ivf_ingest(spark, d, keep_last=1)
+
+    known, jobs_known = _job_ids(spark, compact(known_dir))
+    with _inferring(_ingest):
+        inferred, jobs_inferred = _job_ids(spark, compact(inferred_dir))
+    assert len(jobs_known) == len(jobs_inferred) - 1, (jobs_known, jobs_inferred)
+    assert known["folded_gens"] == inferred["folded_gens"] == 1
+    assert known["rows_compacted"] == inferred["rows_compacted"] > 0
+    assert _rows(pipeline.ivf_members(spark, known_dir)) == _rows(
+        pipeline.ivf_members(spark, inferred_dir)
+    )
+
+
+def test_dataless_ingest_table_reads_as_no_generation(spark, index_dir, tmp_path):
+    # an ingest table holding only a _SUCCESS marker (no generation dir)
+    # contributes no rows and raises nothing
+    path = str(tmp_path / "idx")
+    shutil.copytree(index_dir, path)
+    base = sim.resolve_index_base(spark, path)
+    os.makedirs(f"{base}/members_ingest.parquet")
+    open(f"{base}/members_ingest.parquet/_SUCCESS", "w").close()
+    assert _rows(pipeline.ivf_members(spark, path)) == _rows(
+        pipeline.ivf_members(spark, index_dir)
     )
 
 

@@ -1194,8 +1194,8 @@ def test_snapshot_reads_keep_partition_pruning(spark, sf_dir):
 
     m = re.search(r"PartitionFilters: \[cluster_id#\d+ IN \(", plan)
     assert m, plan
-    # the scan reads the COMMITTED snapshot, not the flat legacy layout
-    # (the plan's Location string is elided, so check the resolver)
+    # the scan reads a COMMITTED snapshot (the plan's Location string is
+    # elided, so check the resolver)
     from datafusion_loki_spark.operators.similarity import (
         resolve_index_base,
         scratch_index_dir,

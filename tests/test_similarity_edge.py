@@ -155,7 +155,7 @@ def test_compact_ivf_members_folds_append_files_value_identically(
 
     sf = "/root/testdata/sf0.001"
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, sf, index_dir)
+    base = build_ivf_index(spark, sf, index_dir)
     emb_d = (
         spark.read.parquet(f"{sf}/embeddings.parquet")
         .select("vec_id", F.expr(_TO_DOUBLE.format(a="embedding")).alias("e"))
@@ -176,12 +176,12 @@ def test_compact_ivf_members_folds_append_files_value_identically(
         )
 
     before = probe_rows()
-    n_members = spark.read.parquet(f"{index_dir}/members.parquet").count()
+    n_members = spark.read.parquet(f"{base}/members.parquet").count()
     stats = compact_ivf_members(spark, index_dir)
     assert stats["rows"] == n_members
     assert stats["files_after"] < stats["files_before"]
     assert (
-        spark.read.parquet(f"{index_dir}/members.parquet").count()
+        spark.read.parquet(f"{base}/members.parquet").count()
         == n_members
     )
     assert probe_rows() == before

@@ -1180,8 +1180,8 @@ def test_ivf_ingest_stream_appends_generations_exactly_once(spark, tmp_path):
     )
 
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, "/root/testdata/sf0.001", index_dir)
-    base_n = spark.read.parquet(f"{index_dir}/members.parquet").count()
+    base = build_ivf_index(spark, "/root/testdata/sf0.001", index_dir)
+    base_n = spark.read.parquet(f"{base}/members.parquet").count()
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     src = str(tmp_path / "ingest_src")
@@ -1215,7 +1215,7 @@ def test_ivf_ingest_stream_appends_generations_exactly_once(spark, tmp_path):
     gens = {
         r.gen
         for r in spark.read.parquet(
-            f"{index_dir}/members_ingest.parquet"
+            f"{base}/members_ingest.parquet"
         ).select("gen").distinct().collect()
     }
     assert len(gens) == 2
@@ -1231,7 +1231,7 @@ def test_ivf_ingest_stream_appends_generations_exactly_once(spark, tmp_path):
     assert merged.count() == base_n + 80
 
     # the merged view serves streamed members through the probe path
-    cents = spark.read.parquet(f"{index_dir}/centroids.parquet")
+    cents = spark.read.parquet(f"{base}/centroids.parquet")
     queries_d = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .select("vec_id", F.expr(_TO_DOUBLE.format(a="embedding")).alias("e"))
@@ -1261,8 +1261,8 @@ def test_ivf_ingest_compaction_preserves_results_and_drops_files(
     )
 
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, "/root/testdata/sf0.001", index_dir)
-    base_n = spark.read.parquet(f"{index_dir}/members.parquet").count()
+    base = build_ivf_index(spark, "/root/testdata/sf0.001", index_dir)
+    base_n = spark.read.parquet(f"{base}/members.parquet").count()
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     src = str(tmp_path / "ingest_src")
@@ -1288,7 +1288,7 @@ def test_ivf_ingest_compaction_preserves_results_and_drops_files(
     q = pipeline.ivf_ingest_stream(stream, index_dir, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
-    cents = spark.read.parquet(f"{index_dir}/centroids.parquet")
+    cents = spark.read.parquet(f"{base}/centroids.parquet")
     queries_d = (
         emb.select(
             "vec_id", F.expr(_TO_DOUBLE.format(a="embedding")).alias("e")
@@ -1312,7 +1312,7 @@ def test_ivf_ingest_compaction_preserves_results_and_drops_files(
     # duplicating the folded rows) but the manifest write did not. With
     # no manifest, the reader must see ONLY real generations — the
     # round-8 review's double-count window.
-    ingest_path = f"{index_dir}/members_ingest.parquet"
+    ingest_path = f"{base}/members_ingest.parquet"
     orphan = (
         spark.read.parquet(ingest_path)
         .where(F.col("gen") >= 0)
@@ -1347,13 +1347,13 @@ def test_ivf_ingest_compaction_preserves_results_and_drops_files(
     assert stats["active_gen"] in gens_after_first and stats["active_gen"] < 0
 
     # replay a FOLDED batch id: the re-created gen dir must be invisible
-    ingest = f"{index_dir}/members_ingest.parquet"
+    ingest = f"{base}/members_ingest.parquet"
     live_gens = {
         r.gen
         for r in spark.read.parquet(ingest).select("gen").distinct().collect()
         if r.gen >= 0
     }
-    manifest = pipeline._read_ingest_manifest(spark, index_dir)
+    manifest = pipeline._ingest_dir(spark, base).newest()
     folded_gen = manifest["folded_upto"]
     assert folded_gen not in live_gens
     replay = spark.read.parquet(src).where(
@@ -1392,7 +1392,7 @@ def test_ivf_ingest_compaction_preserves_results_and_drops_files(
     grown = probe_rows()
     stats3 = pipeline.compact_ivf_ingest(spark, index_dir, keep_last=1)
     assert stats3["folded_gens"] == 2  # gen 2 (old live) + gen 10
-    manifest2 = pipeline._read_ingest_manifest(spark, index_dir)
+    manifest2 = pipeline._ingest_dir(spark, base).newest()
     assert manifest2["version"] == 2 and manifest2["folded_upto"] == 10
     # unique-per-attempt gen id: encodes version 2, never a bare -2
     assert stats3["active_gen"] == manifest2["active_gen"]
@@ -1421,7 +1421,7 @@ def test_ivf_compaction_loser_never_touches_committed_data(spark, tmp_path):
     )
 
     index_dir = str(tmp_path / "idx")
-    build_ivf_index(spark, "/root/testdata/sf0.001", index_dir)
+    base = build_ivf_index(spark, "/root/testdata/sf0.001", index_dir)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     batch_fn = pipeline._ivf_ingest_batch_fn(index_dir)
     for i, bid in ((1, 0), (2, 1), (3, 2)):
@@ -1432,7 +1432,7 @@ def test_ivf_compaction_loser_never_touches_committed_data(spark, tmp_path):
             ),
             bid,
         )
-    ingest_path = f"{index_dir}/members_ingest.parquet"
+    ingest_path = f"{base}/members_ingest.parquet"
 
     # winner commits version 1
     stats = pipeline.compact_ivf_ingest(spark, index_dir, keep_last=1)
@@ -1461,15 +1461,13 @@ def test_ivf_compaction_loser_never_touches_committed_data(spark, tmp_path):
         loser_df, ingest_path, partition_by=["gen", "cluster_id"]
     )
     with pytest.raises(IOError, match="manifest commit failed"):
-        pipeline._write_ingest_manifest(
-            spark,
-            index_dir,
-            {"version": 1, "active_gen": loser_gen, "folded_upto": 1},
+        pipeline._ingest_dir(spark, base).commit(
+            1, {"version": 1, "active_gen": loser_gen, "folded_upto": 1}
         )
 
     # committed rows (winner's partition included) are untouched: the
     # reader view is identical and the winner's dir still exists
-    manifest = pipeline._read_ingest_manifest(spark, index_dir)
+    manifest = pipeline._ingest_dir(spark, base).newest()
     assert manifest["version"] == 1 and manifest["active_gen"] == winner_gen
     visible = sorted(
         (r.vec_id, r.gen)
@@ -1505,15 +1503,19 @@ def test_compact_tmp_sweep_is_age_gated(spark, tmp_path):
     # collected; a fresh temp — possibly a live attempt — survives.
     import os
 
+    from datafusion_loki_spark.functions.layout import _TMP_SWEEP_AGE_MS
+    from datafusion_loki_spark.operators.similarity import build_ivf_index
+
     index_dir = str(tmp_path / "idx")
-    ingest = f"{index_dir}/members_ingest.parquet"
+    base = build_ivf_index(spark, "/root/testdata/sf0.001", index_dir)
+    ingest = f"{base}/members_ingest.parquet"
     os.makedirs(ingest)
     old = os.path.join(ingest, ".manifest-v1.deadbeefdead.tmp")
     fresh = os.path.join(ingest, ".manifest-v1.cafef00dcafe.tmp")
     for p in (old, fresh):
         with open(p, "w") as f:
             f.write("{}")
-    old_s = time.time() - 2 * (pipeline._TMP_SWEEP_AGE_MS / 1000)
+    old_s = time.time() - 2 * (_TMP_SWEEP_AGE_MS / 1000)
     os.utime(old, (old_s, old_s))
 
     stats = pipeline.compact_ivf_ingest(spark, index_dir, keep_last=1)
